@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *     sbt "runMain graft.AbRunner <query> <reps> <label>[:k=v[;k=v...]] ..."
   *
   * e.g. runMain graft.AbRunner dedup_ngram_jaccard 5 \
-  *        fused legacy:graft.ngram.impl=legacy
+  *        direct:graft.dict.minfactor=1e9 dict:graft.dict.minfactor=1
   *
   * Optional artifact: SPARK_GRAFT_AB_OUT=<path.json>.
   */

@@ -218,9 +218,8 @@ object Text {
     * `(entropy, n_distinct, n_tokens)` over a text column, as the native
     * [[GraftEntropyStats]] expression (see
     * [[GraftTokenizer.entropyStats]] for the pinned semantics).
-    * Declarative twin: ta_entropy's legacy explode + two-level aggregate
-    * chain, reachable via `-Dgraft.entropy.impl=legacy`; TextSpec pins ≡
-    * at the query's round(4) contract. */
+    * Declarative twin: the inline explode + two-level aggregate chain in
+    * TextSpec, which pins ≡ at ta_entropy's round(4) contract. */
   def entropyStats(text: Column): Column =
     org.apache.spark.sql.graft.GraftSqlShim.column(
       GraftEntropyStats(org.apache.spark.sql.graft.GraftSqlShim.expression(text)))

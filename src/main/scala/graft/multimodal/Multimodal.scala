@@ -538,9 +538,11 @@ object Multimodal {
     * mm_dedup_cluster 2¹⁶ bound, here on MEASURED candidate edges (two
     * longs each, ≤ ~1 MB collected). Overridable via the
     * `graft.phash64.uf.cap` system property so specs can force the
-    * distributed fixpoint tier on small fixtures. */
+    * distributed fixpoint tier on small fixtures; a malformed value falls
+    * back to the default. */
   private def driverEdgeCap: Long =
-    sys.props.get("graft.phash64.uf.cap").map(_.toLong).getOrElse(1L << 16)
+    sys.props.get("graft.phash64.uf.cap")
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(1L << 16)
 
   /** Min-root union-find over an edge list: returns node → component
     * label where the label is the component's smallest member (merging

@@ -154,11 +154,6 @@ object Dedup {
     signaturesDeclarative(docs)
       .withColumn("sig", array((0 until P).map(p => col(s"mh$p")): _*))
 
-  /** Duplication gate for [[sigWithArrayDict]] — the dict-tier
-    * convention; overridable via `graft.sig.dict.minfactor`. */
-  private def sigDictMinFactor: Double =
-    sys.props.get("graft.sig.dict.minfactor").flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
-
   /** [[sigWithArray]] at DISTINCT-TEXT scale past the duplication gate
     * (r21, verdict #4): identical texts have identical shingle arrays,
     * hence identical signatures, so the 16-md5s-per-shingle pass — the
@@ -173,9 +168,7 @@ object Dedup {
     * is a perf decision, correct in both positions. */
   private[graft] def sigWithArrayDict(docs: DataFrame,
       gateFrame: DataFrame = null): DataFrame = {
-    val (nDocs, nDistinct) =
-      duplicationOf(if (gateFrame == null) docs else gateFrame)
-    if (nDistinct == 0 || nDocs < sigDictMinFactor * nDistinct) sigWithArray(docs)
+    if (!dictTier(if (gateFrame == null) docs else gateFrame)) sigWithArray(docs)
     else {
       // DISK_ONLY: full texts at up-to-half-corpus scale (r18 ADVICE rule)
       val groups = FrameCache.cached(docs.groupBy(col("text"))
@@ -225,12 +218,6 @@ object Dedup {
   private def sighOf(sig: Column): Column =
     array((0 until P).map(p => xxhash64(element_at(sig, p + 1))): _*)
 
-  /** Duplication gate for the minhash pair graph's distinct-text tier
-    * (the ngram/substring convention); overridable via
-    * `graft.minhash.dict.minfactor` so specs pin both paths. */
-  private def minhashDictMinFactor: Double =
-    sys.props.get("graft.minhash.dict.minfactor").flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
-
   /** Distinct-text decomposition of the near-dup pair graph, or None
     * below the measured duplication gate (r19 — the 1000× watch sweep's
     * first catch: the doc-level pair pipeline AND its fit-once artifact
@@ -252,8 +239,7 @@ object Dedup {
     * Returns (repPairs (id_a, id_b, est_jaccard) at distinct-text scale,
     * members (rep_id, doc_id) of signature-bearing groups). */
   private[graft] def minhashDict(docs: DataFrame): Option[(DataFrame, DataFrame)] = {
-    val (nDocs, nDistinct) = duplicationOf(docs)
-    if (nDistinct == 0 || nDocs < minhashDictMinFactor * nDistinct) None
+    if (!dictTier(docs)) None
     else {
       // DISK_ONLY: full texts at up-to-half-corpus scale (the r18 ADVICE
       // rule for the ngram/substring groups frames)
@@ -450,12 +436,6 @@ object Dedup {
   private def ngramJaccard(s: SparkSession, d: String): DataFrame =
     ngramJaccardCore(T.documents(s, d))
 
-  /** Duplication gate for [[ngramJaccardCore]]'s dictionary tier — the
-    * substring convention; overridable via
-    * `graft.ngram.dict.minfactor`. */
-  private def ngramDictMinFactor: Double =
-    sys.props.get("graft.ngram.dict.minfactor").flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
-
   /** Memoized (docs, distinct texts) counts for the dictionary gates — a
     * pure function of the input frame and its backing files
     * ([[FrameCache.ScalarMemo]]: stable plan key, file snapshot as a
@@ -469,6 +449,18 @@ object Dedup {
       val r = docs.agg(count(lit(1)), count_distinct(xxhash64(col("text")))).head
       (r.getLong(0), r.getLong(1))
     }
+
+  /** The one duplication gate every distinct-text dictionary tier shares:
+    * true when `frame` holds at least `graft.dict.minfactor` (default 2.0)
+    * docs per distinct text. The property exists so specs can force either
+    * tier on small fixtures; a malformed value falls back to 2.0 instead
+    * of throwing during query construction. */
+  private[graft] def dictTier(frame: DataFrame): Boolean = {
+    val minFactor = sys.props.get("graft.dict.minfactor")
+      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
+    val (nDocs, nDistinct) = duplicationOf(frame)
+    nDistinct > 0 && nDocs >= minFactor * nDistinct
+  }
 
   /** Core of [[ngramJaccard]] over any (doc_id, text) frame — separate so
     * DedupSpec can pin the df-cap semantics on a synthetic hot-shingle
@@ -491,8 +483,7 @@ object Dedup {
     * distinct-text tier keeps shingle volume at 1× regardless of the
     * duplication factor. */
   private[graft] def ngramJaccardCore(docs: DataFrame): DataFrame = {
-    val (nDocs, nDistinct) = duplicationOf(docs)
-    if (nDistinct == 0 || nDocs < ngramDictMinFactor * nDistinct) {
+    if (!dictTier(docs)) {
       // direct tier: the pre-dictionary plan byte-identical — no weight
       // column in the distinct/cache/df-agg (threading a constant m
       // through them measured +0.35 s on the 1× receipt)
@@ -560,11 +551,8 @@ object Dedup {
     * once per shared surviving shingle, a < b from the sorted list).
     * The corpus-sized (doc_id, sh) cache disappears: only the postings
     * frame (one row per surviving shingle, ≤ cap ids each) persists.
-    * Legacy plan reachable via `-Dgraft.ngram.impl=legacy`; DedupSpec
-    * pins fused ≡ legacy including the df-cap boundary. */
+    * DedupSpec pins the df-cap boundary and direct ≡ dictionary tier. */
   private def ngramPairs(docs: DataFrame, weighted: Boolean): (DataFrame, DataFrame) = {
-    if (sys.props.get("graft.ngram.impl").contains("legacy"))
-      return ngramPairsLegacy(docs, weighted)
     val mcol = if (weighted) col("m") else lit(1L)
     val sh0 = docs
       .select(col("doc_id"), mcol.as("m"),
@@ -591,75 +579,6 @@ object Dedup {
         explode(slice(col("ds"), col("i") + lit(2),
           size(col("ds")) - col("i") - lit(1))).as("id_b"))
       .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-    val pairs = common
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("n_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("n_b")), "id_b")
-      .withColumn("jaccard",
-        round(col("common").cast("double") / (col("n_a") + col("n_b") - col("common")), 4))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("id_a"), col("id_b"), col("common"), col("jaccard"))
-    (pairs, sizes)
-  }
-
-  /** Pre-r21 distinct + hot-list anti-join + shingle self-join plan,
-    * kept A/B-reachable (`-Dgraft.ngram.impl=legacy`). */
-  private def ngramPairsLegacy(docs: DataFrame, weighted: Boolean): (DataFrame, DataFrame) = {
-    // df via partial-agg groupBy + anti-join against the (small by
-    // construction: every member has >NgramDfCap rows) hot-shingle list,
-    // not count-over-Window(sh): the window routes every row of a hot
-    // shingle into ONE un-splittable task BEFORE the cap filter can drop
-    // it — the exact adversarial-skew straggler the cap exists to
-    // prevent. The groupBy collapses hot keys map-side; the anti-join
-    // broadcasts under AQE (and is skew-splittable if the hot list ever
-    // outgrows broadcast). One materialization: sh0 persists and feeds
-    // the df agg plus every anti-join probe (the hot-list exchange is
-    // reused across the final plan's three sh subtrees; the broadcast
-    // anti-join itself is a map-side pass over the cache). Post-filter,
-    // every shingle entering the self-join has df <= NgramDfCap, so that
-    // shuffle is skew-free.
-    // Shingle identity travels as a codegen'd 8-byte xxhash64 from the
-    // explode on: the distinct, the df agg, the anti-join and the
-    // self-join all key on longs instead of ~25-char shingle strings
-    // (4x less shuffle payload, long compares). The hash is internal
-    // only — output columns carry counts and jaccard, never the shingle
-    // — so the oracle groups the raw shingle text and agrees as long as
-    // the hash is collision-free on the data (~n²/2⁶⁵, the
-    // substringCoverage convention; a 100 TB run would add a confirm
-    // pass per colliding bucket).
-    // DISK_ONLY: this frame is CORPUS-sized, and a default
-    // MEMORY_AND_DISK cache permanently occupies the protected half of
-    // the unified pool — at the 1000x sweep that starved the hot-list
-    // hash aggregate of execution memory (UNABLE_TO_ACQUIRE_MEMORY).
-    // Disk blocks ride the OS page cache at small scale and never
-    // compete with shuffles/aggregates at large scale.
-    // in the weighted (dictionary) tier, m rides the shingle rows
-    // (functionally dependent on doc_id, so the distinct is unchanged)
-    // and weighted df = sum(m) — the corpus-wide doc frequency measured
-    // at rep level
-    val keyCols =
-      if (weighted) Seq(col("doc_id"), col("m")) else Seq(col("doc_id"))
-    val sh0 = FrameCache.cached(docs
-      .select(keyCols :+ explode(Text.shingles3(Text.tokens(col("text")))).as("s"): _*)
-      .select(keyCols :+ xxhash64(col("s")).as("sh"): _*)
-      .distinct(),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // eager count = true stats for the anti-join (see exactCore): the
-    // optimizer cannot see through the df cap filter
-    val dfAgg = if (weighted) sum(col("m")) else count(lit(1))
-    val hot = FrameCache.eager(sh0.groupBy(col("sh")).agg(dfAgg.as("df"))
-      .filter(col("df") > NgramDfCap)
-      .select(col("sh")))
-    val sh = FrameCache.cached(sh0.join(hot, Seq("sh"), "left_anti")
-      .select(col("doc_id"), col("sh")),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY, eager = true)
-    // the eager count materializes once: three consumers below would otherwise
-    // each replay the anti-join over the corpus-sized sh0 cache (3x the
-    // disk reads at high duplication, where sh itself is near-empty)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val common = sh.as("a").join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("common"))
     val pairs = common
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("n_a")), "id_a")
@@ -1459,12 +1378,11 @@ object Dedup {
     * sigh compute), above it the compact-hash phase keeps the md5-string
     * arrays out of the candidate-scale shuffle. Overridable via the
     * `graft.lsh.prefilter.minreps` system property (specs pin both plans
-    * output-identical on small fixtures) or the
-    * `GRAFT_LSH_PREFILTER_MINREPS` env var (same-box A/B at scale). */
+    * output-identical on small fixtures); a malformed value falls back
+    * to the default. */
   private def prefilterMinReps: Long =
     sys.props.get("graft.lsh.prefilter.minreps")
-      .orElse(sys.env.get("GRAFT_LSH_PREFILTER_MINREPS"))
-      .map(_.toLong).getOrElse(1L << 16)
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(1L << 16)
 
   /** Distinct-signature count of a persisted index — a parquet
     * metadata-only count, memoized per index tree (the probe runs once
@@ -1778,14 +1696,6 @@ object Dedup {
   private def substringDedup(s: SparkSession, d: String): DataFrame =
     substringCoverage(T.documents(s, d))
 
-  /** Duplication-factor gate for [[substringCoverage]]'s dictionary
-    * tier: when docs ≥ factor × distinct texts, anchor work runs at
-    * distinct-TEXT scale with multiplicity weights. Overridable via the
-    * `graft.substring.dict.minfactor` system property so specs can force
-    * either path on small fixtures. */
-  private def substringDictMinFactor: Double =
-    sys.props.get("graft.substring.dict.minfactor").flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
-
   /** Core of [[substringDedup]] over any (doc_id, text) frame — separate
     * so specs can pin the interval-union semantics on synthetic corpora.
     *
@@ -1815,8 +1725,7 @@ object Dedup {
 
   private[graft] def substringCoverage(docs: DataFrame): DataFrame = {
     val base = substringBase(docs)
-    val (nDocs, nDistinct) = duplicationOf(base)
-    if (nDistinct == 0 || nDocs < substringDictMinFactor * nDistinct)
+    if (!dictTier(base))
       coverageStats(base.withColumn("m", lit(1L))).orderBy(col("doc_id"))
     else {
       // dictionary tier: exact identity grouping on the text itself
@@ -1870,23 +1779,13 @@ object Dedup {
     // disk and reading it back. Same-session A/B at sf0.1
     // (ab_dedup_substring_r21.json): nocache min 2.51 / median 4.65 s vs
     // DISK_ONLY-cached min 4.37 / median 8.25 s (bursty-I/O box — the
-    // cache pays disk twice, the recompute never touches it). The cached
-    // shape stays reachable via -Dgraft.substring.anchors=cached.
-    val anchors0 = base
+    // cache pays disk twice, the recompute never touches it).
+    val anchors = base
       .select(col("doc_id"), col("m"),
         posexplode(graft.functions.VectorExprs.graft_span_hashes(
           col("text"), SpanL)).as(Seq("pos", "h")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("h"),
         col("m"))
-    val anchors =
-      if (sys.props.get("graft.substring.anchors").contains("cached"))
-        FrameCache.cached(anchors0,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      else anchors0
-    // two consumers (dup agg + semi-join probe): one materialization of
-    // the per-position explode+hash pass — the dup-agg stage fills the
-    // cache, the broadcast-dependent probe stage then reads it (stages
-    // of one query run in dependency order, so no double-compute race)
     // duplicated-span detection via partial-agg groupBy + semi-join, not
     // count-over-Window(h). The window version (r9-r15) was one shuffle
     // to the semi-join's two, but it routes every anchor of a hot span
@@ -2024,8 +1923,7 @@ object Dedup {
     // extra member-count agg + two rep-keyed joins cost ~+0.7 s steady
     // against a link list that is already output-sized — below the gate
     // the expand-then-aggregate plan is byte-identical to r19.
-    val (nDocs, nDistinct) = duplicationOf(docs)
-    if (nDistinct == 0 || nDocs < fuzzyContamDictMinFactor * nDistinct)
+    if (!dictTier(docs))
       contaminationReport(
         probeLshIndex(s, testSig, idx)
           .select(col("batch_id").as("test_id"), col("corpus_id").as("train_id"),
@@ -2046,12 +1944,6 @@ object Dedup {
       contaminationFinish(best, testSig.select(col("doc_id")))
     }
   }
-
-  /** Duplication gate for [[fuzzyContamination]]'s rep-level aggregation
-    * — the dict-tier convention; overridable via
-    * `graft.fuzzycontam.dict.minfactor` so specs pin both paths. */
-  private def fuzzyContamDictMinFactor: Double =
-    sys.props.get("graft.fuzzycontam.dict.minfactor").flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
 
   /** Core of [[fuzzyContamination]] over any (doc_id, text) frame with an
     * explicit split point — separate so DedupSpec can pin the semantics

@@ -1615,10 +1615,7 @@ object Relational {
     * VALUE HISTOGRAM since r21 (see [[chunksReadHistogram]] and the
     * inline note below — the sort values are bijections of (px, sy), so
     * the contract row is a pure function of per-value counts and no
-    * corpus-scale sort is needed); the legacy distributed-rank form
-    * ([[withGlobalRank]] + [[ntileFromRank]] per layout — itself the r9
-    * fix for the single-task global `ntile` Window) stays reachable via
-    * -Dgraft.zorder.impl=legacy. Each layout's stats pipeline is
+    * corpus-scale sort is needed). Each layout's stats pipeline is
     * independent, so neither needs the other's chunk column and no
     * row-level join reunites them. At 100 TB the same accounting runs
     * per-partition over file-level min/max stats. */
@@ -1643,22 +1640,11 @@ object Relational {
     // chunk boundaries — identical chunks, identical min/max, identical
     // read counts, zero corpus-scale sorts. 1000×: 392.9 s / 125.5 GB
     // spill (rank form, scale_sweep_r21_1000x_watch.json) → the
-    // histogram form's one partial-agg exchange. Legacy via
-    // -Dgraft.zorder.impl=legacy; GlobalRankSpec pins dict ≡ legacy.
-    def layoutChunksRead(sortCol: String, chunk: String): DataFrame =
-      if (sys.props.get("graft.zorder.impl").contains("legacy"))
-        withGlobalRank(s,
-          base.select(col("sy"), col(sortCol), col("l_orderkey"), col("l_linenumber")),
-          Seq(col(sortCol), col("l_orderkey"), col("l_linenumber")))
-          .withColumn(chunk, ntileFromRank(16))
-          .groupBy(col(chunk))
-          .agg(min(col("sy")).as("mn"), max(col("sy")).as("mx"))
-          .agg(sum(when(col("mn") <= 20 && col("mx") >= 10, 1L).otherwise(0L))
-            .as(s"${chunk}_read"))
-      else chunksReadHistogram(s, base, sortCol, chunk)
-    val z = layoutChunksRead("zval", "zchunk")
+    // histogram form's one partial-agg exchange. GlobalRankSpec pins it
+    // against Spark's own `ntile` Window on a small fixture.
+    val z = chunksReadHistogram(s, base, "zval", "zchunk")
       .withColumnRenamed("zchunk_read", "z_chunks_read")
-    val l = layoutChunksRead("lin", "lchunk")
+    val l = chunksReadHistogram(s, base, "lin", "lchunk")
       .withColumnRenamed("lchunk_read", "lin_chunks_read")
     val n = base.agg(count(lit(1)).as("n_rows"))
     n.crossJoin(z).crossJoin(l) // three 1-row aggregates

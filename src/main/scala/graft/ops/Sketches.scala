@@ -298,37 +298,15 @@ object Sketches {
     // one aggregate pass computes (n_new, n_false_pos) together — the two
     // sequential count jobs each replayed the distinct + anti-join of the
     // never-inserted set (r20; the frame has exactly one consumer now, so
-    // the persist is gone too). Legacy two-pass shape reachable for the
-    // same-JVM A/B via -Dgraft.bloom.contract=legacy.
+    // the persist is gone too).
     val fresh = sh.filter(col("doc_id") >= half).select(col("sh")).distinct()
       .join(inserted, Seq("sh"), "left_anti")
     // r21 (guide §2.6, the annContract pattern): after the filter is
     // built, the false-negative probe and the never-inserted aggregate
     // are INDEPENDENT job chains over already-cached frames — submit
     // them from two driver threads so the second fills the first's
-    // stage tail instead of waiting for it. Sequential path (same fused
-    // aggregate) via -Dgraft.bloom.overlap=0 for the A/B.
-    def missedJob() = inserted.filter(!seen).count()
-    def freshJob() =
-      if (sys.props.get("graft.bloom.contract").contains("legacy")) {
-        val f = fresh.persist(); val n = f.count(); val fp = f.filter(seen).count()
-        f.unpersist(); (n, fp)
-      } else {
-        val r = fresh.agg(count(lit(1)), count(when(seen, lit(1)))).head
-        (r.getLong(0), r.getLong(1))
-      }
-    val (nMissed, (nNew, nFalsePos)) =
-      if (sys.props.get("graft.bloom.overlap").contains("0") ||
-          sys.props.get("graft.bloom.contract").contains("legacy")) {
-        (missedJob(), freshJob())
-      } else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val mF = Future(missedJob())
-        val fF = Future(freshJob())
-        (Await.result(mF, Duration.Inf), Await.result(fF, Duration.Inf))
-      }
+    // stage tail instead of waiting for it.
+    val (nMissed, (nNew, nFalsePos)) = bloomProbes(inserted, fresh, seen)
     val fpOk = nNew == 0 || nFalsePos.toDouble / nNew <= 0.05
     // every dependent count is materialized above and the result is a
     // driver-local literal — drop the cached frames now (same hygiene as
@@ -675,32 +653,10 @@ object Sketches {
     // same RefBloom.mightContain bits, no UDF boxing (r10 verdict #3)
     def seen = graft.functions.SketchProbes.refBloomMightContain(s, bloom, col("sh"))
     // one fused (count, false-positive count) pass over the never-inserted
-    // set — same rewrite as bloomContract; A/B via -Dgraft.bloom.contract.
-    // r21: the probe and the aggregate overlap from two driver threads
-    // (guide §2.6 — see bloomContract); -Dgraft.bloom.overlap=0 = sequential.
+    // set, overlapped with the false-negative probe — see bloomContract.
     val fresh = sh.filter(col("doc_id") >= half).select(col("sh")).distinct()
       .join(inserted, Seq("sh"), "left_anti")
-    def missedJob() = inserted.filter(!seen).count()
-    def freshJob() =
-      if (sys.props.get("graft.bloom.contract").contains("legacy")) {
-        val f = fresh.persist(); val n = f.count(); val fp = f.filter(seen).count()
-        f.unpersist(); (n, fp)
-      } else {
-        val r = fresh.agg(count(lit(1)), count(when(seen, lit(1)))).head
-        (r.getLong(0), r.getLong(1))
-      }
-    val (nMissed, (nNew, nFalsePos)) =
-      if (sys.props.get("graft.bloom.overlap").contains("0") ||
-          sys.props.get("graft.bloom.contract").contains("legacy")) {
-        (missedJob(), freshJob())
-      } else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val mF = Future(missedJob())
-        val fF = Future(freshJob())
-        (Await.result(mF, Duration.Inf), Await.result(fF, Duration.Inf))
-      }
+    val (nMissed, (nNew, nFalsePos)) = bloomProbes(inserted, fresh, seen)
     val fpOk = nNew == 0 || nFalsePos.toDouble / nNew <= 0.05
     // every dependent count is materialized above and the returned frame is
     // a driver-local literal — unpersist here so direct callers (outside the
@@ -710,6 +666,16 @@ object Sketches {
     Seq((nIns, nMissed == 0L, nNew, fpOk))
       .toDF("n_inserted", "zero_false_negatives", "n_new", "fp_rate_ok")
   }
+
+  /** The two independent probe chains of both Bloom contracts, overlapped:
+    * (false negatives among `inserted`, (|fresh|, false positives among
+    * `fresh`)) — the latter as one fused aggregate pass. */
+  private def bloomProbes(inserted: DataFrame, fresh: DataFrame,
+      seen: => Column): (Long, (Long, Long)) =
+    Overlap.both(inserted.filter(!seen).count(), {
+      val r = fresh.agg(count(lit(1)), count(when(seen, lit(1)))).head
+      (r.getLong(0), r.getLong(1))
+    })
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("sketch_cms_token_freq", cmsTokenFreq, Some(cmsTokenFreqSql)),

@@ -79,26 +79,14 @@ object TextAnalysis {
     // Values are IDENTICAL by construction: n_tok = size(split(text, " "))
     // equals the fused n_raw (lowercasing never changes the space count —
     // both are #spaces + 1), len_chars/stop_hits/punct_chars are the
-    // pinned twins (TokenizerExprSpec). `-Dgraft.quality.signals=legacy`
-    // forces the pre-r19 per-signal plan for the same-box A/B; a spec
-    // pins both paths output-identical.
-    val sig =
-      if (sys.props.get("graft.quality.signals").contains("legacy"))
-        docs
-          .withColumn("len_chars", length(col("text")))
-          .withColumn("n_tok", size(split(col("text"), " ")))
-          .withColumn("stop_hits", hits(rawToks(col("text")), Text.STOPWORDS))
-          .withColumn("punct_chars",
-            length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", "")))
-      else
-        docs
-          .withColumn("qs", Text.qualitySignals(col("text")))
-          .withColumn("len_chars", element_at(col("qs"), 4))
-          .withColumn("n_tok", element_at(col("qs"), 1))
-          .withColumn("stop_hits", element_at(col("qs"), 2))
-          .withColumn("punct_chars", element_at(col("qs"), 3))
-          .drop("qs")
-    sig
+    // pinned twins (TokenizerExprSpec).
+    docs
+      .withColumn("qs", Text.qualitySignals(col("text")))
+      .withColumn("len_chars", element_at(col("qs"), 4))
+      .withColumn("n_tok", element_at(col("qs"), 1))
+      .withColumn("stop_hits", element_at(col("qs"), 2))
+      .withColumn("punct_chars", element_at(col("qs"), 3))
+      .drop("qs")
       .withColumn("stop_ratio", round(col("stop_hits").cast("double") / col("n_tok"), 4))
       .withColumn("punct_ratio", round(col("punct_chars").cast("double") / col("len_chars"), 4))
       .withColumn("quality",
@@ -458,12 +446,7 @@ object TextAnalysis {
     // at 1.20 s steady-min vs 0.84 s direct at sf0.1 — the extra
     // aggregate + cache is pure overhead when nothing collapses (the
     // dedup_contamination r20 lesson, applied before shipping this time).
-    val (nDocsPmi, nDistinctPmi) = Dedup.duplicationOf(T.documents(s, d))
-    // Try-parse (r20 ADVICE): a malformed property value falls back to the
-    // family-convention 2.0 instead of throwing during query construction
-    val minFactor = sys.props.get("graft.pmi.dict.minfactor")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
-    if (nDistinctPmi == 0 || nDocsPmi < minFactor * nDistinctPmi) {
+    if (!Dedup.dictTier(T.documents(s, d))) {
       // direct tier: the pre-r20 plan, byte-identical
       val big = bigrams.persist()
       val n = big.count().toDouble
@@ -486,7 +469,7 @@ object TextAnalysis {
   }
 
   /** Shared join/score/rank tail of [[bigramPmi]] — one definition so the
-    * legacy and fused front halves cannot drift. */
+    * direct and dictionary front halves cannot drift. */
   private def bigramPmiTail(bi: DataFrame, uni: DataFrame, n: Double): DataFrame = {
     bi.join(uni.select(col("w").as("w1"), col("wc").as("c1")), "w1")
       .join(uni.select(col("w").as("w2"), col("wc").as("c2")), "w2")
@@ -537,22 +520,18 @@ object TextAnalysis {
     // tokenize → explode → partial-agg subtree runs ONCE instead of twice,
     // and the df branch shuffles (doc,term) partial-agg rows instead of
     // the raw token stream (r20, guide §2.3/§2.4; plan diff in
-    // plans/r20/ta_tfidf_{before,after}.txt; fused ≡ legacy pinned in
-    // PlanShapeSpec, legacy via -Dgraft.tfidf.impl=legacy). Counts are
-    // exact integers, so every tfidf value is bit-identical.
-    val df =
-      if (sys.props.get("graft.tfidf.impl").contains("legacy"))
-        tok.select(col("doc_id"), col("term")).distinct()
-          .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      // count(when(tf >= 1, 1)), not count(1): tf ≥ 1 for every group by
-      // construction (count over a non-empty group), so the value is
-      // identical — but the predicate is opaque to NullPropagation/
-      // ColumnPruning, which otherwise rewrite count(tf) → count(1), drop
-      // tf from this branch's copy of the (doc_id, term) aggregate, and
-      // leave the two exchanges canonically different (no ReuseExchange —
-      // observed: the pruned branch plans as a bare distinct)
-      else tf.groupBy(col("term"))
-        .agg(count(when(col("tf") >= 1, lit(1))).as("df"))
+    // plans/r20/ta_tfidf_{before,after}.txt; PlanShapeSpec pins the
+    // reuse). Counts are exact integers, so every
+    // tfidf value is bit-identical.
+    // count(when(tf >= 1, 1)), not count(1): tf ≥ 1 for every group by
+    // construction (count over a non-empty group), so the value is
+    // identical — but the predicate is opaque to NullPropagation/
+    // ColumnPruning, which otherwise rewrite count(tf) → count(1), drop
+    // tf from this branch's copy of the (doc_id, term) aggregate, and
+    // leave the two exchanges canonically different (no ReuseExchange —
+    // observed: the pruned branch plans as a bare distinct)
+    val df = tf.groupBy(col("term"))
+      .agg(count(when(col("tf") >= 1, lit(1))).as("df"))
     val scored = tf.join(df, "term")
       .withColumn("tfidf", round(col("tf") * log(lit(nDocs) / col("df")), 4))
     val w = Window.partitionBy(col("doc_id"))
@@ -648,8 +627,7 @@ object TextAnalysis {
     * the session's noise — the win is the halved corpus tokenize/
     * explode/shuffle volume, which scales with the corpus). Counts are
     * exact integers in both shapes, so the summed edge weights are
-    * bit-identical. Legacy shape reachable via
-    * -Dgraft.pagerank.edges=legacy (spec pins fused ≡ legacy). */
+    * bit-identical. */
   private[graft] def pagerankEdges(s: SparkSession, d: String): DataFrame = {
     val toks = T.documents(s, d)
       .select(graft.functions.Text.tokens(col("text")).as("t"))
@@ -658,11 +636,7 @@ object TextAnalysis {
       .filter(col("i") < size(col("t")) - 1)
       .select(col("w1"), element_at(col("t"), col("i") + 2).as("w2"))
     val directed = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("w"))
-    val swapped =
-      if (sys.props.get("graft.pagerank.edges").contains("legacy"))
-        bigrams.groupBy(col("w2").as("w1"), col("w1").as("w2"))
-          .agg(count(lit(1)).as("w"))
-      else directed.select(col("w2").as("w1"), col("w1").as("w2"), col("w"))
+    val swapped = directed.select(col("w2").as("w1"), col("w1").as("w2"), col("w"))
     directed.union(swapped)
       .groupBy(col("w1"), col("w2")).agg(sum(col("w")).as("w"))
   }
@@ -686,10 +660,7 @@ object TextAnalysis {
     // frame once (the count doubles as the materialization barrier and
     // the planner's true-stats source); the two broadcast builds then
     // read |vocab| cached rows instead of re-aggregating |edges| rows.
-    // Legacy shape via -Dgraft.pagerank.outpersist=off for the A/B.
-    val out0 = edges.groupBy(col("w1")).agg(sum(col("w")).as("out_w"))
-    val out = if (sys.props.get("graft.pagerank.outpersist").contains("off")) out0
-      else out0.persist()
+    val out = edges.groupBy(col("w1")).agg(sum(col("w")).as("out_w")).persist()
     val nNodes = out.count()
     val n = nNodes.toDouble
     // the MEASURED node count (already materialized for the 1/n teleport
@@ -784,9 +755,7 @@ object TextAnalysis {
 
   /** Per-document token Shannon entropy — the information-density signal
     * quality filters use to drop boilerplate/keyboard-mash documents (low
-    * entropy = repetitive, high = diverse). Two partial-agg shuffles on
-    * (doc_id, tok) then doc_id; entropy itself is order-safe at round(4)
-    * (terms are magnitude ~1e0 against double's 1e-16 relative error).
+    * entropy = repetitive, high = diverse).
     *
     * Fused native pass (r20, verdict #1): entropy, n_distinct and
     * n_tokens are pure per-row functions of the text, yet the legacy
@@ -801,31 +770,16 @@ object TextAnalysis {
     * query is map-only up to its presentation sort (1 Exchange), via
     * -Σ (c/n)·log2(c/n) = log2(n) - (Σ c·log2 c)/n (exact in the
     * reals; FP rearrangement ~1e-13 against a round(4) contract,
-    * oracle-verified at every sf). Legacy plan reachable via
-    * `-Dgraft.entropy.impl=legacy`; TextSpec pins both paths
-    * output-identical. */
+    * oracle-verified at every sf). TextSpec pins the kernel against an
+    * inline explode/groupBy twin. */
   private def entropy(s: SparkSession, d: String): DataFrame =
-    if (sys.props.get("graft.entropy.impl").contains("legacy")) {
-      val toks = T.documents(s, d)
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-      val cnts = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
-      val tot = cnts.groupBy(col("doc_id"))
-        .agg(sum(col("cnt")).as("n"), count(lit(1)).as("n_distinct"))
-      cnts.join(tot, "doc_id")
-        .groupBy(col("doc_id"))
-        .agg(
-          round(-sum((col("cnt") / col("n")) * log2(col("cnt") / col("n"))), 4).as("entropy"),
-          max(col("n_distinct")).as("n_distinct"),
-          max(col("n")).as("n_tokens"))
-        .orderBy(col("doc_id"))
-    } else
-      T.documents(s, d)
-        .select(col("doc_id"), Text.entropyStats(col("text")).as("st"))
-        .select(col("doc_id"),
-          round(col("st.entropy"), 4).as("entropy"),
-          col("st.n_distinct").as("n_distinct"),
-          col("st.n_tokens").as("n_tokens"))
-        .orderBy(col("doc_id"))
+    T.documents(s, d)
+      .select(col("doc_id"), Text.entropyStats(col("text")).as("st"))
+      .select(col("doc_id"),
+        round(col("st.entropy"), 4).as("entropy"),
+        col("st.n_distinct").as("n_distinct"),
+        col("st.n_tokens").as("n_tokens"))
+      .orderBy(col("doc_id"))
 
   private val entropySql =
     """WITH toks AS (
@@ -1001,13 +955,6 @@ object TextAnalysis {
   private def contamination(s: SparkSession, d: String): DataFrame =
     contaminationCore(T.documents(s, d))
 
-  /** Duplication gate for [[contaminationCore]]'s dictionary tier — the
-    * dedup convention (same measured gate and memoized count);
-    * overridable via `graft.contamination.dict.minfactor` so specs pin
-    * both paths. */
-  private def contaminationDictMinFactor: Double =
-    sys.props.get("graft.contamination.dict.minfactor").flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
-
   /** Core of [[contamination]] over any (doc_id, text) frame — separate
     * so TextSpec can pin the dict ≡ direct equivalence on synthetic
     * corpora.
@@ -1025,10 +972,9 @@ object TextAnalysis {
     * 53.9 GiB spill absorbed). Below the gate the direct plan is
     * byte-identical to r19 (no weight/group column anywhere). */
   private[graft] def contaminationCore(docs: DataFrame): DataFrame = {
-    val (nDocs, nDistinct) = Dedup.duplicationOf(docs)
-    val half = nDocs / 2
+    val half = Dedup.duplicationOf(docs)._1 / 2
     val report =
-      if (nDistinct == 0 || nDocs < contaminationDictMinFactor * nDistinct) {
+      if (!Dedup.dictTier(docs)) {
         // direct tier. DISK_ONLY (r19, caught by the first 1000× watch
         // sweep): one row per distinct (doc, 5-gram) is a CORPUS-scale
         // frame, and a default MEMORY_AND_DISK persist holds the storage
@@ -1524,29 +1470,13 @@ object TextAnalysis {
     * convention). Oracle twin unchanged — the signals' VALUES are
     * pinned ≡ the declarative chains in TokenizerExprSpec. */
   private def curationPipeline(s: SparkSession, d: String): DataFrame = {
-    // `-Dgraft.curation.signals=legacy` forces the pre-r19 per-signal
-    // plan — kept for the same-box A/B artifact and the spec that pins
-    // both paths output-identical; never set in production
-    val legacy = sys.props.get("graft.curation.signals").contains("legacy")
-    val withSignals =
-      if (legacy)
-        T.documents(s, d)
-          .withColumn("rt", rawToks(col("text")))
-          .withColumn("toks", Text.tokensOfSplit(col("rt")))
-          .withColumn("n_raw", size(col("rt")))
-          .withColumn("stop_hits", hits(col("rt"), Text.STOPWORDS))
-          .withColumn("punct_chars",
-            length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", "")))
-          .withColumn("n_chars", length(col("text")))
-      else
-        T.documents(s, d)
-          .withColumn("qs", Text.qualitySignals(col("text")))
-          .withColumn("toks", Text.tokens(col("text")))
-          .withColumn("n_raw", element_at(col("qs"), 1))
-          .withColumn("stop_hits", element_at(col("qs"), 2))
-          .withColumn("punct_chars", element_at(col("qs"), 3))
-          .withColumn("n_chars", element_at(col("qs"), 4))
-    val base = withSignals
+    val base = T.documents(s, d)
+      .withColumn("qs", Text.qualitySignals(col("text")))
+      .withColumn("toks", Text.tokens(col("text")))
+      .withColumn("n_raw", element_at(col("qs"), 1))
+      .withColumn("stop_hits", element_at(col("qs"), 2))
+      .withColumn("punct_chars", element_at(col("qs"), 3))
+      .withColumn("n_chars", element_at(col("qs"), 4))
       .withColumn("n_toks", size(col("toks")).cast("long"))
       .filter(col("n_toks") >= 3 &&
         col("stop_hits").cast("double") / col("n_raw") <= 0.6 &&

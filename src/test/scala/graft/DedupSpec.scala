@@ -320,10 +320,8 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
     def labelSet() = ops.Dedup.labelsOf(dup).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    sys.props("graft.minhash.dict.minfactor") = Long.MaxValue.toString
     val (directPairs, directLabels) =
-      try (pairSet(), labelSet())
-      finally sys.props.remove("graft.minhash.dict.minfactor")
+      withProps("graft.dict.minfactor" -> Long.MaxValue.toString)((pairSet(), labelSet()))
     // 3x duplication passes the default 2.0 gate: dictionary tier active
     assert(ops.Dedup.minhashDict(dup).isDefined,
       "3x-duplicated corpus must trip the default gate")
@@ -337,10 +335,8 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
         r.getInt(4), r.getDouble(5))).toSeq.sorted
     val dictLev = levSet(ops.Dedup.expandLevenshtein(rp, m, dup))
-    sys.props("graft.minhash.dict.minfactor") = Long.MaxValue.toString
-    val directLev =
-      try levSet(ops.Dedup.levenshteinCore(dup))
-      finally sys.props.remove("graft.minhash.dict.minfactor")
+    val directLev = withProps("graft.dict.minfactor" -> Long.MaxValue.toString)(
+      levSet(ops.Dedup.levenshteinCore(dup)))
     assert(dictLev == directLev,
       s"lev divergence: only-dict=${dictLev.diff(directLev).take(3)}, missed=${directLev.diff(dictLev).take(3)}")
   }
@@ -465,14 +461,16 @@ class DedupSpec extends SparkSpec {
         .collect()
         .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
           r.getAs[Double]("est_jaccard"))).toSet
-    sys.props("graft.lsh.prefilter.minreps") = Long.MaxValue.toString
-    val singlePhase = try probe() finally sys.props.remove("graft.lsh.prefilter.minreps")
-    sys.props("graft.lsh.prefilter.minreps") = "0"
-    val twoPhase = try probe() finally sys.props.remove("graft.lsh.prefilter.minreps")
+    val singlePhase =
+      withProps("graft.lsh.prefilter.minreps" -> Long.MaxValue.toString)(probe())
+    val twoPhase = withProps("graft.lsh.prefilter.minreps" -> "0")(probe())
     assert(twoPhase == singlePhase,
       s"prefilter diverged: only-two-phase=${twoPhase -- singlePhase}, " +
         s"missed=${singlePhase -- twoPhase}")
     assert(singlePhase.nonEmpty, "fixture must produce at least one link")
+    // a malformed value falls back to the default gate instead of
+    // throwing during query construction; the links are unchanged
+    assert(withProps("graft.lsh.prefilter.minreps" -> "lots")(probe()) == singlePhase)
   }
 
   test("ngram jaccard: duplication-gated dictionary tier ≡ direct path") {
@@ -487,12 +485,9 @@ class DedupSpec extends SparkSpec {
     val t3 = "one two three four five six"
     val docs = Seq((1L, t1), (2L, t2), (3L, t3), (4L, t1), (5L, t3), (6L, t3))
       .toDF("doc_id", "text")
-    def run(factor: String) = {
-      sys.props("graft.ngram.dict.minfactor") = factor
-      try ops.Dedup.ngramJaccardCore(docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      finally sys.props.remove("graft.ngram.dict.minfactor")
-    }
+    def run(factor: String) = withProps("graft.dict.minfactor" -> factor)(
+      ops.Dedup.ngramJaccardCore(docs).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet)
     val direct = run("1e18")
     val dict = run("1.0")
     assert(dict == direct, s"dict=$dict direct=$direct")
@@ -515,13 +510,10 @@ class DedupSpec extends SparkSpec {
     val t3 = "e" * 160
     val docs = Seq((1L, t1), (2L, t2), (3L, t3), (4L, t1), (5L, t3), (6L, t3))
       .toDF("doc_id", "text")
-    def run(factor: String) = {
-      sys.props("graft.substring.dict.minfactor") = factor
-      try ops.Dedup.substringCoverage(docs).collect()
+    def run(factor: String) = withProps("graft.dict.minfactor" -> factor)(
+      ops.Dedup.substringCoverage(docs).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getDouble(5))).toSeq
-      finally sys.props.remove("graft.substring.dict.minfactor")
-    }
+          r.getLong(4), r.getDouble(5))).toSeq)
     val direct = run("1e18")
     val dict = run("1.0")
     assert(dict == direct, s"dict=$dict direct=$direct")
@@ -531,23 +523,6 @@ class DedupSpec extends SparkSpec {
     Seq(3L, 5L, 6L).foreach(id => assert(byId(id)._6 == 1.0, s"doc $id"))
     assert(byId(4L)._2 == byId(1L)._2 && byId(4L)._4 == byId(1L)._4 &&
       byId(4L)._6 == byId(1L)._6)
-  }
-
-  test("substring dedup: anchor recompute (r21 default) ≡ DISK_ONLY-cached anchors") {
-    // r21: the per-position anchor frame is recomputed per consumer
-    // instead of cached to disk — a pure storage decision; coverage rows
-    // must be identical under the forced-cached legacy path.
-    import spark.implicits._
-    val block = "y" * 60
-    val docs = Seq((1L, "a" * 50 + block + "b" * 50),
-      (2L, "c" * 50 + block + "d" * 50), (3L, "e" * 160), (4L, "f" * 30))
-      .toDF("doc_id", "text")
-    def run() = ops.Dedup.substringCoverage(docs).collect().map(_.toSeq).toSeq
-    val recomputed = run()
-    sys.props("graft.substring.anchors") = "cached"
-    val cached = try run() finally sys.props.remove("graft.substring.anchors")
-    assert(recomputed.nonEmpty && recomputed == cached,
-      s"anchor storage decision changed results ($recomputed vs $cached)")
   }
 
   test("substring dedup: coverage is the interval union of duplicated 40-char spans") {
@@ -758,14 +733,10 @@ class DedupSpec extends SparkSpec {
     val t2 = "one two three four five six seven"
     val docs = Seq((1L, t1), (2L, t2), (3L, t1), (4L, t1), (5L, t2),
       (6L, ""), (7L, "xy")).toDF("doc_id", "text")
-    def run(factor: String) = {
-      sys.props("graft.sig.dict.minfactor") = factor
+    def run(factor: String) = withProps("graft.dict.minfactor" -> factor) {
       try graft.ops.Dedup.sigWithArrayDict(docs).collect()
         .map(r => (r.getLong(0), r.toSeq.drop(1).toList)).sortBy(_._1).toSeq
-      finally {
-        sys.props.remove("graft.sig.dict.minfactor")
-        spark.catalog.clearCache()
-      }
+      finally spark.catalog.clearCache()
     }
     val direct = run("1e18")
     val dict = run("1.0")
@@ -776,40 +747,38 @@ class DedupSpec extends SparkSpec {
       graft.ops.Dedup.sigWithArray(docs).columns.toSeq)
   }
 
-  test("ngram jaccard: postings expansion ≡ legacy self-join (direct + dict tiers)") {
+  test("ngram jaccard: direct tier ≡ forced dict tier across the df cap") {
     // r21: ONE corpus-scale exchange + in-place C(df,2) pair expansion
-    // (PostingsAgg, buffer capped at NgramDfCap) replaces the corpus
-    // distinct + hot-list anti-join + shingle self-join. Pin the exact
-    // pair multiset fused ≡ legacy on a corpus that crosses the df cap
-    // (150 docs sharing one hot shingle), contains identical texts (so
-    // the forced dict tier exercises the WEIGHTED postings), and real
-    // sf0.001 rows (unicode, empties, long docs).
+    // (PostingsAgg, buffer capped at NgramDfCap). Pin the exact pair
+    // multiset direct ≡ dict tier on a corpus that crosses the df cap,
+    // contains identical texts (so the forced dict tier exercises the
+    // WEIGHTED postings), and real sf0.001 rows (unicode, empties, long
+    // docs). The 150 synthetic docs come in 75 identical-text pairs that
+    // share the hot shingle "zebra zebra zebra" (df 150 > NgramDfCap) and
+    // one pair-private shingle: with the cap each pair shares exactly ONE
+    // surviving shingle (common 1); a missed cap — or an unweighted df of
+    // 75 reps in the dict tier — would count the hot shingle (common 2).
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     def filler(i: Int) = "filler" + ('a' + i / 26).toChar + ('a' + i % 26).toChar
     val synth = ((0 until 150).map(i =>
-      (1000L + i, s"zebra zebra zebra ${filler(i)}")) ++
+      (1000L + i, s"zebra zebra zebra ${filler(i / 2)}")) ++
       Seq((2000L, "apple mango cherry durian"),
         (2001L, "apple mango cherry durian"))).toDF("doc_id", "text")
     val docs = graft.Tables.documents(spark, sf001)
       .select(col("doc_id"), col("text")).union(synth)
-    def run(impl: Option[String], factor: String) = {
-      impl.foreach(v => sys.props("graft.ngram.impl") = v)
-      sys.props("graft.ngram.dict.minfactor") = factor
+    def run(factor: String) = withProps("graft.dict.minfactor" -> factor) {
       try graft.ops.Dedup.ngramJaccardCore(docs).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-      finally {
-        sys.props.remove("graft.ngram.impl")
-        sys.props.remove("graft.ngram.dict.minfactor")
-        spark.catalog.clearCache()
-      }
+      finally spark.catalog.clearCache()
     }
-    for (factor <- Seq("1e18", "1.0")) { // direct tier, then dict tier forced
-      val legacy = run(Some("legacy"), factor)
-      val fused = run(None, factor)
-      assert(fused == legacy, s"factor=$factor fused=$fused legacy=$legacy")
-      assert(fused.nonEmpty, "fixture must produce pairs")
-    }
+    val direct = run("1e18")
+    val dict = run("1.0")
+    assert(dict == direct, s"dict=$dict direct=$direct")
+    val hotPairs = direct.filter { case (a, _, _, _) => a >= 1000L && a < 1150L }
+    assert(hotPairs == (0 until 75).map(k => (1000L + 2 * k, 1001L + 2 * k, 1L, 1.0)),
+      s"the hot shingle must leave the capped universe: ${hotPairs.take(3)}")
+    assert(direct.contains((2000L, 2001L, 2L, 1.0)))
   }
 
   test("native simhash16 ≡ declarative md5-vote chain, bit-exact") {

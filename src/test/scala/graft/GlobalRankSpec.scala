@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Edge-size and consistency properties of Relational.withGlobalRank —
@@ -54,22 +55,41 @@ class GlobalRankSpec extends SparkSpec {
     assert(e.getMessage.contains("rank"))
   }
 
-  test("zorder chunk stats: histogram form ≡ rank-sort form (r21)") {
-    // rel_zorder_contract's histogram rewrite must produce the identical
-    // contract row at fixture scales where the rank-sort path is cheap —
-    // including an SF where pruning actually varies (sf0.01) and the
-    // degenerate tiny SF. Also pin the registered-query dict ≡ legacy on
-    // both; n < 16 chunk-emptiness is covered by the sf0.001 lineitem
-    // being larger than 16 rows but the per-chunk boundary arithmetic
-    // still being exercised across both n%16 regimes.
-    def rows(sf: String) = SparkEntry.queries("rel_zorder_contract")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { sf =>
-      val dict = rows(sf)
-      sys.props("graft.zorder.impl") = "legacy"
-      val legacy = try rows(sf) finally sys.props.remove("graft.zorder.impl")
-      assert(dict.nonEmpty && dict == legacy,
-        s"$sf: histogram form diverged (dict=$dict legacy=$legacy)")
+  test("zorder chunk stats: histogram form ≡ Spark's ntile Window") {
+    // rel_zorder_contract reads its chunk stats off the value histogram
+    // (Relational.chunksReadHistogram) instead of sorting rows. The
+    // reference is SQL NTILE(16) over the total order — here Spark's own
+    // single-task ntile Window, cheap at fixture scale. Sizes cover
+    // n < 16 (empty chunks) and both n % 16 regimes; sortCol determines
+    // sy (the caller's bijection precondition), `id` breaks ties.
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    def viaWindow(base: DataFrame, sortCol: String): Long =
+      base.withColumn("c", ntile(16).over(Window.orderBy(col(sortCol), col("id"))))
+        .groupBy(col("c")).agg(min(col("sy")).as("mn"), max(col("sy")).as("mx"))
+        .agg(sum(when(col("mn") <= 20 && col("mx") >= 10, 1L).otherwise(0L)))
+        .head.getLong(0)
+    def viaHistogram(base: DataFrame, sortCol: String): Long =
+      graft.ops.Relational.chunksReadHistogram(spark, base, sortCol, "c")
+        .head.getLong(0)
+    def spread(c: Column): Column = (0 until 8).map(i =>
+      shiftleft(shiftright(c, i).bitwiseAND(1), 2 * i)).reduce(_ + _)
+    def layouts(pxSy: DataFrame): DataFrame = pxSy
+      .withColumn("zval", spread(col("px")) + spread(col("sy")) * 2)
+      .withColumn("lin", col("px") * 256 + col("sy"))
+    val synthetic = Seq(5, 16, 17, 100, 1000).map { n =>
+      s"n=$n" -> layouts((0 until n).map(i => (i.toLong, (i * 37) % 64, (i * 13) % 32))
+        .toDF("id", "px", "sy"))
+    }
+    val lineitem = "sf0.001 lineitem" -> layouts(graft.Tables.lineitem(spark, sf001)
+      .select((col("l_orderkey") * 8 + col("l_linenumber")).as("id"),
+        (col("l_partkey") % 256).as("px"), (col("l_suppkey") % 256).as("sy")))
+    (synthetic :+ lineitem).foreach { case (label, base) =>
+      Seq("zval", "lin").foreach { sortCol =>
+        val want = viaWindow(base, sortCol)
+        assert(viaHistogram(base, sortCol) == want, s"$label $sortCol: want $want")
+      }
     }
   }
 }

@@ -37,4 +37,37 @@ class HarnessGuardSpec extends SparkSpec {
     // the session must still run jobs normally after a cancelled group
     assert(spark.range(10).count() == 10)
   }
+
+  test("overlapped arms run under the guarded query's job group") {
+    import graft.ops.Overlap
+    val sc = spark.sparkContext
+    // the job group a task of an arm's job actually carries
+    def taskGroup(): String = sc.parallelize(Seq(1), 1)
+      .map(_ => org.apache.spark.TaskContext.get().getLocalProperty("spark.jobGroup.id"))
+      .collect().head
+    // (a) both arms report the caller's group — on two consecutive
+    // queries, so a worker that kept an earlier query's group shows up
+    for (q <- Seq("ov-q1", "ov-q2")) {
+      val r = HarnessGuard.run(spark, q, 60)(Overlap.all(Seq(() => taskGroup(), () => taskGroup())))
+      assert(r == Right(Seq(s"graft-guard-$q", s"graft-guard-$q")), s"$q: $r")
+    }
+    // (b) a guarded timeout cancels BOTH arms' jobs: each arm wedges two
+    // task slots in an interruptible sleep
+    def wedged(): Long = sc.parallelize(Seq(1, 2), 2)
+      .map { x => Thread.sleep(120000L); x }.count()
+    val t0 = System.nanoTime()
+    val r = HarnessGuard.run(spark, "ov-wedged", 2)(Overlap.all(Seq(() => wedged(), () => wedged())))
+    assert(r.isLeft && r.left.exists(_.startsWith("TIMEOUT")), s"got $r")
+    val jobs = sc.statusTracker.getJobIdsForGroup("graft-guard-ov-wedged").toSeq
+    assert(jobs.size == 2, s"both arms must submit under the guard's group: $jobs")
+    def running = jobs.filter(j => sc.statusTracker.getJobInfo(j)
+      .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    while (running.nonEmpty && (System.nanoTime() - t0) / 1e9 < 60) Thread.sleep(100)
+    assert(running.isEmpty, s"arm jobs survived the cancel: $running")
+    // (c) the sticky cancel of the timed-out group leaves the next guarded
+    // query's overlapped jobs alone
+    val next = HarnessGuard.run(spark, "ov-next", 60)(
+      Overlap.all(Seq(() => spark.range(10).count(), () => spark.range(20).count())))
+    assert(next == Right(Seq(10L, 20L)), s"got $next")
+  }
 }

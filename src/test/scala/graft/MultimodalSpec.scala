@@ -408,9 +408,11 @@ class MultimodalSpec extends SparkSpec {
     val fixDir = stage("fix", Seq((1L, base), (2L, near), (9L, far)))
     assert(run(fixDir) == expect, "driver union-find tier")
     // tier 3 — same corpus, cap forced to 0: distributed fixpoint
-    sys.props("graft.phash64.uf.cap") = "0"
-    try assert(run(fixDir) == expect, "distributed fixpoint tier")
-    finally sys.props.remove("graft.phash64.uf.cap")
+    withProps("graft.phash64.uf.cap" -> "0")(
+      assert(run(fixDir) == expect, "distributed fixpoint tier"))
+    // a malformed cap falls back to the default instead of throwing
+    withProps("graft.phash64.uf.cap" -> "1e3")(
+      assert(run(fixDir) == expect, "malformed cap"))
   }
 
   test("unionFindLabels: min-root labels across chained merges") {

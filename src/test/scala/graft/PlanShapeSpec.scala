@@ -135,57 +135,49 @@ class PlanShapeSpec extends SparkSpec {
     // r20: the swapped union branch is a projection of the FIRST directed
     // aggregate, so both branches share one canonicalized exchange and the
     // corpus tokenize→explode→partial-agg subtree runs once. Pin (a) the
-    // fused plan carries a ReusedExchange, and (b) the ranking is
-    // IDENTICAL to the legacy re-group-the-raw-bigrams shape (counts are
+    // edge plan carries a ReusedExchange, and (b) the edges are IDENTICAL
+    // to re-grouping the raw bigram stream on the swapped key (counts are
     // exact integers, so symmetrize-after-agg cannot move a weight).
-    val fused = SparkEntry.queries("ta_token_pagerank")(spark, sf001)
-    val fusedRows = fused.collect().map(r => (r.getString(0), r.getDouble(1)))
-    sys.props("graft.pagerank.edges") = "legacy"
-    try {
-      val legacy = SparkEntry.queries("ta_token_pagerank")(spark, sf001)
-        .collect().map(r => (r.getString(0), r.getDouble(1)))
-      assert(fusedRows.sameElements(legacy),
-        s"fused edge build diverged:\n  fused =${fusedRows.mkString(",")}\n  legacy=${legacy.mkString(",")}")
-    } finally sys.props.remove("graft.pagerank.edges")
+    import org.apache.spark.sql.functions._
+    val bigrams = graft.Tables.documents(spark, sf001)
+      .select(graft.functions.Text.tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= 2)
+      .select(posexplode(col("t")).as(Seq("i", "w1")), col("t"))
+      .filter(col("i") < size(col("t")) - 1)
+      .select(col("w1"), element_at(col("t"), col("i") + 2).as("w2"))
+    val twin = bigrams.union(bigrams.select(col("w2").as("w1"), col("w1").as("w2")))
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("w"))
+    def edgeSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     // assert the reuse on the EDGE FRAME's own executed plan (r20 ADVICE:
     // the registered query's full plan prints cached/iterated subtrees
     // that can carry their own reuse markers — a substring match there
     // could survive an edge-build regression). AQE applies exchange reuse
     // at runtime, so execute the frame first.
     val edgesDf = graft.ops.TextAnalysis.pagerankEdges(spark, sf001)
-    edgesDf.collect()
+    val edges = edgeSet(edgesDf)
+    assert(edges.nonEmpty && edges == edgeSet(twin), "symmetrized edge weights diverged")
     val edgePlan = edgesDf.queryExecution.executedPlan.toString
     assert(edgePlan.contains("ReusedExchange"),
       s"symmetrized union must reuse the directed-count exchange:\n$edgePlan")
   }
 
-  test("ta_token_pagerank: out-weight persist (r21) leaves the ranking identical") {
-    // r21: the vocab-sized out frame is persisted once for its three
-    // consumers — a storage decision over the same integer aggregates;
-    // the 12dp-rounded iteration chain must be bit-identical without it.
-    def rows() = SparkEntry.queries("ta_token_pagerank")(spark, sf001)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val persisted = rows()
-    sys.props("graft.pagerank.outpersist") = "off"
-    val unpersisted = try rows() finally sys.props.remove("graft.pagerank.outpersist")
-    assert(persisted.nonEmpty && persisted == unpersisted,
-      s"out persist changed the ranking:\n  on =$persisted\n  off=$unpersisted")
-  }
-
   test("ta_tfidf: df derives from tf (one corpus pass, reused exchange), same results") {
     // r20: tf's key set IS the distinct (doc_id, term) relation, so
     // df = count of tf rows per term — the second corpus explode +
-    // distinct is gone and the df branch reuses tf's exchange. Pin the
-    // full output against the legacy two-pass shape and the ReusedExchange
-    // marker in the fused plan.
+    // distinct is gone and the df branch reuses tf's exchange. Pin every
+    // output df against a second-pass distinct (doc_id, term) count and
+    // the ReusedExchange marker in the plan.
+    import org.apache.spark.sql.functions._
     val fused = SparkEntry.queries("ta_tfidf")(spark, sf001)
-    val fusedRows = fused.collect().map(_.toSeq)
-    sys.props("graft.tfidf.impl") = "legacy"
-    try {
-      val legacy = SparkEntry.queries("ta_tfidf")(spark, sf001).collect().map(_.toSeq)
-      assert(fusedRows.toSeq == legacy.toSeq,
-        s"ta_tfidf fused diverged (${fusedRows.length} vs ${legacy.length} rows)")
-    } finally sys.props.remove("graft.tfidf.impl")
+    val fusedRows = fused.collect()
+      .map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
+    val dfTwin = graft.Tables.documents(spark, sf001)
+      .select(col("doc_id"), explode(graft.functions.Text.tokens(col("text"))).as("term"))
+      .distinct().groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(fusedRows.nonEmpty && fusedRows.forall { case (t, df) => dfTwin(t) == df },
+      "df-from-tf diverged from the distinct (doc_id, term) count")
     assert(fused.queryExecution.executedPlan.toString.contains("ReusedExchange"),
       "df-from-tf must reuse the tf exchange")
   }
@@ -196,32 +188,32 @@ class PlanShapeSpec extends SparkSpec {
     // raw-bigram persist; all inputs are exact integers, so the PMI
     // doubles are bit-identical. Force the gate BOTH ways (the dict-tier
     // convention: minfactor 0 = always dict, huge = never).
-    sys.props("graft.pmi.dict.minfactor") = "1e18"
-    val direct =
-      try SparkEntry.queries("ta_bigram_pmi")(spark, sf001).collect().map(_.toSeq)
-      finally sys.props.remove("graft.pmi.dict.minfactor")
-    sys.props("graft.pmi.dict.minfactor") = "0"
-    try {
-      val dict = SparkEntry.queries("ta_bigram_pmi")(spark, sf001).collect().map(_.toSeq)
-      assert(dict.toSeq == direct.toSeq,
-        s"ta_bigram_pmi dict tier diverged (${dict.length} vs ${direct.length} rows)")
-    } finally sys.props.remove("graft.pmi.dict.minfactor")
+    def rows(factor: String) = withProps("graft.dict.minfactor" -> factor)(
+      SparkEntry.queries("ta_bigram_pmi")(spark, sf001).collect().map(_.toSeq).toSeq)
+    val direct = rows("1e18")
+    val dict = rows("0")
+    assert(dict == direct,
+      s"ta_bigram_pmi dict tier diverged (${dict.length} vs ${direct.length} rows)")
   }
 
-  test("bloom contracts: fused never-inserted aggregate matches the legacy two-pass counts") {
+  test("bloom contracts: fused never-inserted aggregate matches exact counts") {
     // r20: (n_new, n_false_pos) come from ONE aggregate over the
     // anti-joined never-inserted set instead of two sequential count jobs
     // (and the build scans the persisted DISTINCT key set, which is
     // bit-identical — inserting a key twice ORs the same bits). Pin the
-    // full contract row against the legacy shape for both filters.
+    // full contract row against exact set counts for both filters.
+    import org.apache.spark.sql.functions._
+    val docs = graft.Tables.documents(spark, sf001)
+    val half = docs.count() / 2
+    val sh = docs.select(col("doc_id"), explode(graft.functions.Text.shingles3(
+      graft.functions.Text.tokens(col("text")))).as("sh"))
+    val inserted = sh.filter(col("doc_id") < half).select(col("sh")).distinct()
+    val fresh = sh.filter(col("doc_id") >= half).select(col("sh")).distinct()
+      .join(inserted, Seq("sh"), "left_anti")
+    val want = Seq(inserted.count(), true, fresh.count(), true)
     for (q <- Seq("sketch_bloom_contract", "sketch_bloom_faithful_contract")) {
-      val fused = SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq)
-      sys.props("graft.bloom.contract") = "legacy"
-      try {
-        val legacy = SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq)
-        assert(fused.toSeq == legacy.toSeq,
-          s"$q: fused contract row diverged: fused=${fused.toSeq} legacy=${legacy.toSeq}")
-      } finally sys.props.remove("graft.bloom.contract")
+      val got = SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq).toSeq
+      assert(got == Seq(want), s"$q: contract row $got, want $want")
     }
   }
 

@@ -162,27 +162,4 @@ class SimilaritySpec extends SparkSpec {
     assert(r.getAs[Boolean]("purity_ok"),
       s"purity under floor ${ops.Similarity.TOPIC_PURITY_FLOOR}")
   }
-
-  test("r21 overlapped contract jobs: sequential path returns identical rows") {
-    // the overlap knobs reorder JOB SUBMISSION only (driver threads over
-    // the same frames); every scalar the contracts emit must be
-    // bit-identical under the forced-sequential paths
-    def rows(q: String) = SparkEntry.queries(q)(spark, sf001).collect()
-      .map(_.toSeq).toSeq
-    Seq("mllib_ann_contract", "sim_topic_contract", "sim_pq_contract",
-      "sim_ivfpq_contract", "sim_pca_contract", "sim_ann_contract")
-      .foreach { q =>
-        val overlapped = rows(q)
-        sys.props("graft.scaffold.seq") = "1"
-        sys.props("graft.anncontract.seq") = "1"
-        val sequential =
-          try rows(q)
-          finally {
-            sys.props.remove("graft.scaffold.seq")
-            sys.props.remove("graft.anncontract.seq")
-          }
-        assert(overlapped.nonEmpty && overlapped == sequential,
-          s"$q: overlap changed results ($overlapped vs $sequential)")
-      }
-  }
 }

@@ -215,21 +215,4 @@ class SketchSpec extends SparkSpec {
     val fp = unseen.count(bloom.mightContain)
     assert(fp <= 50, s"$fp/1000 false positives at 1% design fpp")
   }
-
-  test("r21 bloom-contract overlap: sequential path returns identical rows") {
-    // the overlap submits the false-negative probe and the never-inserted
-    // aggregate from two driver threads; the scalars must be identical
-    // under the forced-sequential path
-    def rows(q: String) = SparkEntry.queries(q)(spark, sf001).collect()
-      .map(_.toSeq).toSeq
-    Seq("sketch_bloom_contract", "sketch_bloom_faithful_contract").foreach { q =>
-      val overlapped = rows(q)
-      sys.props("graft.bloom.overlap") = "0"
-      val sequential =
-        try rows(q)
-        finally sys.props.remove("graft.bloom.overlap")
-      assert(overlapped.nonEmpty && overlapped == sequential,
-        s"$q: overlap changed results ($overlapped vs $sequential)")
-    }
-  }
 }

@@ -526,32 +526,6 @@ class TextSpec extends SparkSpec {
       (y - 20) / 24 >= 1 && (y - 20) / 24 <= 10), "rank grid violated")
   }
 
-  test("curation pipeline: fused-signals plan ≡ legacy per-signal plan") {
-    // r19 (r18 verdict #4): the quality filter's signals fused into one
-    // native pass (graft_quality_signals); the pre-r19 per-signal plan
-    // stays reachable via -Dgraft.curation.signals=legacy for the
-    // same-box A/B. Both must emit identical rows.
-    def run() = SparkEntry.queries("ta_curation_pipeline")(spark, sf001)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val native = run()
-    sys.props("graft.curation.signals") = "legacy"
-    val legacy = try run() finally sys.props.remove("graft.curation.signals")
-    assert(native == legacy, s"plans diverged: native=$native legacy=$legacy")
-    assert(native.nonEmpty && native.map(_._1) == native.map(_._1).sorted)
-  }
-
-  test("withQuality: fused-signals plan ≡ legacy per-signal plan") {
-    // r19: same fuse as the curation pipeline, applied to the shared
-    // quality scalar (ta_quality + dedup_cluster_rep). Every output
-    // column must be identical under both plans.
-    def run() = SparkEntry.queries("ta_quality")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
-    val native = run()
-    sys.props("graft.quality.signals") = "legacy"
-    val legacy = try run() finally sys.props.remove("graft.quality.signals")
-    assert(native.nonEmpty && native == legacy)
-  }
-
   test("fused token scrub ≡ edge-strip then clitic-strip ×2 (r13 hot-path fusion)") {
     import graft.functions.Text
     // The fused single-regex scrub exists because the per-token lambda is
@@ -646,10 +620,7 @@ class TextSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_shingles"),
         r.getAs[Long]("n_in_train"), r.getAs[Double]("overlap"),
         r.getAs[Boolean]("contaminated"))).toSeq.sorted
-    sys.props("graft.contamination.dict.minfactor") = Long.MaxValue.toString
-    val direct =
-      try rows()
-      finally sys.props.remove("graft.contamination.dict.minfactor")
+    val direct = withProps("graft.dict.minfactor" -> Long.MaxValue.toString)(rows())
     // 3× duplication trips the default 2.0 gate: dictionary tier active
     val (n, nd) = graft.ops.Dedup.duplicationOf(dup)
     assert(n >= 2L * nd, "fixture must trip the default duplication gate")
@@ -703,15 +674,5 @@ class TextSpec extends SparkSpec {
     assert(fused.exists(r => r._1 == 8003L && r._2 == 2.0))
     // "  a  b " = 5 spaces → 6 segments (4 empty + a + b), 3 distinct
     assert(fused.exists(r => r._1 == 8007L && r._4 == 6L && r._3 == 3L))
-  }
-
-  test("ta_entropy registered query: native path ≡ -Dgraft.entropy.impl=legacy path") {
-    def rows() = SparkEntry.queries("ta_entropy")(spark, sf001).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getLong(3))).toSeq
-    val native = rows()
-    sys.props("graft.entropy.impl") = "legacy"
-    val legacy = try rows() finally sys.props.remove("graft.entropy.impl")
-    assert(native.nonEmpty && native == legacy,
-      s"divergence: ${native.zip(legacy).filter(p => p._1 != p._2).take(3)}")
   }
 }
