@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Same-session interleaved A/B runner (guide §1): times one registered
   * query under N sys-prop configurations in ONE JVM, alternating configs
   * each rep so box drift hits all arms equally — the only comparison
@@ -32,11 +30,7 @@ object AbRunner {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withOverrides(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(f"[ab] cpu_canary ${Canary.single()}%.3f s, " +
       f"parallel_canary($cpus) ${Canary.parallelStable(cpus.toInt)}%.3f s")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-registry receipt capture (r18 verdict #2: every r18 full bench ran
   * a uniform 7–12 % above receipts AFTER box normalization — the receipt
   * set had gone stale as a set). This tool runs EVERY registered query
@@ -89,11 +87,7 @@ object ReceiptRefresh {
         "pathology); the committed set must be min of 3 SEPARATE single-pass JVMs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withOverrides(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val canaryStart = Canary.single()

@@ -17,12 +17,15 @@ import org.apache.spark.sql.functions._
   *    (copy i's orders reference copy i's customers, etc.) — so every
   *    registered query runs unmodified with 1:1 join semantics and
   *    ~mult× data volume, and times the WHOLE registry at 1× and mult×.
-  *    Streaming queries additionally report their max state-store rows at
-  *    each scale (a StreamingQueryListener sums `numRowsTotal` per
-  *    progress event): for the key-bounded stateful operators
-  *    (shingle/fingerprint dedup, token counts) the id-offset copies
-  *    carry IDENTICAL text, so state must stay ~FLAT while input grows
-  *    mult× — the "state scales with keys, not corpus" claim as a number.
+  *    Streaming queries additionally report their peak state-store
+  *    memory at each scale (a StreamingQueryListener sums
+  *    `memoryUsedBytes` over the state operators per progress event;
+  *    `numRowsTotal` reads 0 with RocksDB row tracking off): for the
+  *    key-bounded stateful operators (shingle/fingerprint dedup, token
+  *    counts) the id-offset copies carry IDENTICAL text, so state must
+  *    stay ~FLAT while input grows mult× — the "state scales with keys,
+  *    not corpus" claim as a number. A stateful query that reports no
+  *    state at 1× fails the gate instead of passing it vacuously.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleGate"
   *   knobs: SPARK_GRAFT_SCALE_MULT (default 10), SPARK_GRAFT_SCALE_FULL,
@@ -116,6 +119,13 @@ object ScaleGate {
     "stream_incremental_intake" -> 3.0, "text_dup_scores" -> 3.0,
     "ta_contamination" -> 3.0)
 
+  /** The state gate: state must never grow super-linearly in the input
+    * (the key-bounded operators should stay ~flat — reported, eyeballed
+    * in PERF.md), and a stateful query whose state reads 0 at 1× FAILS —
+    * a blind reading must never pass as "flat". */
+  private[graft] def stateOk(stateful: Boolean, state1: Long, stateN: Long, mult: Int): Boolean =
+    !(stateful && state1 == 0) && stateN <= state1 * mult
+
   /** Tables a registered query resolves while being BUILT against `base`
     * — the staging contract for watch-mode selections (r17 verdict #2).
     * Builders resolve every table path at build time (batch accessors,
@@ -141,11 +151,7 @@ object ScaleGate {
     val slack = 1.5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = Sessions.withOverrides(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // -------------------------------------------------- spill tracker
@@ -166,16 +172,19 @@ object ScaleGate {
       }
     })
 
-    // -------------------------------------------------- state-row tracker
-    // max summed state-store rows per streaming progress, reset per query
-    val stateRows = new java.util.concurrent.atomic.AtomicLong(0)
+    // -------------------------------------------------- state tracker
+    // max summed state-store memory per streaming progress, and whether
+    // any state operator reported at all; both reset per query
+    val stateMem = new java.util.concurrent.atomic.AtomicLong(0)
+    val stateful = new java.util.concurrent.atomic.AtomicBoolean(false)
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
         import org.apache.spark.sql.streaming.StreamingQueryListener._
         override def onQueryStarted(e: QueryStartedEvent): Unit = ()
         override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val total = e.progress.stateOperators.map(_.numRowsTotal).sum
-          stateRows.getAndAccumulate(total, math.max(_, _))
+          val ops = e.progress.stateOperators
+          if (ops.nonEmpty) stateful.set(true)
+          stateMem.getAndAccumulate(ops.map(_.memoryUsedBytes).sum, math.max(_, _))
         }
         override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
       })
@@ -283,7 +292,7 @@ object ScaleGate {
       // can't leak into this query's counters, and again after the action
       // so every task-end of THIS run is counted before the read
       org.apache.spark.graft.GraftCoreShim.drainListenerBus(spark.sparkContext)
-      stateRows.set(0)
+      stateMem.set(0)
       spillMem.set(0)
       spillDisk.set(0)
       val t0 = System.nanoTime()
@@ -298,17 +307,14 @@ object ScaleGate {
       // it runs OUTSIDE the timed window.
       System.gc()
       org.apache.spark.graft.GraftCoreShim.drainListenerBus(spark.sparkContext)
-      (wall, stateRows.get, spillMem.get + spillDisk.get)
+      (wall, stateMem.get, spillMem.get + spillDisk.get)
     }
 
     case class R(name: String, cold1: Double, warm1: Double,
-                 coldN: Double, warmN: Double, state1: Long, stateN: Long,
-                 bound: Double, spill1: Long, spillN: Long) {
+                 coldN: Double, warmN: Double, stateful: Boolean, state1: Long,
+                 stateN: Long, bound: Double, spill1: Long, spillN: Long) {
       def ratio: Double = warmN / warm1
-      def ok: Boolean = ratio <= bound
-      // state must never grow super-linearly in the input; the key-bounded
-      // operators should stay ~flat (reported, eyeballed in PERF.md)
-      def stateOk: Boolean = state1 == 0 || stateN <= state1 * mult
+      def ok: Boolean = ratio <= bound && ScaleGate.stateOk(stateful, state1, stateN, mult)
     }
 
     // Per-query fault isolation + incremental artifact write (r19): a
@@ -325,7 +331,8 @@ object ScaleGate {
         val rowsJson = results.map { r =>
           s""""${r.name}":{"warm1":${f(r.warm1)},"warmN":${f(r.warmN)},""" +
             s""""cold1":${f(r.cold1)},"coldN":${f(r.coldN)},"ratio":${f(r.ratio)},""" +
-            s""""bound":${f(r.bound)},"state1":${r.state1},"stateN":${r.stateN},""" +
+            s""""bound":${f(r.bound)},"stateful":${r.stateful},""" +
+            s""""stateMem1":${r.state1},"stateMemN":${r.stateN},""" +
             s""""spill1":${r.spill1},"spillN":${r.spillN}}"""
         }.mkString("{", ",", "}")
         val errsJson = failures.map { case (n, m) =>
@@ -340,20 +347,21 @@ object ScaleGate {
     queries.foreach { q =>
       try {
         val bound = mult * BoundOverrides.getOrElse(q, slack)
+        stateful.set(false)
         val (cold1, st1a, _) = run(q, base)
         val w1 = (1 to reps).map(_ => run(q, base))
         val (coldN, stNa, _) = run(q, bigDir)
         val wN = (1 to reps).map(_ => run(q, bigDir))
-        val r = R(q, cold1, w1.map(_._1).min, coldN, wN.map(_._1).min,
+        val r = R(q, cold1, w1.map(_._1).min, coldN, wN.map(_._1).min, stateful.get,
           math.max(st1a, w1.map(_._2).max), math.max(stNa, wN.map(_._2).max), bound,
           w1.map(_._3).max, wN.map(_._3).max)
         println(f"[scale] ${r.name}%-28s 1x ${r.warm1}%6.2f (cold ${r.cold1}%6.2f) | " +
           f"${mult}x ${r.warmN}%6.2f (cold ${r.coldN}%6.2f) | " +
           f"ratio ${r.ratio}%6.2f (bound ${r.bound}%4.0f) " +
-          (if (r.state1 > 0) f"| state ${r.state1}%d -> ${r.stateN}%d " else "") +
+          (if (r.stateful) f"| state ${r.state1 / 1048576.0}%.1fMiB -> ${r.stateN / 1048576.0}%.1fMiB " else "") +
           (if (r.spillN > 0 || r.spill1 > 0)
             f"| spill ${r.spill1 / 1048576}%dMiB -> ${r.spillN / 1048576}%dMiB " else "") +
-          (if (r.ok && r.stateOk) "OK" else "FAIL"))
+          (if (r.ok) "OK" else "FAIL"))
         results += r
       } catch { case e: Throwable =>
         val msg = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(200)}"
@@ -373,14 +381,14 @@ object ScaleGate {
       }
     }
 
-    println(s"| query | 1× warm (s) | ${mult}× warm (s) | ratio | bound | state 1×→${mult}× | verdict |")
+    println(s"| query | 1× warm (s) | ${mult}× warm (s) | ratio | bound | state bytes 1×→${mult}× | verdict |")
     println("|---|---|---|---|---|---|---|")
     results.foreach { r =>
-      val st = if (r.state1 > 0) s"${r.state1}→${r.stateN}" else "—"
-      println(f"| ${r.name} | ${r.warm1}%.2f | ${r.warmN}%.2f | ${r.ratio}%.2f | ${r.bound}%.0f | $st | ${if (r.ok && r.stateOk) "OK" else "FAIL"} |")
+      val st = if (r.stateful) s"${r.state1}→${r.stateN}" else "—"
+      println(f"| ${r.name} | ${r.warm1}%.2f | ${r.warmN}%.2f | ${r.ratio}%.2f | ${r.bound}%.0f | $st | ${if (r.ok) "OK" else "FAIL"} |")
     }
     println(s"[scale] artifact written to $outPath")
-    val bad = results.filterNot(r => r.ok && r.stateOk)
+    val bad = results.filterNot(_.ok)
     if (bad.nonEmpty || failures.nonEmpty) {
       if (bad.nonEmpty)
         println(s"[scale] FAIL: ${bad.map(_.name).mkString(", ")} exceeded growth/state bounds")

@@ -172,19 +172,10 @@ object Text {
     * call per row — instead of the `transform`/`filter` higher-order
     * chain, whose CodegenFallback interpretation cost ~25 µs/token
     * engine-wide (r14 verdict #1). The declarative twin survives as
-    * [[hofRawAlphaTokensOfSplit]]; TokenizerExprSpec pins native ≡
+    * [[hofRawAlphaTokens]]; TokenizerExprSpec pins native ≡
     * declarative on the torture corpus + random unicode. */
   def rawAlphaTokens(text: Column): Column =
     nativeTokens(text, dropStops = false)
-
-  /** [[rawAlphaTokens]] over an ALREADY lower+whitespace-split column —
-    * for pipelines that also need the raw split for other signals
-    * (n_raw, stopword-ratio): materialize `split(lower(text), " ")` as
-    * its own column ONCE and feed it here, instead of re-lowering and
-    * re-splitting the text per consumer (the ta_curation_pipeline r14
-    * shave). */
-  def rawAlphaTokensOfSplit(raw: Column): Column =
-    nativeTokens(raw, dropStops = false)
 
   private def nativeTokens(in: Column, dropStops: Boolean): Column =
     org.apache.spark.sql.graft.GraftSqlShim.column(
@@ -277,11 +268,6 @@ object Text {
     * unicode rows. */
   def tokens(text: Column): Column =
     nativeTokens(text, dropStops = true)
-
-  /** [[tokens]] over an already lower+whitespace-split column (see
-    * [[rawAlphaTokensOfSplit]] for when and why). */
-  def tokensOfSplit(raw: Column): Column =
-    nativeTokens(raw, dropStops = true)
 
   /** k=3 shingles joined by spaces (duplicate_detector.py:7-13): the i-th
     * shingle is tokens[i..i+2]; fewer than 3 tokens → no shingles.

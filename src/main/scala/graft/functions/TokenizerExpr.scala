@@ -215,21 +215,6 @@ object GraftTokenizer {
     new GenericArrayData(out.toArray)
   }
 
-  /** Chain over an ALREADY lower+space-split array (the shared-split
-    * pipelines). Null cells — impossible from `split`, but the
-    * declarative twin drops them via three-valued logic — are skipped. */
-  def tokenizeArr(arr: ArrayData, dropStops: Boolean): ArrayData = {
-    val n = arr.numElements()
-    val out = new java.util.ArrayList[AnyRef](math.max(8, n))
-    var i = 0
-    while (i < n) {
-      val u = arr.getUTF8String(i)
-      if (u != null) processTokenU(u, dropStops, out)
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
   /** dict-then-suffix-rule lemmatization + stopword drop over a token
     * array — the `filter(lemmatizeArray(raw), ¬stopword)` composition at
     * both lemma call sites, natively. [[Lemmatizer.suffixLemma]] is the
@@ -395,30 +380,25 @@ object GraftTokenizer {
 }
 
 /** Native tokenizer expression over a string column (full chain incl.
-  * lower+split) or an array<string> column of already lower+split cells.
-  * `dropStops = false` → T1+T2 only ([[Text.rawAlphaTokens]]);
-  * `true` → the full T1-T4 chain ([[Text.tokens]]). */
+  * lower+split). `dropStops = false` → T1+T2 only
+  * ([[Text.rawAlphaTokens]]); `true` → the full T1-T4 chain
+  * ([[Text.tokens]]). */
 case class GraftTokens(child: Expression, dropStops: Boolean)
     extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string or array<string>, got $t")
+      s"$prettyName expects string, got $t")
   }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  private def fromText: Boolean = child.dataType == StringType
-
   override def nullSafeEval(v: Any): Any =
-    if (fromText) GraftTokenizer.tokenize(v.asInstanceOf[UTF8String], dropStops)
-    else GraftTokenizer.tokenizeArr(v.asInstanceOf[ArrayData], dropStops)
+    GraftTokenizer.tokenize(v.asInstanceOf[UTF8String], dropStops)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val method = if (fromText) "tokenize" else "tokenizeArr"
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.GraftTokenizer.$method($c, $dropStops)")
-  }
+      s"graft.functions.GraftTokenizer.tokenize($c, $dropStops)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1492,12 +1492,11 @@ object Dedup {
   private[graft] def probeLshIndex(s: SparkSession, batchSig: DataFrame, idx: String): DataFrame =
     probeLshFrames(s, batchSig, idx)("out")
 
-  /** The probe's named stage frames — "batch_groups" (batch-side
-    * signature dictionary), "cand" (band-join candidates), "rep_links"
-    * (verified rep-level links), "out" (member-expanded output). The
-    * query path consumes only "out"; [[graft.IntakeAb]] times each stage
-    * cumulatively for the scale-attribution A/B (r18 verdict #1). One
-    * builder for both so the A/B can never drift from the real plan. */
+  /** The probe's named stage frames — "rep_links" (verified rep-level
+    * links), "out" (member-expanded output) and the expansion inputs. The
+    * incremental probe consumes only "out"; the duplication-gated
+    * contamination report reads the rep-level frames. One builder for
+    * both so the two can never drift apart. */
   private[graft] def probeLshFrames(s: SparkSession, batchSig: DataFrame, idx: String): Map[String, DataFrame] = {
     val idxBands = s.read
       .schema("doc_id BIGINT, bkey STRING, band INT")
@@ -1560,8 +1559,7 @@ object Dedup {
       .join(bMembers, "brep")
       .join(idxMembers.select(col("rep_id").as("crep"), col("doc_id").as("corpus_id")), "crep")
       .select(col("batch_id"), col("corpus_id"), col("est_jaccard"))
-    Map("batch_groups" -> bGroups, "cand" -> cand,
-      "rep_links" -> repLinks, "out" -> out,
+    Map("rep_links" -> repLinks, "out" -> out,
       // expansion inputs, exposed for consumers that can aggregate at
       // rep level INSTEAD of expanding (fuzzyContamination, r20) — same
       // frames the "out" expansion joins, so no plan drift

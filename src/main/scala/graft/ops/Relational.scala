@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QuerySpec, Tables => T, TmpDirs}
+import graft.{QuerySpec, Sessions, Tables => T, TmpDirs}
 
 /** Standard relational operator surface over the driver star schema
   * (SURVEY.md §7.2 M2). Every query is a pure-declarative DataFrame program —
@@ -1838,22 +1838,15 @@ object Relational {
     * test SFs), broadcast disabled so the join stays sort-merge (a
     * broadcast join has no skewed shuffle to split). Restores every key
     * after the body, so nothing leaks into the shared session. */
-  private[graft] def withSkewAqeTuning[A](s: SparkSession)(body: => A): A = {
-    val tuned = Seq(
+  private[graft] def withSkewAqeTuning[A](s: SparkSession)(body: => A): A =
+    Sessions.withConf(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = tuned.map { case (k, _) => k -> s.conf.getOption(k) }
-    tuned.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The deliberately SKEWED fact⋈dim join under [[withSkewAqeTuning]]:
     * 80% of orders are remapped onto customer key 1, modeling the hot-key

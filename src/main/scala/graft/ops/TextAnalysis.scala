@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QuerySpec, Tables => T, TmpDirs}
+import graft.{QuerySpec, Sessions, Tables => T, TmpDirs}
 import graft.functions.Text
 
 /** Corpus-analysis operators for a training-data pipeline (builder-prompt
@@ -1806,10 +1806,9 @@ object TextAnalysis {
     // reference-BPE property test and the bit-exact oracle both pin). On
     // a real cluster the corpus-scale word count keeps deployment sizing;
     // only the loop runs at vocab scale.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try bpeLoopBody(s, wordFreq, rounds)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    Sessions.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+      bpeLoopBody(s, wordFreq, rounds)
+    }
   }
 
   private def bpeLoopBody(s: SparkSession, wordFreq: DataFrame, rounds: Int)

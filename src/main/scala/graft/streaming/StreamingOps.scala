@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
-import graft.{QuerySpec, TmpDirs}
+import graft.{QuerySpec, Sessions, TmpDirs}
 import graft.functions.Text
 
 /** Structured Streaming pipeline (SURVEY.md §7.2 M4, §2.8 ST1–ST7): the
@@ -71,10 +71,11 @@ object StreamingOps {
       .map(t => du(new java.io.File(s"$d/$t.parquet"))).max
   }
 
-  /** Scale-adaptive state partition count (r20, from the graft.JoinAb
-    * grid — `join_ab_r20_100x.json`): the r16 constant 4 was tuned at
-    * fixture scale, where per-instance state-store open/commit overhead
-    * dominates (rocksdb_p32 8.7 s vs p4 3.7 s at 1×). But RocksDB
+  /** Scale-adaptive state partition count (r20, from the state-store
+    * attribution grid committed as `join_ab_r20_100x.json`): the r16
+    * constant 4 was tuned at fixture scale, where per-instance
+    * state-store open/commit overhead dominates (rocksdb_p32 8.7 s vs
+    * p4 3.7 s at 1×). But RocksDB
     * instances are single-writer, so state INGEST parallelism must grow
     * with state volume: at 100× the same constant made
     * stream_stream_join 54-58 s where 32 partitions run it in 16.5-21.7 s
@@ -90,77 +91,32 @@ object StreamingOps {
     else math.max(4, math.min(cpus, (bytes / (4L * 1024 * 1024)).toInt))
   }
 
-  private def withReplayTuning[T](s: SparkSession, d: String)(body: => T): T = {
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = s.conf.getOption(changelogKey)
-    val trackRowsKey = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val prevTrackRows = s.conf.getOption(trackRowsKey)
-    // A/B knobs (r20, graft.JoinAb — the stream_stream_join stage
-    // attribution): provider / partition count / RocksDB changelog
-    // checkpointing are state-store SIZING, not semantics — results are
-    // provider- and partition-independent (StreamingSpec pins it) —
-    // so the attribution harness can force each without plan drift.
-    // Provider default stays RocksDB: the HDFS-backed store measured
-    // faster up to 100× (13.3 s vs 16.5-21.7 s adaptive RocksDB) but
-    // holds every state row on the HEAP — memory-unsafe at deployment
-    // state volumes, the exact failure class the r16 storage rule
-    // exists for. Partition default is scale-adaptive (above).
-    val provider = sys.props.getOrElse("graft.replay.provider", "rocksdb")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      if (provider == "hdfs")
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      else "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // r21 defaults, from the AbRunner grid (stream_ab_r21_1x.json):
-    // (a) changelog checkpointing ON — commit writes the batch's
-    // changelog instead of uploading a full RocksDB snapshot (the
-    // snapshot moves to background maintenance); stream_stream_join
-    // 3.6 -> 3.0 s median at 1x, and at deployment scale commit latency
-    // stops growing with total state size. (b) numTotalStateRows
-    // tracking OFF — it is a METRIC ONLY, and maintaining it costs
-    // RocksDB a get-before-every-put; results never depend on it.
-    // Both stay forceable (graft.replay.changelog / .trackrows) and
-    // StreamingSpec pins them result-neutral.
-    s.conf.set(changelogKey, sys.props.getOrElse("graft.replay.changelog", "true"))
-    s.conf.set(trackRowsKey, sys.props.getOrElse("graft.replay.trackrows", "false"))
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.props.getOrElse("graft.replay.partitions",
-        replayPartitions(d, s.sparkContext.defaultParallelism).toString))
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      // restore ALL mutations: when the provider was previously unset it
-      // must be unset again, or RocksDB silently leaks into every later
-      // streaming query in the session (review finding)
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevChangelog match {
-        case Some(v) => s.conf.set(changelogKey, v)
-        case None => s.conf.unset(changelogKey)
-      }
-      prevTrackRows match {
-        case Some(v) => s.conf.set(trackRowsKey, v)
-        case None => s.conf.unset(trackRowsKey)
-      }
-    }
-  }
+  /** The fixed state-store configuration of every replay here.
+    *  - RocksDB provider: the HDFS-backed default measured faster up to
+    *    100× (13.3 s vs 16.5-21.7 s, `join_ab_r20_100x.json`) but holds
+    *    every state row on the HEAP — memory-unsafe at deployment state
+    *    volumes, the exact failure class the r16 storage rule exists for.
+    *  - Changelog checkpointing on (r21, `stream_ab_r21_1x.json`): commit
+    *    writes the batch's changelog instead of uploading a full RocksDB
+    *    snapshot (the snapshot moves to background maintenance);
+    *    stream_stream_join 3.6 -> 3.0 s median at 1×, and at deployment
+    *    scale commit latency stops growing with total state size.
+    *  - numTotalStateRows tracking off (r21): it is a METRIC ONLY, and
+    *    maintaining it costs RocksDB a get-before-every-put; results never
+    *    depend on it (state size is read from `memoryUsedBytes`). */
+  private val StateStoreConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
 
-  /** Tuning for the intake query only (r19): like [[withReplayTuning]]
-    * but WITHOUT the 4-partition state sizing — the body is stateless
-    * per-batch relational work whose output-scale write was measurably
-    * throttled by 4 writer tasks (see the certificate at
-    * [[incrementalIntake]]). `-Dgraft.intake.partitions=<n>` pins a
-    * fixed sizing so specs and A/Bs can force the old plan. */
-  private def withIntakeTuning[T](s: SparkSession)(body: => T): T =
-    sys.props.get("graft.intake.partitions") match {
-      case Some(p) =>
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", p)
-        try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      case None => body
-    }
+  /** The state-store confs plus the scale-adaptive state partition count
+    * (`graft.replay.partitions` pins it: deployment sizing — results are
+    * partition-independent, StreamingSpec pins it), scoped to `body`. */
+  private def withReplayTuning[T](s: SparkSession, d: String)(body: => T): T =
+    Sessions.withConf(s, StateStoreConfs :+ ("spark.sql.shuffle.partitions" ->
+      sys.props.getOrElse("graft.replay.partitions",
+        replayPartitions(d, s.sparkContext.defaultParallelism).toString)): _*)(body)
 
   /** Untimed bench warmup: throwaway stateful streaming queries over the
     * 5-row region table to absorb one-time streaming infrastructure costs
@@ -886,10 +842,10 @@ object StreamingOps {
     * durable storage, stream partitions probe it independently, and
     * per-batch cost is proportional to the BATCH. */
   // Scale certificate (r19, r18 verdict #1): intake's 1000× wall is
-  // OUTPUT-linear, attributed by the stage-split same-box A/B
-  // (graft.IntakeAb over Dedup.probeLshFrames; intake_ab_r19_300x/_1000x
-  // .json). On a mult×-duplicated corpus every batch copy of a text
-  // near-dups every corpus copy, so the link output grows ~(mult/2)²
+  // OUTPUT-linear, attributed by the stage-split same-box A/B over
+  // Dedup.probeLshFrames (intake_ab_r19_300x/_1000x.json). On a
+  // mult×-duplicated corpus every batch copy of a text near-dups every
+  // corpus copy, so the link output grows ~(mult/2)²
   // by construction (124 M rows at 300×, ~1.4 B at 1000×) — the wall
   // decomposes into the LINEAR map-only signature pass (18.5 s at p=4
   // vs 18.9 s at p=32 at 300×: partition-setting-independent) plus
@@ -906,9 +862,9 @@ object StreamingOps {
   // foreachBatch body is per-batch RELATIONAL work — there is no state
   // operator anywhere in its plan, so the "state operators pin their
   // partitioning" rationale does not apply — and it therefore runs at
-  // the SESSION's shuffle sizing. `-Dgraft.intake.partitions=<n>`
-  // forces a fixed sizing (specs pin forced-4 ≡ default output-equal).
-  private def incrementalIntake(s: SparkSession, d: String): DataFrame = withIntakeTuning(s) {
+  // the SESSION's shuffle sizing (StreamingSpec pins the links
+  // independent of that sizing).
+  private def incrementalIntake(s: SparkSession, d: String): DataFrame = {
     val docs = graft.Tables.documents(s, d)
     val half = docs.count() / 2
     // Fit-once index shared with dedup_incremental: both probe the same

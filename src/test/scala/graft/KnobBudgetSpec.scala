@@ -12,9 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class KnobBudgetSpec extends AnyFunSuite {
 
   private val Survivors = Set(
-    "graft.replay.provider", "graft.replay.partitions", "graft.replay.changelog",
-    "graft.replay.trackrows", // streaming state store (deployment)
-    "graft.intake.partitions", // incremental intake shuffle width (deployment)
+    "graft.replay.partitions", // stateful shuffle width (deployment)
     "graft.lsh.prefilter.minreps", // LSH probe verify gate (spec-only)
     "graft.phash64.uf.cap", // pHash union-find tier gate (spec-only)
     "graft.dict.minfactor") // distinct-text dictionary tier gate (spec-only)

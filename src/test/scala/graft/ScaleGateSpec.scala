@@ -39,6 +39,17 @@ class ScaleGateSpec extends SparkSpec {
     assert(t == Set("documents"), s"got $t")
   }
 
+  test("stateOk: a stateful query with zero state at 1× fails; growth is bounded by mult") {
+    // RocksDB row tracking off made numRowsTotal read 0, and the old rule
+    // passed every query with 1× state 0 — a blind gate
+    assert(!ScaleGate.stateOk(stateful = true, state1 = 0, stateN = 0, mult = 2))
+    assert(!ScaleGate.stateOk(stateful = true, state1 = 0, stateN = 4096, mult = 2))
+    // a stateless query has no state to bound
+    assert(ScaleGate.stateOk(stateful = false, state1 = 0, stateN = 0, mult = 2))
+    assert(ScaleGate.stateOk(stateful = true, state1 = 1000, stateN = 2000, mult = 2))
+    assert(!ScaleGate.stateOk(stateful = true, state1 = 1000, stateN = 2001, mult = 2))
+  }
+
   test("recordReads: disarmed outside the block") {
     val t = Tables.recordReads { Tables.documents(spark, sf001); () }
     assert(t == Set("documents"))

@@ -76,17 +76,17 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
-  test("incremental intake: session shuffle sizing ≡ forced legacy 4-partition plan") {
-    // r19 (r18 verdict #1): the intake foreachBatch body now runs at the
+  test("incremental intake: links are independent of the session's shuffle sizing") {
+    // r19 (r18 verdict #1): the intake foreachBatch body runs at the
     // session's shuffle sizing (its output write was throttled by the
     // replay tuning's 4 writer tasks at 1000×); partitioning is a
-    // physical property, so the emitted links must be identical.
+    // physical property, so the emitted links must be identical at a
+    // width other than the suite's 4.
     def run() = SparkEntry.queries("stream_incremental_intake")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val default = run()
-    sys.props("graft.intake.partitions") = "4"
-    val legacy = try run() finally sys.props.remove("graft.intake.partitions")
-    assert(default.nonEmpty && default == legacy)
+    val wide = Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> "13")(run())
+    assert(default.nonEmpty && default == wide)
   }
 
   test("foreachBatch sink: replaying a batch overwrites, never duplicates") {
@@ -104,46 +104,43 @@ class StreamingSpec extends SparkSpec {
       s"replayed batch 0 must not duplicate: ${readBack.count()}")
   }
 
-  test("stream_stream_join: JoinAb provider/partition knobs don't change results (r20)") {
-    // graft.JoinAb forces the state-store provider / partition count /
-    // changelog checkpointing through withReplayTuning's sys-prop knobs
-    // for the stage attribution A/B — all three are state-store SIZING,
-    // so the joined output must be row-identical under any of them.
+  test("stream_stream_join: the state partition count doesn't change results (r20)") {
+    // graft.replay.partitions is deployment sizing of the state operators'
+    // shuffle width, so the joined output must be row-identical under any
+    // count.
     def rows() = SparkEntry.queries("stream_stream_join")(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val default = rows()
-    sys.props("graft.replay.provider") = "hdfs"
-    sys.props("graft.replay.partitions") = "7"
-    val forced =
-      try rows()
-      finally {
-        sys.props.remove("graft.replay.provider")
-        sys.props.remove("graft.replay.partitions")
-      }
+    val forced = withProps("graft.replay.partitions" -> "7")(rows())
     assert(default.nonEmpty && default == forced,
-      s"provider/partition sizing changed the join output: ${default.size} vs ${forced.size}")
+      s"partition sizing changed the join output: ${default.size} vs ${forced.size}")
   }
 
-  test("r21 commit knobs (changelog off, row tracking on) don't change results") {
-    // the r21 defaults are changelog checkpointing ON + numTotalStateRows
-    // tracking OFF (commit-latency / metrics only); force both back to
-    // the pre-r21 values and pin row-identical output on a stateful
-    // query from each family that exercises RocksDB commits
-    def rows(q: String) = SparkEntry.queries(q)(spark, sf001).collect()
-      .map(_.toSeq).toSeq
-    Seq("stream_stream_join", "stream_session_window", "stream_tws_counts")
-      .foreach { q =>
-        val newDefaults = rows(q)
-        sys.props("graft.replay.changelog") = "false"
-        sys.props("graft.replay.trackrows") = "true"
-        val legacy =
-          try rows(q)
-          finally {
-            sys.props.remove("graft.replay.changelog")
-            sys.props.remove("graft.replay.trackrows")
-          }
-        assert(newDefaults.nonEmpty && newDefaults == legacy,
-          s"$q: commit knobs changed results (${newDefaults.size} vs ${legacy.size})")
+  test("replayPartitions: 4 up to 32 MiB of streamed input, then bytes / 4 MiB in [4, cpus]") {
+    val MiB = 1024L * 1024
+    // sparse files: only the sizes matter to the derivation
+    def dataset(files: (String, Long)*): String = {
+      val dir = TmpDirs.create("graft_replay_parts")
+      files.foreach { case (rel, n) =>
+        val f = dir.resolve(rel).toFile
+        f.getParentFile.mkdirs()
+        val raf = new java.io.RandomAccessFile(f, "rw")
+        try raf.setLength(n) finally raf.close()
       }
+      dir.toString
+    }
+    import graft.streaming.StreamingOps.replayPartitions
+    assert(replayPartitions(dataset("events.parquet" -> 32 * MiB, "documents.parquet" -> MiB), 64) == 4)
+    assert(replayPartitions(dataset("events.parquet" -> MiB, "documents.parquet" -> 32 * MiB), 64) == 4)
+    // the larger of the two tables sets the count
+    assert(replayPartitions(dataset("events.parquet" -> 100 * MiB, "documents.parquet" -> 40 * MiB), 64) == 25)
+    assert(replayPartitions(dataset("events.parquet" -> MiB, "documents.parquet" -> 100 * MiB), 64) == 25)
+    // a directory of part files counts its total size
+    assert(replayPartitions(dataset("events.parquet/part0.parquet" -> 30 * MiB,
+      "events.parquet/part1.parquet" -> 30 * MiB, "documents.parquet" -> MiB), 64) == 15)
+    // clamped to the session's cores above, and never below 4
+    assert(replayPartitions(dataset("events.parquet" -> 400 * MiB, "documents.parquet" -> MiB), 16) == 16)
+    assert(replayPartitions(dataset("events.parquet" -> (32 * MiB + 1), "documents.parquet" -> MiB), 64) == 8)
+    assert(replayPartitions(dataset("events.parquet" -> 100 * MiB, "documents.parquet" -> MiB), 2) == 4)
   }
 }

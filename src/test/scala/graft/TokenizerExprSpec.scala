@@ -55,21 +55,6 @@ class TokenizerExprSpec extends SparkSpec {
     }
   }
 
-  test("native GraftTokens from-split ≡ from-text on the same corpus") {
-    val df = corpus.toDF("text")
-      .withColumn("rt", split(lower(col("text")), " "))
-      .select(
-        Text.tokensOfSplit(col("rt")).as("from_split"),
-        Text.tokens(col("text")).as("from_text"),
-        Text.rawAlphaTokensOfSplit(col("rt")).as("raw_from_split"),
-        Text.rawAlphaTokens(col("text")).as("raw_from_text"))
-      .collect()
-    df.foreach { r =>
-      assert(r.getSeq[String](0) == r.getSeq[String](1))
-      assert(r.getSeq[String](2) == r.getSeq[String](3))
-    }
-  }
-
   test("native GraftLemmaStop ≡ declarative lemmatizeArray+stopword filter") {
     val df = corpus.toDF("text")
       .select(Text.rawAlphaTokens(col("text")).as("raw"))
