@@ -13,7 +13,11 @@ without the plan changing are normalized away:
 - object identity hashes (`PostingsAgg$$anon$1@6dd59886`);
 - source line numbers of RDD call sites (`at Relational.scala:1706`);
 - the fit-once model store directory, keyed by the build fingerprint
-  (`graft_models_v2_<hex>`).
+  (`graft_models_v2_<hex>`);
+- the random digits `Files.createTempDirectory` appends to a `graft_*`
+  temp-dir prefix in a path (`/graft_stream_sess_out<digits>`,
+  `/graft_bucketed<digits>`); names outside a path, such as native
+  functions (`graft_simhash16`), keep their digits.
 
 Everything else must match. Prints `identical` or a unified diff per
 query and exits 1 if any query differs or is missing from one side.
@@ -31,6 +35,7 @@ NOISE = [(re.compile(p), r) for p, r in [
     (r"@[0-9a-f]{4,}\b", "@H"),
     (r"(\w+\.scala):\d+", r"\1:N"),
     (r"graft_models_v2_[0-9a-f]+", "graft_models_v2_H"),
+    (r"(?<=/)(graft_\w*?[A-Za-z_])\d+\b", r"\1N"),
 ]]
 
 

@@ -154,24 +154,9 @@ object Bench {
     // judge-profiling step. Position = 1-based rank in the fixed
     // alphabetical run order. Sub-second walls are never flagged (pure
     // per-query overhead noise, same floor as scripts/bench_compare.py).
-    val allReceiptRows: Map[String, Double] = {
-      val in = getClass.getResourceAsStream("/perf_receipts.tsv")
-      if (in == null) Map.empty
-      else {
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        try src.getLines().filterNot(l => l.isEmpty || l.startsWith("#"))
-          .flatMap { l =>
-            l.split("\t") match {
-              case Array(n, v) => scala.util.Try(n -> v.toDouble).toOption
-              case _ => None
-            }
-          }.toMap
-        finally src.close()
-      }
-    }
     // reserved __-rows are capture-time context, not query receipts
-    // (EntrySpec's 1:1 registry↔receipts invariant skips them the same way)
-    val receipts = allReceiptRows.filterNot(_._1.startsWith("__"))
+    val ReceiptRefresh.Receipts(receipts, reserved) =
+      ReceiptRefresh.resourceReceipts().getOrElse(ReceiptRefresh.Receipts(Map.empty, Map.empty))
     // Threshold self-scaling: receipts were captured at a measured
     // parallel throughput (__parallel_canary); today's box may be slower
     // in PARALLEL even when the single-thread canary is unchanged (SMT
@@ -179,7 +164,7 @@ object Bench {
     // mode). Scale only UP, capped at 3x: a faster box needs no relaxing,
     // and beyond 3x the walls are telling us something a threshold
     // shouldn't hide.
-    val refParCanary = allReceiptRows.getOrElse("__parallel_canary", parCanary)
+    val refParCanary = reserved.getOrElse("__parallel_canary", parCanary)
     // Thread-count parity (r14 ADVICE #1): the reference canary was
     // captured at __parallel_canary_threads threads (Profile's cpus);
     // comparing a parallel wall measured at a DIFFERENT thread count
@@ -187,7 +172,7 @@ object Bench {
     // counts differ, re-run the canary at the capture count so the
     // ratio is apples-to-apples; without the threads row, scaling is
     // skipped (ratio pinned to 1) rather than trusted.
-    val refParThreads = allReceiptRows.get("__parallel_canary_threads").map(_.toInt)
+    val refParThreads = reserved.get("__parallel_canary_threads").map(_.toInt)
     val parForScale: Option[Double] = refParThreads match {
       case Some(t) if t == cpus.toInt => Some(parCanary)
       case Some(t) =>

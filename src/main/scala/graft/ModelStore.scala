@@ -61,11 +61,14 @@ object ModelStore {
     * MEASUREMENT-HARNESS classes (Bench/Profile/Warmup/… below) are
     * excluded: they contain no fit logic, so a harness-only rebuild — the
     * most common kind during perf work, and the one that produced the
-    * r14 cold-store bench outlier — keeps the store warm. Falls back to a
+    * r14 cold-store bench outlier — keeps the store warm. Only mains that
+    * no query path calls belong there: `Sessions` is not one (query code,
+    * the BPE training loop included, runs under `Sessions.withConf`), and
+    * under-invalidation is the bug this key exists to stop. Falls back to a
     * constant when the code source is unreadable (never in this harness;
     * the behavior is then exactly pre-r14). */
-  private val HarnessClasses =
-    "graft/(Bench|Profile|Warmup|Verify|PlanAudit|ScaleGate|Canary|Sessions|HarnessGuard|Explain)(\\$.*)?\\.(class|tasty)"
+  private[graft] val HarnessClasses =
+    "graft/(AbRunner|Bench|Canary|Explain|HarnessGuard|PlanAudit|Profile|ReceiptRefresh|ScaleGate|SkewDemo|Verify|Warmup)(\\$.*)?\\.(class|tasty)"
   private[graft] lazy val buildFingerprint: String = {
     try {
       val src = getClass.getProtectionDomain.getCodeSource

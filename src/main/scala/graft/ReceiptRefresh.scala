@@ -66,17 +66,30 @@ object ReceiptRefresh {
     }.sorted)
   }
 
-  /** Parse a perf_receipts.tsv body into (name -> seconds), reserved
-    * `__` rows and comments skipped. */
-  private[graft] def parseReceipts(text: String): Map[String, Double] =
-    text.linesIterator
-      .filterNot(l => l.startsWith("#") || l.startsWith("__") || l.isBlank)
+  /** A perf_receipts.tsv body: the query receipts (name -> seconds) and
+    * the reserved `__` rows — capture-time context such as
+    * `__parallel_canary`, which Bench scales its thresholds by. */
+  private[graft] case class Receipts(queries: Map[String, Double], reserved: Map[String, Double])
+
+  /** Parse a perf_receipts.tsv body; comments, blank and malformed lines
+    * are skipped. */
+  private[graft] def parseReceipts(text: String): Receipts = {
+    val (reserved, queries) = text.linesIterator
+      .filterNot(l => l.startsWith("#") || l.isBlank)
       .flatMap { l =>
         l.split("\t") match {
           case Array(n, v) => scala.util.Try(n -> v.toDouble).toOption
           case _ => None
         }
-      }.toMap
+      }.toMap.partition(_._1.startsWith("__"))
+    Receipts(queries, reserved)
+  }
+
+  /** The receipts packaged as the `/perf_receipts.tsv` resource, if any. */
+  private[graft] def resourceReceipts(): Option[Receipts] =
+    Option(getClass.getResourceAsStream("/perf_receipts.tsv")).map { in =>
+      try parseReceipts(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
 
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(1)
@@ -126,7 +139,7 @@ object ReceiptRefresh {
     // previous close's receipts are the walls the set predicted
     val committed = java.nio.file.Paths.get("src/main/resources/perf_receipts.tsv")
     if (java.nio.file.Files.exists(committed)) {
-      val prev = parseReceipts(java.nio.file.Files.readString(committed))
+      val prev = parseReceipts(java.nio.file.Files.readString(committed)).queries
       val (median, flagged) = flagRegressions(prev, walls.toMap)
       println(f"[receipts] guard: median shift vs committed set $median%.3f")
       val accepted = sys.env.get("SPARK_GRAFT_RECEIPT_ACCEPT")

@@ -90,6 +90,9 @@ object RunDetectors {
   private val RecentK = WindowSize / 2
   private val BurstThreshold = 2.0
   private val BurstEps = 1e-6
+  // key of the end-of-stream row in run()'s top-token bounds; snapshots
+  // are numbered from 0
+  private val FinalSnap = -1L
 
   /** The whole run as one Spark program; returns the summary as a JSON
     * string (the reference's stdout payload). */
@@ -128,12 +131,13 @@ object RunDetectors {
       .persist()
 
     val streamed = scored.count()
-    val processed = kept.count()
-    val excluded = if (c.excludeDuplicates) streamed - processed else 0L
     val dupRow = kept.agg(
+      count(lit(1)).as("n"),
       sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("total"),
       avg(when(col("is_duplicate"), 1.0).otherwise(0.0)).as("rate"),
       avg(col("dup_score")).as("avg_score")).collect()(0)
+    val processed = dupRow.getAs[Long]("n")
+    val excluded = if (c.excludeDuplicates) streamed - processed else 0L
 
     // detector-statistics token frame: ALL streamed messages (trap #2)
     val tokensAll = scored
@@ -155,50 +159,32 @@ object RunDetectors {
       .map(r => (r.getAs[Long]("snap"), r.getAs[Int]("kept_idx"), r.getAs[Int]("msg_idx")))
       .sortBy(_._1)
 
-    // per-snapshot top tokens: candidate set = kept tokens so far
-    // (recent_tokens → periodic_update), counts = CMS state = cumulative
-    // over ALL messages so far (run_detectors.py:195-198)
-    val snapTop: Map[Long, Seq[(String, Long)]] = if (boundaries.isEmpty) Map.empty else {
-      val bdf = spark.createDataFrame(boundaries.toSeq)
-        .toDF("snap", "kept_bound", "msg_bound")
-      val tracked = tokensKept.join(broadcast(bdf),
-          col("kept_idx") <= col("kept_bound"))
-        .select(col("snap"), col("token")).distinct()
-      val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
-        .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
-      tracked.join(cum,
-          tracked("snap") === cum("csnap") && tracked("token") === cum("ctoken"))
-        .select(col("snap"), col("token"), col("cnt"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= c.topFrequency)
-        .orderBy(col("snap"), col("rank")).collect()
-        .groupBy(_.getAs[Long]("snap"))
-        .map { case (s, rows) =>
-          s -> rows.toSeq.map(r => (r.getAs[String]("token"), r.getAs[Long]("cnt"))) }
-    }
-
-    /** Token-level burst twin of detect_spikes over the full-stream window
-      * ending at msg_idx = bound: recent = last `RecentK` messages, prev =
-      * the `RecentK` before them (burst_detector.py:43-77). */
-    def burstAt(bound: Long): Seq[(String, Long, Long, Double)] =
-      tokensAll
-        .filter(col("msg_idx") > bound - 2L * RecentK && col("msg_idx") <= bound)
-        .withColumn("recent", col("msg_idx") > bound - RecentK)
-        .groupBy(col("token"))
-        .agg(sum(when(col("recent"), 1L).otherwise(0L)).as("recent_cnt"),
-          sum(when(!col("recent"), 1L).otherwise(0L)).as("prev_cnt"))
-        .withColumn("ratio",
-          (col("recent_cnt") + lit(BurstEps)) / (col("prev_cnt") + lit(BurstEps)))
-        .filter(col("recent_cnt") >= 1 && col("ratio") >= BurstThreshold)
-        .orderBy(col("ratio").desc, col("recent_cnt").desc, col("token"))
-        .collect()
-        .map(r => (r.getAs[String]("token"), r.getAs[Long]("recent_cnt"),
-          r.getAs[Long]("prev_cnt"), r.getAs[Double]("ratio"))).toSeq
-
-    val snapBurst: Map[Long, Seq[(String, Long, Long, Double)]] =
-      boundaries.map { case (s, _, msgBound) => s -> burstAt(msgBound.toLong) }.toMap
+    // top tokens at every boundary in one pass: candidate set = kept
+    // tokens so far (recent_tokens → periodic_update), counts = CMS state
+    // = cumulative over ALL messages so far (run_detectors.py:195-198).
+    // The final top tokens (O3) are the same query at the end of the
+    // stream — tracked set = every kept token (incl. the trailing partial
+    // period's final periodic_update, run_detectors.py:212-214), counts
+    // over the whole stream — under the key FinalSnap (empty on an empty
+    // stream: no token sits at or before index -1).
+    val bdf = spark.createDataFrame(boundaries.toSeq :+
+        ((FinalSnap, (processed - 1).toInt, (streamed - 1).toInt)))
+      .toDF("snap", "kept_bound", "msg_bound")
+    val tracked = tokensKept.join(broadcast(bdf), col("kept_idx") <= col("kept_bound"))
+      .select(col("snap"), col("token")).distinct()
+    val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
+      .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
+      .agg(count(lit(1)).as("cnt"))
+    val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
+    val snapTop: Map[Long, Seq[(String, Long)]] = tracked
+      .join(cum, tracked("snap") === cum("csnap") && tracked("token") === cum("ctoken"))
+      .select(col("snap"), col("token"), col("cnt"))
+      .withColumn("rank", row_number().over(wTop))
+      .filter(col("rank") <= c.topFrequency)
+      .orderBy(col("snap"), col("rank")).collect()
+      .groupBy(_.getAs[Long]("snap"))
+      .map { case (s, rows) =>
+        s -> rows.toSeq.map(r => (r.getAs[String]("token"), r.getAs[Long]("cnt"))) }
 
     val dupsSoFar = kept
       .withColumn("snapshot", expr(s"kept_idx div ${c.updateInterval}"))
@@ -206,9 +192,6 @@ object RunDetectors {
       .agg(sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("d"))
       .collect().map(r => r.getAs[Long]("snapshot") -> r.getAs[Long]("d"))
       .sortBy(_._1)
-
-    // final burst (W2): window over the FULL stream at its end
-    val finalBurst = if (streamed > 0) burstAt(streamed - 1) else Nil
 
     // probe estimates (A12): CMS state = all streamed messages' tokens;
     // probe lowercased (T8, frequency_detector.py:93-96)
@@ -220,31 +203,26 @@ object RunDetectors {
         c.freqQueries.map(q => q -> counts.getOrElse(q.toLowerCase, 0L)).toMap
       }
 
-    // final top tokens (O3): tracked set = kept tokens (incl. the trailing
-    // partial period's final periodic_update — run_detectors.py:212-214),
-    // counts = cumulative over all streamed messages
-    val keptVocab = tokensKept.select(col("token")).distinct()
-    val finalTop = tokensAll.join(keptVocab, "token")
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("token")).limit(c.topFrequency).collect()
+    // per-message rows (kept only — run_detectors.py:178-185)
+    val rows =
+      if (c.showText) kept.orderBy(col("kept_idx"))
+        .select(col("body"), col("dup_score"), col("is_duplicate"), col("msg_idx"))
+        .collect().toSeq
+      else Nil
 
-    // per-message output (kept only — run_detectors.py:178-185): duplicate
-    // dict + the burst summary as of that message's arrival
-    val messagesOut: Seq[(String, Double, Boolean, Seq[(String, Long, Long, Double)])] =
-      if (c.showText) {
-        val rows = kept.orderBy(col("kept_idx"))
-          .select(col("body"), col("dup_score"), col("is_duplicate"), col("msg_idx"))
-          .collect()
-        // one bounded self-join instead of a per-message query: for each
-        // kept message, spikes over the 50-message window ending at it
-        val byMsg = perMessageBurst(spark, tokensAll,
-          rows.map(_.getAs[Int]("msg_idx").toLong))
-        rows.toSeq.map { r =>
-          (r.getAs[String]("body"), r.getAs[Double]("dup_score"),
-            r.getAs[Boolean]("is_duplicate"),
-            byMsg.getOrElse(r.getAs[Int]("msg_idx").toLong, Nil))
-        }
-      } else Nil
+    // every burst read in one pass: each snapshot boundary, the final
+    // window over the full stream (W2), and the window ending at each
+    // kept message when they are shown
+    import spark.implicits._
+    val ends = (boundaries.map(_._3.toLong).toSeq ++ Seq(streamed - 1) ++
+      rows.map(_.getAs[Int]("msg_idx").toLong)).distinct
+    val bursts: Map[Long, Seq[(String, Long, Long, Double)]] =
+      burstFrame(tokensAll, ends.toDF("w_end"))
+        .orderBy(col("w_end"), col("ratio").desc, col("recent_cnt").desc, col("token"))
+        .collect()
+        .groupBy(_.getAs[Long]("w_end"))
+        .map { case (e, rs) => e -> rs.toSeq.map(r => (r.getAs[String]("token"),
+          r.getAs[Long]("recent_cnt"), r.getAs[Long]("prev_cnt"), r.getAs[Double]("ratio"))) }
 
     // ---- render the reference's summary JSON (run_detectors.py:227-243)
     import org.json4s._
@@ -262,11 +240,11 @@ object RunDetectors {
           ("prev_count" -> prev) ~
           ("representative" -> token)
       }
-    val snapshotsJson = boundaries.map { case (snap, _, _) =>
+    val snapshotsJson = boundaries.map { case (snap, _, msgBound) =>
       val cumDups = dupsSoFar.filter(_._1 <= snap).map(_._2).sum
       ("message_count" -> ((snap + 1) * c.updateInterval)) ~
         ("top_10_tokens" -> tokenDict(snapTop.getOrElse(snap, Nil))) ~
-        ("burst" -> burstJson(snapBurst.getOrElse(snap, Nil))) ~
+        ("burst" -> burstJson(bursts.getOrElse(msgBound.toLong, Nil))) ~
         ("duplicates_so_far" -> cumDups)
     }.toList
     val json =
@@ -280,15 +258,14 @@ object RunDetectors {
             ("rate" -> (if (processed > 0) dupRow.getAs[Double]("rate") else 0.0)) ~
             ("avg_score" -> (if (processed > 0) dupRow.getAs[Double]("avg_score") else 0.0))) ~
         ("periodic_snapshots" -> snapshotsJson) ~
-        ("final burst" -> burstJson(finalBurst)) ~
-        ("final top_tokens" -> tokenDict(finalTop.toSeq.map(r =>
-          (r.getAs[String]("token"), r.getAs[Long]("cnt"))))) ~
-        ("messages" -> (if (c.showText) Some(messagesOut.toList.map {
-          case (body, score, isDup, burst) =>
-            ("text" -> body) ~
-              ("duplicate" ->
-                (("is_duplicate" -> isDup) ~ ("duplicate_score" -> score))) ~
-              ("burst" -> burstJson(burst))
+        ("final burst" -> burstJson(bursts.getOrElse(streamed - 1, Nil))) ~
+        ("final top_tokens" -> tokenDict(snapTop.getOrElse(FinalSnap, Nil))) ~
+        ("messages" -> (if (c.showText) Some(rows.toList.map { r =>
+          ("text" -> r.getAs[String]("body")) ~
+            ("duplicate" ->
+              (("is_duplicate" -> r.getAs[Boolean]("is_duplicate")) ~
+                ("duplicate_score" -> r.getAs[Double]("dup_score")))) ~
+            ("burst" -> burstJson(bursts.getOrElse(r.getAs[Int]("msg_idx").toLong, Nil)))
         }) else None))
     pretty(render(json))
   }
@@ -319,9 +296,10 @@ object RunDetectors {
     * arbitrary (msg_idx, body) message stream. Exclusion is off (the
     * default CLI path), so kept ≡ streamed and every statistic is over
     * the full stream. Scale shape: the only corpus-scale exchanges key on
-    * (snap, token) after a broadcast of the ≤n/interval-row boundary
-    * table; burst windows join only the trailing 2·RecentK messages per
-    * boundary. */
+    * (snap, token) or (w_end, token) after a broadcast of the
+    * ≤n/interval-row boundary table; the burst counts are [[burstFrame]]'s
+    * shared range join (the one [[run]] reads), so each message joins
+    * at most the 2·RecentK boundaries whose window holds it. */
   private[graft] def snapshotSummary(msgs: DataFrame,
       updateInterval: Int, topFrequency: Int): DataFrame = {
     val scored = dupScored(msgs)
@@ -337,17 +315,9 @@ object RunDetectors {
     val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
     val top = cum.withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= topFrequency)
-    val burst = tokens.join(broadcast(bounds),
-        col("msg_idx") > col("msg_bound") - 2L * RecentK &&
-          col("msg_idx") <= col("msg_bound"))
-      .withColumn("recent", col("msg_idx") > col("msg_bound") - RecentK)
-      .groupBy(col("snap").as("bsnap"), col("token"))
-      .agg(sum(when(col("recent"), 1L).otherwise(0L)).as("recent_cnt"),
-        sum(when(!col("recent"), 1L).otherwise(0L)).as("prev_cnt"))
-      .filter(col("recent_cnt") >= 1 &&
-        (col("recent_cnt") + lit(BurstEps)) / (col("prev_cnt") + lit(BurstEps))
-          >= BurstThreshold)
-      .groupBy(col("bsnap")).agg(count(lit(1)).as("n_burst"))
+    val burst = burstFrame(tokens, bounds.select(col("msg_bound").as("w_end")))
+      .groupBy(((col("w_end") + 1) / updateInterval - 1).cast("long").as("bsnap"))
+      .agg(count(lit(1)).as("n_burst"))
     val dups = scored.filter(col("is_duplicate"))
       .join(broadcast(bounds), col("msg_idx") <= col("msg_bound"))
       .groupBy(col("snap").as("dsnap")).agg(count(lit(1)).as("dups_so_far"))
@@ -360,6 +330,28 @@ object RunDetectors {
         coalesce(col("n_burst"), lit(0L)).as("n_burst"),
         coalesce(col("dups_so_far"), lit(0L)).as("dups_so_far"))
       .orderBy(col("snapshot"), col("rank"))
+  }
+
+  /** Token-level burst twin of detect_spikes (burst_detector.py:43-77)
+    * for many windows in one pass. The window ending at msg_idx = w_end
+    * holds the last 2·RecentK messages: the RecentK most recent and the
+    * RecentK before them. So each token event at msg_idx j is "recent"
+    * for window ends in [j, j+RecentK) and "previous" for
+    * [j+RecentK, j+2·RecentK): one range join against the broadcast
+    * `ends` (a `w_end` column) fans every event out to at most 2·RecentK
+    * rows, then one shuffle on (w_end, token). Returns (w_end, token,
+    * recent_cnt, prev_cnt, ratio) for the bursting tokens only. */
+  private[graft] def burstFrame(tokens: DataFrame, ends: DataFrame): DataFrame = {
+    val j = col("msg_idx").cast("long")
+    tokens
+      .join(broadcast(ends), col("w_end").between(j, j + (2L * RecentK - 1L)))
+      .withColumn("recent", col("w_end") < j + RecentK)
+      .groupBy(col("w_end"), col("token"))
+      .agg(sum(when(col("recent"), 1L).otherwise(0L)).as("recent_cnt"),
+        sum(when(!col("recent"), 1L).otherwise(0L)).as("prev_cnt"))
+      .withColumn("ratio",
+        (col("recent_cnt") + lit(BurstEps)) / (col("prev_cnt") + lit(BurstEps)))
+      .filter(col("recent_cnt") >= 1 && col("ratio") >= BurstThreshold)
   }
 
   /** Registered form over the driver tables: documents in doc_id order are
@@ -452,35 +444,6 @@ object RunDetectors {
     * summary as a registered, DuckDB-oracled query. */
   def specs: Seq[QuerySpec] =
     Seq(QuerySpec("scc_run_summary", runSummaryQuery, Some(runSummarySql)))
-
-  /** Burst summaries for many window-ends in one pass: each token event at
-    * msg_idx j is "recent" for window-ends in [j, j+RecentK) and "previous"
-    * for [j+RecentK, j+2*RecentK). One shuffle, bounded fan-out of
-    * 2*RecentK rows per event — no per-message jobs. */
-  private def perMessageBurst(spark: SparkSession, tokensAll: DataFrame,
-      ends: Seq[Long]): Map[Long, Seq[(String, Long, Long, Double)]] = {
-    if (ends.isEmpty) return Map.empty
-    import spark.implicits._
-    val endsDf = broadcast(ends.toDF("w_end"))
-    val contrib = tokensAll
-      .withColumn("w_end_lo", col("msg_idx").cast("long"))
-      .withColumn("w_end_hi", col("msg_idx").cast("long") + 2L * RecentK - 1L)
-      .join(endsDf, col("w_end").between(col("w_end_lo"), col("w_end_hi")))
-      .withColumn("recent", col("w_end") < col("msg_idx") + RecentK)
-      .groupBy(col("w_end"), col("token"))
-      .agg(sum(when(col("recent"), 1L).otherwise(0L)).as("recent_cnt"),
-        sum(when(!col("recent"), 1L).otherwise(0L)).as("prev_cnt"))
-      .withColumn("ratio",
-        (col("recent_cnt") + lit(BurstEps)) / (col("prev_cnt") + lit(BurstEps)))
-      .filter(col("recent_cnt") >= 1 && col("ratio") >= BurstThreshold)
-      .orderBy(col("w_end"), col("ratio").desc, col("recent_cnt").desc, col("token"))
-      .collect()
-    contrib.groupBy(_.getAs[Long]("w_end")).map { case (e, rows) =>
-      e -> rows.toSeq.map(r => (r.getAs[String]("token"),
-        r.getAs[Long]("recent_cnt"), r.getAs[Long]("prev_cnt"),
-        r.getAs[Double]("ratio")))
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)

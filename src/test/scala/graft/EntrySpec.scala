@@ -24,17 +24,11 @@ class EntrySpec extends SparkSpec {
     // the signal existed but nothing enforced it. A query may not register
     // without a benched receipt, and stale receipts may not outlive their
     // query.
-    val in = getClass.getResourceAsStream("/perf_receipts.tsv")
-    assert(in != null, "perf_receipts.tsv missing from resources")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    val receipts =
-      try src.getLines().filterNot(l => l.isEmpty || l.startsWith("#"))
-        .map(_.split("\t")(0))
-        // reserved __-rows (e.g. __parallel_canary, the capture-time
-        // parallel-throughput context Bench scales thresholds by) are
-        // not query receipts
-        .filterNot(_.startsWith("__")).toSet
-      finally src.close()
+    // reserved __-rows (e.g. __parallel_canary, the capture-time
+    // parallel-throughput context Bench scales thresholds by) are not
+    // query receipts
+    val receipts = ReceiptRefresh.resourceReceipts()
+      .getOrElse(fail("perf_receipts.tsv missing from resources")).queries.keySet
     val registry = SparkEntry.queries.keySet
     assert(registry.subsetOf(receipts),
       s"registered without a benched receipt (run the full gate first): ${registry -- receipts}")

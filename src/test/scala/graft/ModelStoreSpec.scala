@@ -90,6 +90,21 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(dir.contains(s"graft_models_v2_${TmpDirs.md5Hex(s"$fp|$key")}"))
   }
 
+  test("fingerprint excludes exactly the harness mains, never query-path classes") {
+    // harness classes carry no fit logic, so a harness-only rebuild keeps
+    // the store warm; a class a query calls (Sessions.withConf runs the
+    // BPE training loop) must stay in the digest
+    def excluded(n: String) =
+      Seq(s"graft/$n.class", s"graft/$n$$.class", s"graft/$n$$anon$$1.class", s"graft/$n.tasty")
+        .map(_.matches(ModelStore.HarnessClasses)).distinct
+    Seq("AbRunner", "Bench", "Canary", "Explain", "HarnessGuard", "PlanAudit", "Profile",
+      "ReceiptRefresh", "ScaleGate", "SkewDemo", "Verify", "Warmup")
+      .foreach(n => assert(excluded(n) == Seq(true), n))
+    Seq("Sessions", "ModelStore", "RunDetectors", "SparkEntry", "Tables", "TmpDirs", "BenchX")
+      .foreach(n => assert(excluded(n) == Seq(false), n))
+    assert(!"graft/ops/Bench.class".matches(ModelStore.HarnessClasses))
+  }
+
   test("concurrent same-key callers fit exactly once and never throw") {
     val key = freshKey()
     val fits = new java.util.concurrent.atomic.AtomicInteger(0)

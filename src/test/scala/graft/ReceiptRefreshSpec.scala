@@ -47,11 +47,17 @@ class ReceiptRefreshSpec extends AnyFunSuite {
         |__parallel_canary	0.313
         |__parallel_canary_threads	32
         |""".stripMargin
-    assert(ReceiptRefresh.parseReceipts(body) == Map("alpha" -> 1.234, "beta" -> 0.5))
+    val parsed = ReceiptRefresh.parseReceipts(body)
+    assert(parsed.queries == Map("alpha" -> 1.234, "beta" -> 0.5))
+    assert(parsed.reserved == Map("__parallel_canary" -> 0.313, "__parallel_canary_threads" -> 32.0))
     // the COMMITTED resource parses and is non-trivial (the guard reads it)
     val committed = java.nio.file.Paths.get("src/main/resources/perf_receipts.tsv")
     assert(java.nio.file.Files.exists(committed))
-    val parsed = ReceiptRefresh.parseReceipts(java.nio.file.Files.readString(committed))
-    assert(parsed.size > 100 && parsed.values.forall(_ > 0))
+    val rows = ReceiptRefresh.parseReceipts(java.nio.file.Files.readString(committed))
+    assert(rows.queries.size > 100 && rows.queries.values.forall(_ > 0))
+    // Bench scales its thresholds by the reserved canary rows
+    assert(rows.reserved.keySet == Set("__parallel_canary", "__parallel_canary_threads"))
+    // the packaged resource is the same file
+    assert(ReceiptRefresh.resourceReceipts().contains(rows))
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.graft.GraftCoreShim
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s._
 import org.json4s.jackson.JsonMethods._
 
@@ -104,6 +107,47 @@ class RunDetectorsSpec extends SparkSpec {
     val each = parse(RunDetectors.run(spark,
       RunDetectors.Config(dataDir = fixture, split = "test", updateInterval = 1)))
     assert((each \ "periodic_snapshots").extract[List[JValue]].length == 3)
+  }
+
+  test("golden: snapshot, final and per-message payloads are byte-exact") {
+    // every detector read (three snapshot boundaries, the final state and
+    // each kept message's burst window) against the committed summaries;
+    // the second run excludes the duplicate, so snapshot cadence and the
+    // tracked set follow kept messages while counts follow the stream
+    def golden(name: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/test/resources/run_detectors_golden/$name.json")),
+      "UTF-8").stripSuffix("\n")
+    val base = RunDetectors.Config(dataDir = fixture, split = "test", updateInterval = 1,
+      showText = true, freqQueries = Seq("urgent"))
+    assert(RunDetectors.run(spark, base) == golden("test_interval1_text_urgent"))
+    assert(RunDetectors.run(spark, base.copy(excludeDuplicates = true)) ==
+      golden("test_interval1_text_urgent_exclude"))
+  }
+
+  test("Spark actions do not grow with the snapshot count") {
+    // every snapshot boundary is one more row of the same burst and
+    // top-token passes, never one more Spark action
+    def actions(interval: Int): (Int, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = n.incrementAndGet()
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      GraftCoreShim.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val json = try {
+        val out = RunDetectors.run(spark,
+          RunDetectors.Config(dataDir = fixture, split = "test", updateInterval = interval))
+        GraftCoreShim.drainListenerBus(spark.sparkContext)
+        out
+      } finally spark.listenerManager.unregister(listener)
+      ((parse(json) \ "periodic_snapshots").extract[List[JValue]].length, n.get)
+    }
+    val (snaps0, actions0) = actions(100)
+    val (snaps3, actions3) = actions(1)
+    assert(snaps0 == 0 && snaps3 == 3)
+    assert(actions0 > 0)
+    assert(actions3 == actions0, s"$actions0 actions at 0 snapshots, $actions3 at 3")
   }
 
   test("unknown argument fails fast; flags parse like the reference CLI") {
