@@ -73,7 +73,7 @@ for item in STREAM:
         bits[idx >> 3] |= 1 << (idx & 7)  # LSB-first, reference bytearray
 out.append(f"bloom_state\t{cap}\t{err}\t{' '.join(STREAM)}\t{bytes(bits).hex()}")
 
-seed, width, depth = 0, 28, 3  # cmsDims(0.1, 0.05): small enough to pin whole
+seed, width, depth = 0, 28, 3  # (ceil(e/0.1), ceil(ln(1/0.05))): small enough to pin whole
 salts = [hashlib.sha256(f"{seed}-{i}".encode()).digest() for i in range(depth)]
 table = [[0] * width for _ in range(depth)]
 for item in STREAM:

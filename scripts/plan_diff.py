@@ -10,7 +10,10 @@ without the plan changing are normalized away:
 
 - expression ids (`#123`), physical plan ids (`plan_id=123`) and RDD
   ids (`MapPartitionsRDD[128]`) count what the JVM built before;
-- object identity hashes (`PostingsAgg$$anon$1@6dd59886`);
+- object identity hashes (`PostingsAgg$$anon$1@6dd59886`) and JVM
+  lambda classes (`Dataset$$Lambda$3667/0x00007f6ef4fe9d60`);
+- lambda variable names, numbered by a JVM-wide counter
+  (`lambda x_4#12`);
 - source line numbers of RDD call sites (`at Relational.scala:1706`);
 - the fit-once model store directory, keyed by the build fingerprint
   (`graft_models_v2_<hex>`);
@@ -33,8 +36,13 @@ NOISE = [(re.compile(p), r) for p, r in [
     (r"plan_id=\d+", "plan_id=N"),
     (r"RDD\[\d+\]", "RDD[N]"),
     (r"@[0-9a-f]{4,}\b", "@H"),
-    (r"(\w+\.scala):\d+", r"\1:N"),
+    # anchored at a word start: unanchored, every position inside a long
+    # hex literal (a serialized sketch in a plan) retries `\w+`, which is
+    # quadratic in the literal's length
+    (r"\b(\w+\.scala):\d+", r"\1:N"),
     (r"graft_models_v2_[0-9a-f]+", "graft_models_v2_H"),
+    (r"\$\$Lambda\$\d+/0x[0-9a-f]+", "$$Lambda$N/0xH"),
+    (r"\b(lambda \w+_)\d+\b", r"\1N"),
     (r"(?<=/)(graft_\w*?[A-Za-z_])\d+\b", r"\1N"),
 ]]
 

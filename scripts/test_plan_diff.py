@@ -8,6 +8,7 @@ import io
 import os
 import sys
 import tempfile
+import time
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -19,6 +20,8 @@ BEFORE = """[info] welcome to sbt
 *(2) HashAggregate(keys=[user_id#12], functions=[count(1)], plan_id=41)
 +- FileScan parquet [user_id#12] Location: InMemoryFileIndex[file:/tmp/graft_stream_sess_out4412378812377/part], plan_id=40
    +- Project [graft_simhash16(tokens#7) AS h#9]
+      +- Filter exists(m#3, lambdafunction(lambda x_4#20.medium IN (a), lambda x_4#20, false))
+         +- MapPartitions Dataset$$Lambda$3667/0x00007f6ef4fe9d60@5b18, obj#8
 ========== text_top_tokens ==========
 *(1) Scan ExistingRDD[token#3] MapPartitionsRDD[128] at Text.scala:17
 """
@@ -46,7 +49,9 @@ class PlanDiffTest(unittest.TestCase):
     def test_temp_dir_suffix_expression_and_plan_ids_are_noise(self):
         after = (BEFORE.replace("graft_stream_sess_out4412378812377", "graft_stream_sess_out90017")
                  .replace("user_id#12", "user_id#305")
-                 .replace("plan_id=41", "plan_id=977"))
+                 .replace("plan_id=41", "plan_id=977")
+                 .replace("x_4#20", "x_13#20")
+                 .replace("$$Lambda$3667/0x00007f6ef4fe9d60", "$$Lambda$5458/0x00007f49b1546e68"))
         self.assertNotEqual(after, BEFORE)
         code, out = self.run_diff(BEFORE, after)
         self.assertEqual(code, 0, out)
@@ -71,6 +76,15 @@ class PlanDiffTest(unittest.TestCase):
         code, out = self.run_diff(BEFORE, after)
         self.assertEqual(code, 1)
         self.assertIn("text_top_tokens: only in BEFORE", out)
+
+    def test_long_literal_normalizes_in_linear_time(self):
+        # plans inline serialized sketches as hex literals of 200k+ chars
+        line = "Output [1]: [cms_estimate(0x" + "0A" * 50000 + ") at Text.scala:17]"
+        text = "========== q ==========\n" + line + "\n"
+        start = time.monotonic()
+        code, out = self.run_diff(text, text.replace(":17]", ":99]"))
+        self.assertLess(time.monotonic() - start, 5.0)
+        self.assertEqual(code, 0, out)
 
 
 if __name__ == "__main__":

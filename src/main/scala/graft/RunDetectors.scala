@@ -100,22 +100,9 @@ object RunDetectors {
     val splitDir =
       s"${c.dataDir}/${if (c.split == "train") c.trainSubdir else c.testSubdir}"
 
-    // ingest + preprocess + stream order (S1, F1–F5, T1–T5, O1/O2);
-    // msg_idx is the FULL-stream arrival index — what the detectors see.
-    // This inlines messageStream's construction (the allMessages flag
-    // must pass through), so it mirrors its two r10 fixes: the stream
-    // iterator drops FALSY bodies (run_detectors.py:25 — the loader now
-    // keeps them, like the reference's preprocess_messages), and the
-    // sort/rank key is a TOTAL order so the limit boundary and msg_idx
-    // are layout-independent even for identical duplicate messages.
-    val streamOrder = Seq(col("time").asc_nulls_last, col("body"),
-      col("src_file"), col("raw_body"))
-    val msgs = SccJsonSource.preprocessedMessages(spark, splitDir, c.allMessages)
-      .filter(col("body") =!= "")
-      .orderBy(streamOrder: _*)
-      .limit(c.maxMessages)
-      .withColumn("msg_idx",
-        row_number().over(Window.orderBy(streamOrder: _*)) - 1)
+    // ingest + preprocess + stream (S1, F1–F5, T1–T5, O1/O2); msg_idx is
+    // the FULL-stream arrival index — what the detectors see
+    val msgs = SccJsonSource.messageStream(spark, splitDir, c.maxMessages, c.allMessages)
       .select(col("msg_idx"), col("body"))
       .persist()
 
@@ -124,13 +111,18 @@ object RunDetectors {
 
     // exclusion happens AFTER detectors saw the message (trap #2): kept
     // messages drive `processed`, the snapshot cadence, and counters —
-    // detector state keeps every message
+    // detector state keeps every message. The kept rank also leaves
+    // `kept` in one partition in arrival order, so `avg_score` below sums
+    // its doubles in the reference's order: summed in another order, the
+    // last digits of the reported average change.
     val kept = (if (c.excludeDuplicates) scored.filter(!col("is_duplicate")) else scored)
       .withColumn("kept_idx",
         row_number().over(Window.orderBy(col("msg_idx"))) - 1)
       .persist()
 
-    val streamed = scored.count()
+    // count the stream itself, not `scored`: its cache is then full before
+    // the dup-scoring joins read it, and AQE re-plans fewer of their stages
+    val streamed = msgs.count()
     val dupRow = kept.agg(
       count(lit(1)).as("n"),
       sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("total"),
@@ -143,9 +135,9 @@ object RunDetectors {
     val tokensAll = scored
       .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
       .filter(col("token") =!= "").persist()
-    // tracked-set / cadence token frame: kept messages only
+    // tracked-set token frame: kept messages only
     val tokensKept = kept
-      .select(col("kept_idx"), col("msg_idx"), explode(split(col("body"), " ")).as("token"))
+      .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
       .filter(col("token") =!= "").persist()
 
     // snapshot boundaries: the msg_idx at which each completed interval's
@@ -154,9 +146,9 @@ object RunDetectors {
     val boundaries = kept
       .filter((col("kept_idx") + 1) % c.updateInterval === 0)
       .select(((col("kept_idx") + 1) / c.updateInterval - 1).cast("long").as("snap"),
-        col("kept_idx"), col("msg_idx"))
+        col("msg_idx"))
       .collect()
-      .map(r => (r.getAs[Long]("snap"), r.getAs[Int]("kept_idx"), r.getAs[Int]("msg_idx")))
+      .map(r => (r.getAs[Long]("snap"), r.getAs[Int]("msg_idx")))
       .sortBy(_._1)
 
     // top tokens at every boundary in one pass: candidate set = kept
@@ -166,11 +158,12 @@ object RunDetectors {
     // stream — tracked set = every kept token (incl. the trailing partial
     // period's final periodic_update, run_detectors.py:212-214), counts
     // over the whole stream — under the key FinalSnap (empty on an empty
-    // stream: no token sits at or before index -1).
+    // stream: no token sits at or before index -1). A kept message is at or
+    // before a boundary in kept order iff it is in msg_idx order.
     val bdf = spark.createDataFrame(boundaries.toSeq :+
-        ((FinalSnap, (processed - 1).toInt, (streamed - 1).toInt)))
-      .toDF("snap", "kept_bound", "msg_bound")
-    val tracked = tokensKept.join(broadcast(bdf), col("kept_idx") <= col("kept_bound"))
+        ((FinalSnap, (streamed - 1).toInt)))
+      .toDF("snap", "msg_bound")
+    val tracked = tokensKept.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
       .select(col("snap"), col("token")).distinct()
     val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
       .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
@@ -214,7 +207,7 @@ object RunDetectors {
     // window over the full stream (W2), and the window ending at each
     // kept message when they are shown
     import spark.implicits._
-    val ends = (boundaries.map(_._3.toLong).toSeq ++ Seq(streamed - 1) ++
+    val ends = (boundaries.map(_._2.toLong).toSeq ++ Seq(streamed - 1) ++
       rows.map(_.getAs[Int]("msg_idx").toLong)).distinct
     val bursts: Map[Long, Seq[(String, Long, Long, Double)]] =
       burstFrame(tokensAll, ends.toDF("w_end"))
@@ -240,7 +233,7 @@ object RunDetectors {
           ("prev_count" -> prev) ~
           ("representative" -> token)
       }
-    val snapshotsJson = boundaries.map { case (snap, _, msgBound) =>
+    val snapshotsJson = boundaries.map { case (snap, msgBound) =>
       val cumDups = dupsSoFar.filter(_._1 <= snap).map(_._2).sum
       ("message_count" -> ((snap + 1) * c.updateInterval)) ~
         ("top_10_tokens" -> tokenDict(snapTop.getOrElse(snap, Nil))) ~
@@ -360,12 +353,14 @@ object RunDetectors {
     * top-5 so sf0.001 already yields two snapshots. The stream is capped
     * at [[SnapMaxMsgs]] — the CLI's own `--max-messages` bound (the
     * reference defaults to 200) — which is also what keeps this query
-    * corpus-size-INVARIANT: cumulative-per-snapshot statistics are
-    * inherently O(stream × snapshots), so the bound, not the corpus,
-    * sets the work. The cap is applied BEFORE the ranking — a global
-    * orderBy+limit plans as TakeOrderedAndProject (per-partition top-N,
-    * driver merge of ≤SnapMaxMsgs rows per partition, no corpus
-    * exchange) — so the rank stage only ever sees the capped stream
+    * corpus-size-INVARIANT: [[snapshotSummary]] joins every token to
+    * every later snapshot boundary, O(stream × snapshots), so the bound,
+    * not the corpus, sets the work. (Cumulative counts are prefix sums,
+    * so a linear form exists: ROADMAP direction 3.) The cap is applied
+    * BEFORE the ranking — a global orderBy+limit plans as
+    * TakeOrderedAndProject (per-partition top-N, driver merge of
+    * ≤SnapMaxMsgs rows per partition, no corpus exchange) — so the rank
+    * stage only ever sees the capped stream
     * (review finding: ranking first range-shuffled and cached the whole
     * corpus to immediately discard all but 500 rows). */
   private val SnapInterval = 25

@@ -167,8 +167,4 @@ object Blake2b {
     }
     out
   }
-
-  /** The 16-byte digest as an unsigned big-endian BigInt — the reference's
-    * `int.from_bytes(h.digest(), "big")` step. */
-  def bigIntOf(digest: Array[Byte]): BigInt = BigInt(1, digest)
 }

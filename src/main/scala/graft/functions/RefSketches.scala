@@ -58,11 +58,6 @@ object RefSketches {
   def cmsSaltStates(seed: Int, depth: Int): Array[Array[Long]] =
     cmsSalts(seed, depth).map(Blake2b.keyedState(_, 16))
 
-  /** Reference sizing: width=⌈e/ε⌉, depth=⌈ln(1/δ)⌉
-    * (count_min_sketch.py:from_error_delta). 544×7 at (0.005, 1e-3). */
-  def cmsDims(epsilon: Double, delta: Double): (Int, Int) =
-    (math.ceil(math.E / epsilon).toInt, math.ceil(math.log(1.0 / delta)).toInt)
-
   /** Reference sizing (bloom_filter.py:26-28). Python's round() is
     * half-to-even, as is math.rint. */
   def bloomDims(capacity: Long, errorRate: Double): (Int, Int) = {

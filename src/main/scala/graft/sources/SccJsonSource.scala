@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{Lemmatizer, Text}
@@ -27,15 +28,15 @@ import graft.functions.{Lemmatizer, Text}
   *    filter, so a token whose lemma is a stopword — "cans"→"can" — is
   *    removed; r10 review finding: the stages were inverted here);
   *  - O1/O2 stream construction: global sort by time (missing → last, the
-  *    reference's float("inf") sentinel, run_detectors.py:29) + limit;
-  *    the stream iterator is also where FALSY (post-preprocessing empty)
-  *    bodies drop (run_detectors.py:25) — preprocess_messages itself
-  *    KEEPS a message whose body preprocesses to "", so
-  *    [[preprocessedMessages]] keeps it too.
+  *    reference's float("inf") sentinel, run_detectors.py:29), arrival
+  *    index + cap; the stream iterator is also where FALSY (post-
+  *    preprocessing empty) bodies drop (run_detectors.py:25) —
+  *    preprocess_messages itself KEEPS a message whose body preprocesses
+  *    to "", so [[preprocessedMessages]] keeps it too.
   *
   * At scale: the JSON scan parallelizes per file; everything after it is
-  * map-only until the final sort, which TakeOrderedAndProject bounds when a
-  * limit is present.
+  * map-only until the stream's arrival rank, a one-task window (a bounded
+  * top-N below it only when the cap is ≤ 1000, see [[messageStream]]).
   */
 object SccJsonSource {
 
@@ -116,20 +117,27 @@ object SccJsonSource {
           "Description for file \\d+:", ""))
   }
 
-  /** O1 + O2: the reference's message stream — global time order, missing
-    * time last, bounded at maxMessages (run_detectors.py:14-34). Falsy
-    * (empty-after-preprocessing) bodies drop HERE, like the reference's
-    * stream iterator (run_detectors.py:25). The sort key is a total
-    * order: (time, body, src_file, raw_body) — time+body alone tie for
-    * identical scam messages, the exact duplicate corpus this pipeline
-    * targets, and a non-total key makes the limit boundary layout-
-    * dependent (r10 review finding). */
-  def messageStream(s: SparkSession, dir: String, maxMessages: Int = 200): DataFrame =
-    preprocessedMessages(s, dir)
+  /** O1 + O2: the reference's message stream with its 0-based arrival
+    * index `msg_idx` — global time order, missing time last, capped at
+    * maxMessages (run_detectors.py:14-34). Falsy (empty-after-
+    * preprocessing) bodies drop HERE, like the reference's stream
+    * iterator (run_detectors.py:25). The sort key is a total order:
+    * (time, body, src_file, raw_body) — time+body alone tie for identical
+    * scam messages, and a non-total key makes the cap boundary and the
+    * index layout-dependent (r10 review finding). The cap filters the raw
+    * `row_number`, a shape Spark's window group-limit rule plans as a
+    * bounded top-N below the window for caps ≤ 1000 and as a plain sort
+    * above (a filter on `row_number() - 1` hides the shape; an
+    * `orderBy.limit(n)` allocates 2·n slots per task, so a cap of 1e8 ran
+    * out of memory). */
+  def messageStream(s: SparkSession, dir: String, maxMessages: Int,
+      allMessages: Boolean = false): DataFrame =
+    preprocessedMessages(s, dir, allMessages)
       .filter(col("body") =!= "")
-      .orderBy(col("time").asc_nulls_last, col("body"), col("src_file"),
-        col("raw_body"))
-      .limit(maxMessages)
+      .withColumn("msg_idx", row_number().over(Window.orderBy(
+        col("time").asc_nulls_last, col("body"), col("src_file"), col("raw_body"))))
+      .filter(col("msg_idx") <= maxMessages)
+      .withColumn("msg_idx", col("msg_idx") - 1)
 
   /** S2: parquet cache-or-compute keyed by md5 of the config string (the
     * reference's pickle memoization, base_dataset_loader.py:36-54). */

@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
@@ -261,16 +260,14 @@ object SccLoaderGate {
   /** O1+O2 + the stream's falsy-body drop, through the full loader
     * (preprocessing included — the oracle replays the T-chain with the
     * same DICT + suffix-rule SQL twins the text_preprocess gate uses).
-    * The rank column pins the ORDER, not just the membership, of the
-    * limit window; the window is post-limit (≤$StreamMax rows), so the
-    * single-partition row_number is bounded by construction. */
+    * The rank column is the stream's 1-based arrival index: it pins the
+    * ORDER, not just the membership, of the capped stream. The cap
+    * (`StreamMax`) is below the window group-limit threshold, so the
+    * stream's single-partition rank window reads a bounded top-N. */
   private def loaderStream(s: SparkSession, d: String): DataFrame = {
     val dir = ensureFixture(s, d)
-    val w = Window.orderBy(col("time").asc_nulls_last, col("body"),
-      col("src_file"), col("raw_body"))
-    SccJsonSource.messageStream(s, dir, maxMessages = StreamMax)
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .select(col("rank"), col("time"), col("body"))
+    SccJsonSource.messageStream(s, dir, StreamMax)
+      .select((col("msg_idx") + 1).as("rank"), col("time"), col("body"))
       .orderBy(col("rank"))
   }
 

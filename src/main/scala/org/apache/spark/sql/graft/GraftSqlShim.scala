@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bridge into `private[sql]` plan construction: the one sanctioned way for
@@ -24,17 +25,17 @@ object GraftSqlShim {
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** Every interpreted-fallback (CodegenFallback) expression in a physical
-    * plan, by prettyName — PlanAudit's r15 detector. The traversal must
-    * live here because the plan tree HIDES subtrees from a plain
-    * `foreach`: `AdaptiveSparkPlanExec` holds its current physical plan
-    * as a field, not a child (the audit's first cut silently saw only
-    * the AQE root and reported every shuffling query clean), query
-    * stages wrap their subtree the same way, and subquery expressions
-    * carry whole plans inside expression trees. */
-  def interpretedFallbacks(plan: org.apache.spark.sql.execution.SparkPlan): Set[String] = {
-    val fb = scala.collection.mutable.SortedSet[String]()
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = p.foreach { node =>
+  /** Every node of a physical plan. The traversal must live here because
+    * the plan tree HIDES subtrees from a plain `foreach`:
+    * `AdaptiveSparkPlanExec` holds its current physical plan as a field,
+    * not a child (PlanAudit's first cut silently saw only the AQE root and
+    * reported every shuffling query clean), query stages wrap their
+    * subtree the same way, and subquery expressions carry whole plans
+    * inside expression trees. */
+  def planNodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val out = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    def walk(p: SparkPlan): Unit = p.foreach { node =>
+      out += node
       node match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           walk(a.executedPlan)
@@ -42,27 +43,33 @@ object GraftSqlShim {
           walk(q.plan)
         case _ => ()
       }
-      node.expressions.foreach(_.foreach { e =>
-        e match {
-          case s: org.apache.spark.sql.execution.ExecSubqueryExpression => walk(s.plan)
-          case _ => ()
-        }
-        e match {
-          case _: org.apache.spark.sql.execution.ExecSubqueryExpression => ()
-          // lambda plumbing inside a HOF is CodegenFallback by
-          // inheritance but carries no work of its own — the HOF node
-          // itself is the signal
-          case _: org.apache.spark.sql.catalyst.expressions.LambdaFunction |
-              _: org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable => ()
-          case c: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback =>
-            fb += (if (c.prettyName.nonEmpty) c.prettyName
-                   else c.getClass.getSimpleName)
-          case _ => ()
-        }
+      node.expressions.foreach(_.foreach {
+        case s: org.apache.spark.sql.execution.ExecSubqueryExpression => walk(s.plan)
+        case _ => ()
       })
     }
     walk(plan)
-    fb.toSet
+    out.toSeq
+  }
+
+  /** Every interpreted-fallback (CodegenFallback) expression in a physical
+    * plan, by prettyName — PlanAudit's r15 detector. */
+  def interpretedFallbacks(plan: SparkPlan): Set[String] =
+    planNodes(plan).flatMap(_.expressions.flatMap(_.collect {
+      // lambda plumbing inside a HOF is CodegenFallback by inheritance
+      // but carries no work of its own — the HOF node itself is the signal
+      case _: org.apache.spark.sql.execution.ExecSubqueryExpression |
+          _: org.apache.spark.sql.catalyst.expressions.LambdaFunction |
+          _: org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable => None
+      case c: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback =>
+        Some(if (c.prettyName.nonEmpty) c.prettyName else c.getClass.getSimpleName)
+    }.flatten)).toSet
+
+  /** Number of window operators with no partition spec in a physical plan:
+    * each runs its whole input through one task. */
+  def unpartitionedWindows(plan: SparkPlan): Int = planNodes(plan).count {
+    case w: org.apache.spark.sql.execution.window.WindowExec => w.partitionSpec.isEmpty
+    case _ => false
   }
 
   /** Measured row count of every BroadcastNestedLoopJoin build side in a
@@ -71,15 +78,10 @@ object GraftSqlShim {
     * NAME only, so an entry whose broadcast frame silently grew with the
     * data would keep passing. Executing just the build-side subtree (take
     * cap+1 — bounded work even against an unbounded frame) turns the
-    * assertion into a number the audit can enforce. Same AQE-aware
-    * traversal as [[interpretedFallbacks]]; broadcast/reuse wrappers are
-    * stripped so the take runs on a row-producing subtree. */
-  def bnljBuildRows(spark: SparkSession,
-                    plan: org.apache.spark.sql.execution.SparkPlan,
-                    cap: Int): Seq[Long] = {
-    import org.apache.spark.sql.execution.SparkPlan
+    * assertion into a number the audit can enforce. Broadcast/reuse
+    * wrappers are stripped so the take runs on a row-producing subtree. */
+  def bnljBuildRows(spark: SparkSession, plan: SparkPlan, cap: Int): Seq[Long] = {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    val counts = scala.collection.mutable.ArrayBuffer[Long]()
     def strip(p: SparkPlan): SparkPlan = p match {
       case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
         strip(e.child)
@@ -98,22 +100,14 @@ object GraftSqlShim {
     // (printed, never flagged: infrastructure, not a bound violation).
     def logicalOf(p: SparkPlan): Option[LogicalPlan] =
       p.logicalLink.orElse(p.children.view.flatMap(logicalOf).headOption)
-    def walk(p: SparkPlan): Unit = p.foreach {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(q.plan)
-      case b: BroadcastNestedLoopJoinExec =>
-        val side = b.buildSide match {
-          case org.apache.spark.sql.catalyst.optimizer.BuildLeft => b.left
-          case org.apache.spark.sql.catalyst.optimizer.BuildRight => b.right
-        }
-        counts += logicalOf(strip(side)).orElse(logicalOf(side))
-          .map(lp => ofRows(spark, lp).take(cap + 1).length.toLong)
-          .getOrElse(-1L)
-      case _ => ()
+    planNodes(plan).collect { case b: BroadcastNestedLoopJoinExec =>
+      val side = b.buildSide match {
+        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => b.left
+        case org.apache.spark.sql.catalyst.optimizer.BuildRight => b.right
+      }
+      logicalOf(strip(side)).orElse(logicalOf(side))
+        .map(lp => ofRows(spark, lp).take(cap + 1).length.toLong)
+        .getOrElse(-1L)
     }
-    walk(plan)
-    counts.toSeq
   }
 }

@@ -399,4 +399,16 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("LessThan(doc_id"),
       s"no train-half documents scan may appear in the steady plan:\n$p")
   }
+
+  test("PlanAudit's empty-window detector: unpartitioned windows only") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.GraftSqlShim
+    val df = spark.range(10).withColumn("g", col("id") % 3)
+    def windows(c: org.apache.spark.sql.Column) =
+      GraftSqlShim.unpartitionedWindows(df.withColumn("w", c).queryExecution.executedPlan)
+    assert(windows(count(lit(1)).over()) == 1)
+    assert(windows(row_number().over(Window.orderBy(col("id")))) == 1)
+    assert(windows(row_number().over(Window.partitionBy(col("g")).orderBy(col("id")))) == 0)
+  }
 }

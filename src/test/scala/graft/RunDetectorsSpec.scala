@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.graft.GraftCoreShim
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{GlobalLimitExec, QueryExecution, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s._
 import org.json4s.jackson.JsonMethods._
+import graft.sources.SccJsonSource
 
 /** End-to-end CLI twin on the FIXTURES.md fixture: summary numbers computed
   * by hand from the fixture contents (SURVEY.md §5.4). */
@@ -148,6 +151,45 @@ class RunDetectorsSpec extends SparkSpec {
     assert(snaps0 == 0 && snaps3 == 3)
     assert(actions0 > 0)
     assert(actions3 == actions0, s"$actions0 actions at 0 snapshots, $actions3 at 3")
+  }
+
+  test("Spark jobs per run stay within one job across identical runs") {
+    // each call starts from an empty cache, as a fresh CLI process does
+    // (the CLI never unpersists). AQE may still turn the dup scorer's
+    // final join into a broadcast join at run time, depending on which
+    // stage finishes first: one job either way.
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val c = RunDetectors.Config(dataDir = fixture, split = "test")
+    val counts = (1 to 5).map { _ =>
+      spark.catalog.clearCache()
+      GraftCoreShim.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        jobs.set(0)
+        RunDetectors.run(spark, c)
+        GraftCoreShim.drainListenerBus(spark.sparkContext)
+        jobs.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(counts.min > 0)
+    assert(counts.max - counts.min <= 1, s"jobs per run: ${counts.mkString(", ")}")
+  }
+
+  test("stream cap plans no top-N above the window group-limit threshold") {
+    // plan only: a top-N allocates slots for its whole limit per task, so
+    // a cap of 1e8 must plan as a sort, never as a TakeOrderedAndProject
+    def nodes(cap: Int) = GraftSqlShim.planNodes(SccJsonSource
+      .messageStream(spark, s"$fixture/test_convs", cap).queryExecution.executedPlan)
+    Seq(100000000, Int.MaxValue).foreach { cap =>
+      val bounded = nodes(cap).filter(n =>
+        n.isInstanceOf[TakeOrderedAndProjectExec] || n.isInstanceOf[GlobalLimitExec])
+      assert(bounded.isEmpty, s"cap $cap plans ${bounded.map(_.nodeName).mkString(", ")}")
+    }
+    val topN = nodes(200).collect { case t: TakeOrderedAndProjectExec => t.limit }
+    assert(topN.forall(_ <= 1000), s"top-N limits ${topN.mkString(", ")}")
   }
 
   test("unknown argument fails fast; flags parse like the reference CLI") {

@@ -35,10 +35,17 @@ class SccSourceSpec extends SparkSpec {
 
   test("O1/O2: time order with missing time last, bounded stream") {
     val stream = SccJsonSource.messageStream(spark, fixture, maxMessages = 200)
-    val times = stream.select("time").collect().map(r =>
-      if (r.isNullAt(0)) Long.MaxValue else r.getLong(0))
+      .orderBy(col("msg_idx"))
+    val rows = stream.select("msg_idx", "time").collect()
+    // msg_idx is the dense 0-based arrival index in stream order
+    assert(rows.map(_.getInt(0)).toSeq == rows.indices)
+    val times = rows.map(r => if (r.isNullAt(1)) Long.MaxValue else r.getLong(1))
     assert(times.sameElements(times.sorted), "stream must be time-ordered, nulls last")
     assert(times.last == Long.MaxValue, "missing-time message must sort last")
+    // the cap keeps exactly the first arrivals
+    val capped = SccJsonSource.messageStream(spark, fixture, maxMessages = 2)
+      .select("msg_idx").collect().map(_.getInt(0)).toSet
+    assert(capped == Set(0, 1))
   }
 
   test("S2: cache-or-compute round trip is stable and hits the cache") {
