@@ -5,13 +5,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_ONLY=a,b,c — bench just those queries (local profiling)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = HarnessGuard.selectedQueries
     def jstr(v: String): String =
       "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\r\n\t]", " ") + "\""
@@ -39,7 +33,7 @@ object Bench {
     // untimed warmup — the shared Warmup.run entry point (session first-job
     // init, streaming state-store/RocksDB + per-family stateful-operator
     // first use, IVF index build, decode + token-window first-use) so Bench
-    // and Profile agree on what "steady state" means.
+    // and AbRunner agree on what "steady state" means.
     // The wall budget scales with the canary (r12 verdict #1a): 0.23 s is
     // the quiet-box single-thread baseline for the fixed LCG loop, so
     // canary/0.23 is a direct machine-speed factor — a loaded box gets up
@@ -81,41 +75,16 @@ object Bench {
     // it can't eat the whole bench (round 9 lost every number to one
     // never-terminating query at position ~157). 90 s default — the
     // slowest warmed sf0.1 query is ~6 s, first-use artifact builds ~8 s.
-    // Try-parse with fallback (r10 ADVICE): a malformed value used to
-    // throw NumberFormatException before any query ran — losing the round
-    // exactly the way the watchdog exists to prevent.
-    val timeoutSec = sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
-      .getOrElse {
-        sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT").foreach(v =>
-          println(s"""{"metric":"bad_env","name":"SPARK_GRAFT_QUERY_TIMEOUT","value":${jstr(v)},"fallback":"90"}"""))
-        90
-      }
+    val timeoutSec = HarnessGuard.timeoutSec(sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT"), 90, v =>
+      println(s"""{"metric":"bad_env","name":"SPARK_GRAFT_QUERY_TIMEOUT","value":${jstr(v)},"fallback":"90"}"""))
     // fixed alphabetical run order: Map iteration order shifts whenever the
     // registry grows, which confounds round-over-round per-query diffs with
     // "which query happened to run after which" (r7 verdict #7)
-    // Env-gated synthetic regression (remeasure-hardening demo, r16
-    // verdict #2): SPARK_GRAFT_DEMO_REGRESSION=<name> injects a 3 s sleep
-    // into that query's timed run AND its remeasure, so a genuine
-    // (persistent) regression can be demonstrated to surface as a
-    // confirmed_regression line instead of self-excusing via one lucky
-    // re-run. Never set in official runs.
-    val demoRegression = sys.env.get("SPARK_GRAFT_DEMO_REGRESSION")
-    // Loud marker (r17 ADVICE): an accidentally-inherited demo env var
-    // must be visible in the run log AND stamped into the artifacts (see
-    // the total line / perquery JSON below), so a demo run can never
-    // masquerade as an official record.
-    demoRegression.foreach(n =>
-      println(s"""{"metric":"demo_regression_active","name":${jstr(n)},"note":"synthetic 3s sleep injected; NOT an official record"}"""))
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      if (demoRegression.contains(name)) Thread.sleep(3000)
       // a failed query must be VISIBLE in bench output, not a suspiciously
       // fast wall-time: record the exception per query (r4 verdict)
-      val err: Option[String] =
-        HarnessGuard.run(spark, name, timeoutSec) { fn(spark, sfDir).count() }
-          .left.toOption
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (dt, r) = HarnessGuard.timed(spark, name, timeoutSec) { fn(spark, sfDir).count() }
+      val err = r.left.toOption
       // stream each result AS it lands (r9 verdict #3): an rc-124 kill
       // used to leave zero output because everything printed at the end;
       // now the tail of a killed run still carries per-query walls. The
@@ -128,12 +97,6 @@ object Bench {
       // tail truncation) — not here too, or each failure would double.
       val errField = err.map(m => s""","err":${jstr(m)}""").getOrElse("")
       println(s"""{"metric":"query_done","name":${jstr(name)},"wall":${jstr(f(dt))}$errField}""")
-      // Queries legitimately persist() intermediates but can't unpersist
-      // before the action runs; without this, ~10 cached frames accumulate
-      // over the full-registry run and evict each other (r3: untouched
-      // queries slowed 3-4x mid-run from cache churn). Drop them between
-      // queries.
-      spark.catalog.clearCache()
       (name, dt, err)
     }
     // The driver captures a bounded output TAIL, so the parseable summary
@@ -166,7 +129,7 @@ object Bench {
     // shouldn't hide.
     val refParCanary = reserved.getOrElse("__parallel_canary", parCanary)
     // Thread-count parity (r14 ADVICE #1): the reference canary was
-    // captured at __parallel_canary_threads threads (Profile's cpus);
+    // captured at __parallel_canary_threads threads (the capture's cpus);
     // comparing a parallel wall measured at a DIFFERENT thread count
     // against it mis-scales the suspect threshold silently. When the
     // counts differ, re-run the canary at the capture count so the
@@ -241,13 +204,10 @@ object Bench {
     // confirmed — the flag stands via n_suspects).
     val remeasured: Map[String, (Double, Boolean)] =
       results.collect { case (name, wall, None) if isSuspect(name, wall) =>
-        val t0 = System.nanoTime()
-        if (demoRegression.contains(name)) Thread.sleep(3000)
-        val err = HarnessGuard.run(spark, name, timeoutSec) {
+        val (dt, out) = HarnessGuard.timed(spark, name, timeoutSec) {
           selected(name)(spark, sfDir).count()
-        }.left.toOption
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
+        }
+        val err = out.left.toOption
         val r = receipts(name) // isSuspect implies a receipt row exists
         val atReceipt = err.isEmpty && dt <= 1.5 * r * parScale
         val confirmed = err.isEmpty && dt > 2 * r * parScale
@@ -296,9 +256,6 @@ object Bench {
       val r = rec.map { case (n, _, _) => receipts(n) }.sum
       if (r > 0 && boxFactor > 0) w / (boxFactor * r) else 0.0
     }
-    // demo stamp for artifacts (r17 ADVICE) — absent entirely in real runs
-    val demoField = demoRegression
-      .map(n => s""","demo_regression":${jstr(n)}""").getOrElse("")
     // Full per-query artifact FILE (r12 verdict #6): the driver's bounded
     // output tail truncates the per_query line to ~69 of 179 entries, so
     // cross-round per-query diffs depended on truncation luck. The
@@ -322,13 +279,13 @@ object Bench {
           s""""warmup_skipped":$warmupSkipped,"n_suspects":$nSuspects,""" +
           s""""n_confirmed_regressions":$nConfirmed,"confirmed_regressions":$confJson,""" +
           s""""wall_receipt_normalized":${f(wallReceiptNormalized)},"box_factor":${f(boxFactor)},""" +
-          s""""n_no_receipt":$nNoReceipt,"sf":${jstr(sfDir)}$demoField,""" +
+          s""""n_no_receipt":$nNoReceipt,"sf":${jstr(sfDir)},""" +
           s""""queries":$qs,"queries_remeasure":$remJson,"query_errors":$errsJson}""" + "\n")
       println(s"""{"metric":"perquery_artifact","path":${jstr(perQueryOut)}}""")
     } catch { case e: Throwable =>
       println(s"""{"metric":"perquery_artifact_error","err":${jstr(e.getClass.getName)}}""")
     }
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"errors":$nErr,"wall_remeasure":${jstr(f(totalRemeasure))},"wall_receipt_normalized":${jstr(f(wallReceiptNormalized))},"box_factor":${jstr(f(boxFactor))},"canary_drift":${jstr(f(canaryDrift))},"canary_start":${jstr(f(canaryStart))},"canary_end":${jstr(f(canaryEnd))},"parallel_canary":${jstr(f(parCanary))},"parallel_canary_ref":${jstr(f(refParCanary))},"warmup_skipped":${jstr(warmupSkipped.toString)},"n_suspects":${jstr(nSuspects.toString)},"n_confirmed_regressions":${jstr(nConfirmed.toString)},"n_no_receipt":${jstr(nNoReceipt.toString)}$demoField,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"errors":$nErr,"wall_remeasure":${jstr(f(totalRemeasure))},"wall_receipt_normalized":${jstr(f(wallReceiptNormalized))},"box_factor":${jstr(f(boxFactor))},"canary_drift":${jstr(f(canaryDrift))},"canary_start":${jstr(f(canaryStart))},"canary_end":${jstr(f(canaryEnd))},"parallel_canary":${jstr(f(parCanary))},"parallel_canary_ref":${jstr(f(refParCanary))},"warmup_skipped":${jstr(warmupSkipped.toString)},"n_suspects":${jstr(nSuspects.toString)},"n_confirmed_regressions":${jstr(nConfirmed.toString)},"n_no_receipt":${jstr(nNoReceipt.toString)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

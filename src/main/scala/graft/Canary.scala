@@ -1,7 +1,8 @@
 package graft
 
-/** Machine-speed canaries shared by Bench and Profile, so receipt capture
-  * (Profile) and receipt checking (Bench) measure load the same way.
+/** Machine-speed canaries shared by the harness mains, so receipt capture
+  * (ReceiptRefresh, AbRunner) and receipt checking (Bench) measure load the
+  * same way.
   *
   * [[single]] — a fixed single-threaded LCG loop: per-core speed.
   * [[parallel]] — the SAME loop on N threads timed as one wall: the box's

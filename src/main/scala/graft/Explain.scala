@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: dumps `explain("formatted")` for the named queries
   * (or a default headline set) so scan pushdown (PushedFilters/ReadSchema),
   * join strategy (BroadcastHashJoin vs SortMergeJoin), and WholeStageCodegen
@@ -17,12 +15,8 @@ object Explain {
       else Seq("rel_pricing_summary", "rel_scan_filter", "rel_join_broadcast_part",
         "rel_join_multiway_revenue", "rel_topk_orders", "text_top_tokens",
         "dedup_minhash_lsh")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = Sessions.builder("4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXPLAIN_EXEC=1: execute the query first and print the

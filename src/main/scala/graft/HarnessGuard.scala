@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, TimeoutException}
 
 /** Per-query watchdog for the driver harnesses (r9 verdict #3): one
@@ -12,13 +12,44 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, 
   * moves on. A task stuck in non-interruptible compute leaks its thread
   * and task slot, which is the accepted cost: round 9 lost ALL of its
   * correctness and bench signal to one hung query (and round 6 before
-  * it), so bounded per-query loss strictly dominates.
+  * it), so bounded per-query loss strictly dominates. Bench, Verify,
+  * ReceiptRefresh and AbRunner time every query run through [[timed]].
   *
   * The job group is set inside the worker thread (job groups are
   * thread-local), so only the guarded body's jobs are cancelled; the
   * harness's own bookkeeping jobs are unaffected.
   */
 object HarnessGuard {
+  /** The registry filtered by `SPARK_GRAFT_ONLY=a,b,c` (local iteration;
+    * the driver never sets it, so driver runs see every query). */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet) match {
+      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
+      case None => SparkEntry.queries
+    }
+
+  /** A raw `SPARK_GRAFT_QUERY_TIMEOUT` value as seconds: absent means
+    * `default`; a malformed or non-positive value calls `warn` with the
+    * raw text and also means `default` (r10 ADVICE: a bad value used to
+    * throw before any query ran — losing the round exactly the way the
+    * watchdog exists to prevent). */
+  def timeoutSec(raw: Option[String], default: Int, warn: String => Unit): Int =
+    raw.flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
+      .getOrElse { raw.foreach(warn); default }
+
+  /** One harness query run: [[run]] under the watchdog, its wall in
+    * seconds, then `clearCache()` OUTSIDE that wall — queries persist
+    * intermediates they cannot unpersist before the action, and without
+    * the drop ~10 cached frames accumulate over a full-registry run and
+    * evict each other (r3: untouched queries slowed 3-4x mid-run). */
+  def timed[T](spark: SparkSession, name: String, timeoutSec: Int)(body: => T): (Double, Either[String, T]) = {
+    val t0 = System.nanoTime()
+    val r = run(spark, name, timeoutSec)(body)
+    val dt = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache()
+    (dt, r)
+  }
+
   /** Run `body` with a wall-clock bound. Returns Right(result) or
     * Left(errorMessage) — timeouts read `TIMEOUT after Ns`. */
   def run[T](spark: SparkSession, name: String, timeoutSec: Int)(body: => T): Either[String, T] = {

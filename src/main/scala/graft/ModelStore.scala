@@ -58,7 +58,7 @@ object ModelStore {
     * or copied byte-identical builds independently, so in the shared-store
     * deployment each driver host derived its own key and silently refit
     * into a private prefix, defeating the fit-once sharing. And the
-    * MEASUREMENT-HARNESS classes (Bench/Profile/Warmup/… below) are
+    * MEASUREMENT-HARNESS classes (Bench/AbRunner/Warmup/… below) are
     * excluded: they contain no fit logic, so a harness-only rebuild — the
     * most common kind during perf work, and the one that produced the
     * r14 cold-store bench outlier — keeps the store warm. Only mains that
@@ -68,7 +68,7 @@ object ModelStore {
     * constant when the code source is unreadable (never in this harness;
     * the behavior is then exactly pre-r14). */
   private[graft] val HarnessClasses =
-    "graft/(AbRunner|Bench|Canary|Explain|HarnessGuard|PlanAudit|Profile|ReceiptRefresh|ScaleGate|SkewDemo|Verify|Warmup)(\\$.*)?\\.(class|tasty)"
+    "graft/(AbRunner|Bench|Canary|Explain|HarnessGuard|PlanAudit|ReceiptRefresh|ScaleGate|Verify|Warmup)(\\$.*)?\\.(class|tasty)"
   private[graft] lazy val buildFingerprint: String = {
     try {
       val src = getClass.getProtectionDomain.getCodeSource

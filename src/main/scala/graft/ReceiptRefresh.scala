@@ -4,7 +4,7 @@ package graft
   * a uniform 7–12 % above receipts AFTER box normalization — the receipt
   * set had gone stale as a set). This tool runs EVERY registered query
   * in one documented session — warmed (the shared [[Warmup]] entry
-  * point), N reps (min kept) with the Bench/Profile clearCache hygiene,
+  * point), N reps (min kept) through the shared [[HarnessGuard.timed]] run,
   * fixed alphabetical order — and writes a fresh `perf_receipts.tsv`
   * with the capture-time canaries recorded (`__parallel_canary`,
   * `__parallel_canary_threads`) so Bench's suspect thresholds and
@@ -24,9 +24,9 @@ package graft
   * wall_receipt_normalized 1.26). The committed receipt set is the
   * per-query MIN of 3 single-pass captures in separate JVMs (min: load
   * noise is one-sided; matches the committed perf_receipts.tsv header —
-  * scripts: see ROUND_CLOSE.md). Isolated `graft.Profile` min-of-3
-  * remains the right tool for RELATIVE plan comparisons — just not for
-  * receipts.
+  * scripts: see ROUND_CLOSE.md). Isolated `graft.AbRunner <q> <reps>`
+  * min-of-3 remains the right tool for RELATIVE plan comparisons — just
+  * not for receipts.
   *
   * **Regression guard (r19 verdict #2):** before writing, the candidate
   * walls are diffed against the PREVIOUS committed receipt set; any
@@ -114,13 +114,9 @@ object ReceiptRefresh {
     var failed = List.empty[String]
     val walls = names.map { name =>
       val fn = SparkEntry.queries(name)
-      val runs = (1 to reps).map { i =>
-        val t0 = System.nanoTime()
-        val err = HarnessGuard.run(spark, name, 120) { fn(spark, sfDir).count() }
-          .left.toOption
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        err.foreach { m => failed ::= s"$name: $m" }
+      val runs = (1 to reps).map { _ =>
+        val (dt, r) = HarnessGuard.timed(spark, name, 120) { fn(spark, sfDir).count() }
+        r.left.foreach { m => failed ::= s"$name: $m" }
         dt
       }
       val best = runs.min
@@ -152,7 +148,7 @@ object ReceiptRefresh {
       }
       if (unaccepted.nonEmpty) {
         println(s"[receipts] FAIL: ${unaccepted.size} receipt(s) moved >1.5x beyond the " +
-          "set's median shift — attribute each (Profile A/B; see PERF.md), then either " +
+          "set's median shift — attribute each (AbRunner A/B; see PERF.md), then either " +
           "fix it or re-run with SPARK_GRAFT_RECEIPT_ACCEPT=" + unaccepted.mkString(","))
         spark.stop(); sys.exit(1)
       }

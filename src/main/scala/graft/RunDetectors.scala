@@ -120,17 +120,6 @@ object RunDetectors {
         row_number().over(Window.orderBy(col("msg_idx"))) - 1)
       .persist()
 
-    // count the stream itself, not `scored`: its cache is then full before
-    // the dup-scoring joins read it, and AQE re-plans fewer of their stages
-    val streamed = msgs.count()
-    val dupRow = kept.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("total"),
-      avg(when(col("is_duplicate"), 1.0).otherwise(0.0)).as("rate"),
-      avg(col("dup_score")).as("avg_score")).collect()(0)
-    val processed = dupRow.getAs[Long]("n")
-    val excluded = if (c.excludeDuplicates) streamed - processed else 0L
-
     // detector-statistics token frame: ALL streamed messages (trap #2)
     val tokensAll = scored
       .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
@@ -140,127 +129,144 @@ object RunDetectors {
       .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
       .filter(col("token") =!= "").persist()
 
-    // snapshot boundaries: the msg_idx at which each completed interval's
-    // last kept message arrived (run_detectors.py:193 — a snapshot exists
-    // only when `processed % update_interval == 0` fired)
-    val boundaries = kept
-      .filter((col("kept_idx") + 1) % c.updateInterval === 0)
-      .select(((col("kept_idx") + 1) / c.updateInterval - 1).cast("long").as("snap"),
-        col("msg_idx"))
-      .collect()
-      .map(r => (r.getAs[Long]("snap"), r.getAs[Int]("msg_idx")))
-      .sortBy(_._1)
+    // a long-lived session calls run repeatedly: release the five caches
+    // once the summary is built, or each call on new input leaks them.
+    // Dependents go first: uncaching a frame re-plans every unfilled
+    // cached frame built on it
+    try {
+      // count the stream itself, not `scored`: its cache is then full before
+      // the dup-scoring joins read it, and AQE re-plans fewer of their stages
+      val streamed = msgs.count()
+      val dupRow = kept.agg(
+        count(lit(1)).as("n"),
+        sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("total"),
+        avg(when(col("is_duplicate"), 1.0).otherwise(0.0)).as("rate"),
+        avg(col("dup_score")).as("avg_score")).collect()(0)
+      val processed = dupRow.getAs[Long]("n")
+      val excluded = if (c.excludeDuplicates) streamed - processed else 0L
 
-    // top tokens at every boundary in one pass: candidate set = kept
-    // tokens so far (recent_tokens → periodic_update), counts = CMS state
-    // = cumulative over ALL messages so far (run_detectors.py:195-198).
-    // The final top tokens (O3) are the same query at the end of the
-    // stream — tracked set = every kept token (incl. the trailing partial
-    // period's final periodic_update, run_detectors.py:212-214), counts
-    // over the whole stream — under the key FinalSnap (empty on an empty
-    // stream: no token sits at or before index -1). A kept message is at or
-    // before a boundary in kept order iff it is in msg_idx order.
-    val bdf = spark.createDataFrame(boundaries.toSeq :+
-        ((FinalSnap, (streamed - 1).toInt)))
-      .toDF("snap", "msg_bound")
-    val tracked = tokensKept.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
-      .select(col("snap"), col("token")).distinct()
-    val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
-      .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
-      .agg(count(lit(1)).as("cnt"))
-    val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
-    val snapTop: Map[Long, Seq[(String, Long)]] = tracked
-      .join(cum, tracked("snap") === cum("csnap") && tracked("token") === cum("ctoken"))
-      .select(col("snap"), col("token"), col("cnt"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= c.topFrequency)
-      .orderBy(col("snap"), col("rank")).collect()
-      .groupBy(_.getAs[Long]("snap"))
-      .map { case (s, rows) =>
-        s -> rows.toSeq.map(r => (r.getAs[String]("token"), r.getAs[Long]("cnt"))) }
-
-    val dupsSoFar = kept
-      .withColumn("snapshot", expr(s"kept_idx div ${c.updateInterval}"))
-      .groupBy(col("snapshot"))
-      .agg(sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("d"))
-      .collect().map(r => r.getAs[Long]("snapshot") -> r.getAs[Long]("d"))
-      .sortBy(_._1)
-
-    // probe estimates (A12): CMS state = all streamed messages' tokens;
-    // probe lowercased (T8, frequency_detector.py:93-96)
-    val probes =
-      if (c.freqQueries.isEmpty) Map.empty[String, Long]
-      else {
-        val counts = tokensAll.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        c.freqQueries.map(q => q -> counts.getOrElse(q.toLowerCase, 0L)).toMap
-      }
-
-    // per-message rows (kept only — run_detectors.py:178-185)
-    val rows =
-      if (c.showText) kept.orderBy(col("kept_idx"))
-        .select(col("body"), col("dup_score"), col("is_duplicate"), col("msg_idx"))
-        .collect().toSeq
-      else Nil
-
-    // every burst read in one pass: each snapshot boundary, the final
-    // window over the full stream (W2), and the window ending at each
-    // kept message when they are shown
-    import spark.implicits._
-    val ends = (boundaries.map(_._2.toLong).toSeq ++ Seq(streamed - 1) ++
-      rows.map(_.getAs[Int]("msg_idx").toLong)).distinct
-    val bursts: Map[Long, Seq[(String, Long, Long, Double)]] =
-      burstFrame(tokensAll, ends.toDF("w_end"))
-        .orderBy(col("w_end"), col("ratio").desc, col("recent_cnt").desc, col("token"))
+      // snapshot boundaries: the msg_idx at which each completed interval's
+      // last kept message arrived (run_detectors.py:193 — a snapshot exists
+      // only when `processed % update_interval == 0` fired)
+      val boundaries = kept
+        .filter((col("kept_idx") + 1) % c.updateInterval === 0)
+        .select(((col("kept_idx") + 1) / c.updateInterval - 1).cast("long").as("snap"),
+          col("msg_idx"))
         .collect()
-        .groupBy(_.getAs[Long]("w_end"))
-        .map { case (e, rs) => e -> rs.toSeq.map(r => (r.getAs[String]("token"),
-          r.getAs[Long]("recent_cnt"), r.getAs[Long]("prev_cnt"), r.getAs[Double]("ratio"))) }
+        .map(r => (r.getAs[Long]("snap"), r.getAs[Int]("msg_idx")))
+        .sortBy(_._1)
 
-    // ---- render the reference's summary JSON (run_detectors.py:227-243)
-    import org.json4s._
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods._
-    // the reference's top-token payloads are ORDERED dicts (token -> count,
-    // run_detectors.py:196,216) — render as JObject to preserve both shape
-    // and ranking order
-    def tokenDict(entries: Seq[(String, Long)]): JObject =
-      JObject(entries.toList.map { case (t, c) => JField(t, JInt(c)) })
-    def burstJson(entries: Seq[(String, Long, Long, Double)]) =
-      entries.toList.map { case (token, recent, prev, ratio) =>
-        ("ratio" -> ratio) ~
-          ("recent_count" -> recent) ~
-          ("prev_count" -> prev) ~
-          ("representative" -> token)
-      }
-    val snapshotsJson = boundaries.map { case (snap, msgBound) =>
-      val cumDups = dupsSoFar.filter(_._1 <= snap).map(_._2).sum
-      ("message_count" -> ((snap + 1) * c.updateInterval)) ~
-        ("top_10_tokens" -> tokenDict(snapTop.getOrElse(snap, Nil))) ~
-        ("burst" -> burstJson(bursts.getOrElse(msgBound.toLong, Nil))) ~
-        ("duplicates_so_far" -> cumDups)
-    }.toList
-    val json =
-      ("split" -> c.split) ~
-        ("processed" -> processed) ~
-        ("excluded_duplicates" -> excluded) ~
-        ("update_interval" -> c.updateInterval) ~
-        ("frequency_estimates" -> probes) ~
-        ("duplicates" ->
-          ("total" -> dupRow.getAs[Long]("total")) ~
-            ("rate" -> (if (processed > 0) dupRow.getAs[Double]("rate") else 0.0)) ~
-            ("avg_score" -> (if (processed > 0) dupRow.getAs[Double]("avg_score") else 0.0))) ~
-        ("periodic_snapshots" -> snapshotsJson) ~
-        ("final burst" -> burstJson(bursts.getOrElse(streamed - 1, Nil))) ~
-        ("final top_tokens" -> tokenDict(snapTop.getOrElse(FinalSnap, Nil))) ~
-        ("messages" -> (if (c.showText) Some(rows.toList.map { r =>
-          ("text" -> r.getAs[String]("body")) ~
-            ("duplicate" ->
-              (("is_duplicate" -> r.getAs[Boolean]("is_duplicate")) ~
-                ("duplicate_score" -> r.getAs[Double]("dup_score")))) ~
-            ("burst" -> burstJson(bursts.getOrElse(r.getAs[Int]("msg_idx").toLong, Nil)))
-        }) else None))
-    pretty(render(json))
+      // top tokens at every boundary in one pass: candidate set = kept
+      // tokens so far (recent_tokens → periodic_update), counts = CMS state
+      // = cumulative over ALL messages so far (run_detectors.py:195-198).
+      // The final top tokens (O3) are the same query at the end of the
+      // stream — tracked set = every kept token (incl. the trailing partial
+      // period's final periodic_update, run_detectors.py:212-214), counts
+      // over the whole stream — under the key FinalSnap (empty on an empty
+      // stream: no token sits at or before index -1). A kept message is at or
+      // before a boundary in kept order iff it is in msg_idx order.
+      val bdf = spark.createDataFrame(boundaries.toSeq :+
+          ((FinalSnap, (streamed - 1).toInt)))
+        .toDF("snap", "msg_bound")
+      val tracked = tokensKept.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
+        .select(col("snap"), col("token")).distinct()
+      val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
+        .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
+        .agg(count(lit(1)).as("cnt"))
+      val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
+      val snapTop: Map[Long, Seq[(String, Long)]] = tracked
+        .join(cum, tracked("snap") === cum("csnap") && tracked("token") === cum("ctoken"))
+        .select(col("snap"), col("token"), col("cnt"))
+        .withColumn("rank", row_number().over(wTop))
+        .filter(col("rank") <= c.topFrequency)
+        .orderBy(col("snap"), col("rank")).collect()
+        .groupBy(_.getAs[Long]("snap"))
+        .map { case (s, rows) =>
+          s -> rows.toSeq.map(r => (r.getAs[String]("token"), r.getAs[Long]("cnt"))) }
+
+      val dupsSoFar = kept
+        .withColumn("snapshot", expr(s"kept_idx div ${c.updateInterval}"))
+        .groupBy(col("snapshot"))
+        .agg(sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("d"))
+        .collect().map(r => r.getAs[Long]("snapshot") -> r.getAs[Long]("d"))
+        .sortBy(_._1)
+
+      // probe estimates (A12): CMS state = all streamed messages' tokens;
+      // probe lowercased (T8, frequency_detector.py:93-96)
+      val probes =
+        if (c.freqQueries.isEmpty) Map.empty[String, Long]
+        else {
+          val counts = tokensAll.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          c.freqQueries.map(q => q -> counts.getOrElse(q.toLowerCase, 0L)).toMap
+        }
+
+      // per-message rows (kept only — run_detectors.py:178-185)
+      val rows =
+        if (c.showText) kept.orderBy(col("kept_idx"))
+          .select(col("body"), col("dup_score"), col("is_duplicate"), col("msg_idx"))
+          .collect().toSeq
+        else Nil
+
+      // every burst read in one pass: each snapshot boundary, the final
+      // window over the full stream (W2), and the window ending at each
+      // kept message when they are shown
+      import spark.implicits._
+      val ends = (boundaries.map(_._2.toLong).toSeq ++ Seq(streamed - 1) ++
+        rows.map(_.getAs[Int]("msg_idx").toLong)).distinct
+      val bursts: Map[Long, Seq[(String, Long, Long, Double)]] =
+        burstFrame(tokensAll, ends.toDF("w_end"))
+          .orderBy(col("w_end"), col("ratio").desc, col("recent_cnt").desc, col("token"))
+          .collect()
+          .groupBy(_.getAs[Long]("w_end"))
+          .map { case (e, rs) => e -> rs.toSeq.map(r => (r.getAs[String]("token"),
+            r.getAs[Long]("recent_cnt"), r.getAs[Long]("prev_cnt"), r.getAs[Double]("ratio"))) }
+
+      // ---- render the reference's summary JSON (run_detectors.py:227-243)
+      import org.json4s._
+      import org.json4s.JsonDSL._
+      import org.json4s.jackson.JsonMethods._
+      // the reference's top-token payloads are ORDERED dicts (token -> count,
+      // run_detectors.py:196,216) — render as JObject to preserve both shape
+      // and ranking order
+      def tokenDict(entries: Seq[(String, Long)]): JObject =
+        JObject(entries.toList.map { case (t, c) => JField(t, JInt(c)) })
+      def burstJson(entries: Seq[(String, Long, Long, Double)]) =
+        entries.toList.map { case (token, recent, prev, ratio) =>
+          ("ratio" -> ratio) ~
+            ("recent_count" -> recent) ~
+            ("prev_count" -> prev) ~
+            ("representative" -> token)
+        }
+      val snapshotsJson = boundaries.map { case (snap, msgBound) =>
+        val cumDups = dupsSoFar.filter(_._1 <= snap).map(_._2).sum
+        ("message_count" -> ((snap + 1) * c.updateInterval)) ~
+          ("top_10_tokens" -> tokenDict(snapTop.getOrElse(snap, Nil))) ~
+          ("burst" -> burstJson(bursts.getOrElse(msgBound.toLong, Nil))) ~
+          ("duplicates_so_far" -> cumDups)
+      }.toList
+      val json =
+        ("split" -> c.split) ~
+          ("processed" -> processed) ~
+          ("excluded_duplicates" -> excluded) ~
+          ("update_interval" -> c.updateInterval) ~
+          ("frequency_estimates" -> probes) ~
+          ("duplicates" ->
+            ("total" -> dupRow.getAs[Long]("total")) ~
+              ("rate" -> (if (processed > 0) dupRow.getAs[Double]("rate") else 0.0)) ~
+              ("avg_score" -> (if (processed > 0) dupRow.getAs[Double]("avg_score") else 0.0))) ~
+          ("periodic_snapshots" -> snapshotsJson) ~
+          ("final burst" -> burstJson(bursts.getOrElse(streamed - 1, Nil))) ~
+          ("final top_tokens" -> tokenDict(snapTop.getOrElse(FinalSnap, Nil))) ~
+          ("messages" -> (if (c.showText) Some(rows.toList.map { r =>
+            ("text" -> r.getAs[String]("body")) ~
+              ("duplicate" ->
+                (("is_duplicate" -> r.getAs[Boolean]("is_duplicate")) ~
+                  ("duplicate_score" -> r.getAs[Double]("dup_score")))) ~
+              ("burst" -> burstJson(bursts.getOrElse(r.getAs[Int]("msg_idx").toLong, Nil)))
+          }) else None))
+      pretty(render(json))
+    } finally Seq(tokensKept, tokensAll, kept, scored, msgs).foreach(_.unpersist())
   }
 
   /** Check-then-insert dedup scoring by arrival index over a (msg_idx,

@@ -11,13 +11,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=a,b,c — dump just those queries (local iteration);
-    // the driver never sets it, so driver runs always dump everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,32 +33,18 @@ object Verify {
     // Per-query wall-clock bound (default 120 s — the slowest sf0.01 query
     // is <10 s warmed): a pathological query records its own error line
     // instead of wedging the dump loop until the driver's kill.
-    // Try-parse with fallback (r10 ADVICE): a malformed value must not
-    // abort the dump loop before any query runs.
-    val timeoutSec = sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
-      .getOrElse {
-        sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT").foreach(v =>
-          System.err.println(s"[verify] bad SPARK_GRAFT_QUERY_TIMEOUT '$v', using 120"))
-        120
-      }
-    selected.foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      HarnessGuard.run(spark, name, timeoutSec) {
+    val timeoutSec = HarnessGuard.timeoutSec(sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT"), 120, v =>
+      System.err.println(s"[verify] bad SPARK_GRAFT_QUERY_TIMEOUT '$v', using 120"))
+    HarnessGuard.selectedQueries.foreach { case (name, fn) =>
+      HarnessGuard.timed(spark, name, timeoutSec) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       } match {
-        case Right(_) =>
-          // progress marker per completed dump: a killed run shows exactly
-          // how far it got and which query it died in
-          System.err.println(f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
-        case Left(err) =>
-          System.err.println(s"[verify] $name failed: $err")
+        // progress marker per completed dump: a killed run shows exactly
+        // how far it got and which query it died in
+        case (dt, Right(_)) => System.err.println(f"[verify] $name ok ($dt%.1fs)")
+        case (_, Left(err)) => System.err.println(s"[verify] $name failed: $err")
       }
-      // Queries persist() intermediates they can't unpersist before the
-      // write action; clear between queries so caches don't compound
-      // across the full 173-query session (see Bench.scala).
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

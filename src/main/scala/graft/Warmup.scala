@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The single untimed-warmup entry point shared by Bench and Profile, so the
-  * two tools agree on what "steady state" means (r5: Profile's warmup covered
-  * streaming only while Bench also built the IVF index, so Profile run-1
-  * numbers silently included the KMeans fit).
+/** The single untimed-warmup entry point shared by Bench, AbRunner and
+  * ReceiptRefresh, so the tools agree on what "steady state" means (r5: the
+  * steady-state profiler's warmup covered streaming only while Bench also
+  * built the IVF index, so its run-1 numbers silently included the KMeans
+  * fit).
   *
   * Everything here is a ONE-TIME infrastructure or first-use cost that a
   * long-lived deployment pays once per process, never per query: session

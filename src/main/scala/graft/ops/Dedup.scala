@@ -72,6 +72,14 @@ object Dedup {
     // accumulating one cached copy per invocation (r16 ADVICE)
     val fp = FrameCache.eager(withToks(docs)
       .select(col("doc_id"), md5(array_join(col("toks"), " ")).as("fp")))
+    exactStats(fp).orderBy(col("doc_id"))
+  }
+
+  /** Per-fingerprint group stats of a (doc_id, fp) frame: a partial-agg
+    * groupBy joined back, never a window over `fp` — a window buffers a
+    * hot fingerprint's whole group in one un-splittable task, which
+    * SkewSpec's de-windowing gate measures on this function. */
+  private[graft] def exactStats(fp: DataFrame): DataFrame = {
     val dups = FrameCache.eager(fp.groupBy(col("fp"))
       .agg(count(lit(1)).as("gs"), min(col("doc_id")).as("min_id"))
       .filter(col("gs") >= 2))
@@ -84,7 +92,6 @@ object Dedup {
       .withColumn("group_size", coalesce(col("gs"), lit(1L)))
       .withColumn("keep", col("min_id").isNull || col("doc_id") === col("min_id"))
       .select(col("doc_id"), col("fp"), col("group_size"), col("keep"))
-      .orderBy(col("doc_id"))
   }
 
   private val exactSql =
@@ -1327,7 +1334,7 @@ object Dedup {
     // one-job (docs, distinct-texts) counts are dataset-keyed memoized
     // scalars — fit-once-like state this warmup exists to absorb.
     // Without this, the FIRST timed ngram/substring run per JVM pays the
-    // gate job that the Profile-captured receipts (min-of-3, memo warm
+    // gate job that the steady-state receipts (min-of-3, memo warm
     // from run 1) never include: a standing ~0.3-0.5 s bench-vs-receipt
     // gap on exactly those two queries (dedup_substring ran 1.37× its
     // receipt in the r18 judge bench; both at-receipt once warmed).

@@ -103,7 +103,7 @@ object StreamingOps {
     *    scale commit latency stops growing with total state size.
     *  - numTotalStateRows tracking off (r21): it is a METRIC ONLY, and
     *    maintaining it costs RocksDB a get-before-every-put; results never
-    *    depend on it (state size is read from `memoryUsedBytes`). */
+    *    depend on it (ScaleGate reads state rows from `numRowsUpdated`). */
   private val StateStoreConfs = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

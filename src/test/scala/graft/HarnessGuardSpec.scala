@@ -19,6 +19,34 @@ class HarnessGuardSpec extends SparkSpec {
     assert(r.left.exists(m => m.contains("IllegalStateException") && m.contains("xyzzy")))
   }
 
+  test("timed returns a Left and the wall for a throwing body") {
+    val (dt, r) = HarnessGuard.timed(spark, "timed-boom", 30) {
+      Thread.sleep(50)
+      throw new IllegalStateException("plugh")
+    }
+    assert(r.left.exists(m => m.contains("IllegalStateException") && m.contains("plugh")), s"got $r")
+    assert(dt >= 0.05 && dt < 30, s"wall $dt")
+  }
+
+  test("timed leaves no cached frame behind a body that persisted one") {
+    val df = spark.range(100).selectExpr("id * 3 AS x")
+    val (_, r) = HarnessGuard.timed(spark, "timed-cache", 30)(df.persist().count())
+    assert(r == Right(100L))
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the body's cached frame survived the run")
+  }
+
+  test("timeoutSec: absent -> default, valid -> parsed, malformed or non-positive -> default with one warning") {
+    def parse(raw: Option[String]): (Int, Seq[String]) = {
+      val warned = scala.collection.mutable.Buffer.empty[String]
+      (HarnessGuard.timeoutSec(raw, 90, warned += _), warned.toSeq)
+    }
+    assert(parse(None) == ((90, Nil)))
+    assert(parse(Some(" 45 ")) == ((45, Nil)))
+    assert(parse(Some("abc")) == ((90, Seq("abc"))))
+    assert(parse(Some("-3")) == ((90, Seq("-3"))))
+  }
+
   test("a wedged Spark job is cancelled at the budget; session survives") {
     import spark.implicits._
     // the sleep must sit in a FILTER (a count() over a projected udf gets

@@ -97,8 +97,8 @@ class ModelStoreSpec extends AnyFunSuite {
     def excluded(n: String) =
       Seq(s"graft/$n.class", s"graft/$n$$.class", s"graft/$n$$anon$$1.class", s"graft/$n.tasty")
         .map(_.matches(ModelStore.HarnessClasses)).distinct
-    Seq("AbRunner", "Bench", "Canary", "Explain", "HarnessGuard", "PlanAudit", "Profile",
-      "ReceiptRefresh", "ScaleGate", "SkewDemo", "Verify", "Warmup")
+    Seq("AbRunner", "Bench", "Canary", "Explain", "HarnessGuard", "PlanAudit",
+      "ReceiptRefresh", "ScaleGate", "Verify", "Warmup")
       .foreach(n => assert(excluded(n) == Seq(true), n))
     Seq("Sessions", "ModelStore", "RunDetectors", "SparkEntry", "Tables", "TmpDirs", "BenchX")
       .foreach(n => assert(excluded(n) == Seq(false), n))

@@ -154,17 +154,18 @@ class RunDetectorsSpec extends SparkSpec {
   }
 
   test("Spark jobs per run stay within one job across identical runs") {
-    // each call starts from an empty cache, as a fresh CLI process does
-    // (the CLI never unpersists). AQE may still turn the dup scorer's
-    // final join into a broadcast join at run time, depending on which
-    // stage finishes first: one job either way.
+    // the cache is cleared once, not between calls: run releases its own
+    // caches, so each call recomputes them as a fresh CLI process does (a
+    // leaked cache let a repeat call skip half its jobs). AQE may still
+    // turn the dup scorer's final join into a broadcast join at run time,
+    // depending on which stage finishes first: one job either way.
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
     val c = RunDetectors.Config(dataDir = fixture, split = "test")
+    spark.catalog.clearCache()
     val counts = (1 to 5).map { _ =>
-      spark.catalog.clearCache()
       GraftCoreShim.drainListenerBus(spark.sparkContext)
       spark.sparkContext.addSparkListener(listener)
       try {

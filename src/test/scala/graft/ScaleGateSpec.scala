@@ -42,12 +42,13 @@ class ScaleGateSpec extends SparkSpec {
   test("stateOk: a stateful query with zero state at 1× fails; growth is bounded by mult") {
     // RocksDB row tracking off made numRowsTotal read 0, and the old rule
     // passed every query with 1× state 0 — a blind gate
-    assert(!ScaleGate.stateOk(stateful = true, state1 = 0, stateN = 0, mult = 2))
-    assert(!ScaleGate.stateOk(stateful = true, state1 = 0, stateN = 4096, mult = 2))
+    assert(!ScaleGate.stateOk(stateful = true, state1 = 0, stateN = 0, bound = 3.0))
+    assert(!ScaleGate.stateOk(stateful = true, state1 = 0, stateN = 4096, bound = 3.0))
     // a stateless query has no state to bound
-    assert(ScaleGate.stateOk(stateful = false, state1 = 0, stateN = 0, mult = 2))
-    assert(ScaleGate.stateOk(stateful = true, state1 = 1000, stateN = 2000, mult = 2))
-    assert(!ScaleGate.stateOk(stateful = true, state1 = 1000, stateN = 2001, mult = 2))
+    assert(ScaleGate.stateOk(stateful = false, state1 = 0, stateN = 0, bound = 3.0))
+    // mult 2 × slack 1.5: rows written may grow 3×, not more
+    assert(ScaleGate.stateOk(stateful = true, state1 = 1000, stateN = 3000, bound = 3.0))
+    assert(!ScaleGate.stateOk(stateful = true, state1 = 1000, stateN = 3001, bound = 3.0))
   }
 
   test("recordReads: disarmed outside the block") {

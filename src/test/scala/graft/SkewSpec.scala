@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Skew-handling mechanics: manual key salting produces identical results
@@ -8,6 +10,36 @@ import org.apache.spark.sql.functions._
   * (e.g. broadcast-ineligible aggregations keyed on a hot value). */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The retired pre-r16 shape of Dedup.exact's stats: count and min over
+    * a Window partitioned by fingerprint. */
+  private def exactWindow(fp: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("fp"))
+    fp.withColumn("group_size", count(lit(1)).over(w))
+      .withColumn("keep", col("doc_id") === min(col("doc_id")).over(w))
+      .select(col("doc_id"), col("fp"), col("group_size"), col("keep"))
+  }
+
+  private def checksum(df: DataFrame): (Long, Long, Long) = {
+    val r = df.agg(count(lit(1)), sum(col("group_size")),
+      sum(when(col("keep"), 1L).otherwise(0L))).head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  /** Largest per-task shuffle-read record count since the last reset: on
+    * a real cluster the largest un-splittable task is the wall floor no
+    * executor count can lower, and the records it reads are a pure
+    * function of plan + data (a wall-clock reading can flake on a loaded
+    * box). */
+  private class MaxTaskListener extends org.apache.spark.scheduler.SparkListener {
+    @volatile var maxShuffleRows: Long = 0L
+    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+      if (e.taskMetrics != null && e.taskMetrics.shuffleReadMetrics != null) {
+        val r = e.taskMetrics.shuffleReadMetrics.recordsRead
+        if (r > maxShuffleRows) maxShuffleRows = r
+      }
+    def reset(): Unit = maxShuffleRows = 0L
+  }
 
   test("salted aggregation equals plain aggregation on a skewed key") {
     // build a skewed frame: key 0 carries 50k rows, others 100 each
@@ -83,13 +115,14 @@ class SkewSpec extends SparkSpec {
   }
 
   test("de-windowed stats shape keeps the largest task splittable under a 50%-hot key") {
-    // The graft.SkewDemo measurement as a REGRESSION GATE (r16 verdict):
-    // on a corpus where half the rows share ONE fingerprint, the shipped
-    // partial-agg groupBy + join-back's largest task must stay well under
-    // the retired count-over-Window(fp) shape's — the window buffers the
-    // whole hot group in one un-splittable task (the wall floor no
-    // executor count can lower), the agg collapses it map-side. CI-sized
-    // here (0.4M hot rows vs the demo's 2M); skew_demo_r16.json carries
+    // The r16 skew measurement as a REGRESSION GATE: on a corpus where
+    // half the rows share ONE fingerprint, the largest task of the shipped
+    // stats tail (Dedup.exactStats: partial-agg groupBy + join-back) must
+    // stay well under the retired count-over-Window(fp) shape's — the
+    // window buffers the whole hot group in one un-splittable task (the
+    // wall floor no executor count can lower), the agg collapses it
+    // map-side. CI-sized here (0.4M hot rows vs the r16 measurement's 2M,
+    // taken by a since-retired demo main); skew_demo_r16.json carries
     // the full-size numbers (window 20.8 s vs agg 4.2 s largest task at
     // 60M rows). The gate asserts on the largest per-task SHUFFLE-READ
     // RECORD count — a pure function of plan + data (r17 ADVICE: the
@@ -105,18 +138,18 @@ class SkewSpec extends SparkSpec {
           .otherwise(md5(concat(lit("u"), col("id")))).as("fp"))
       .persist()
     fp.count()
-    val listener = new SkewDemo.MaxTaskListener
+    val listener = new MaxTaskListener
     spark.sparkContext.addSparkListener(listener)
     try {
-      def maxRows(mk: => org.apache.spark.sql.DataFrame): (Long, (Long, Long, Long)) = {
+      def maxRows(mk: => DataFrame): (Long, (Long, Long, Long)) = {
         Thread.sleep(200) // drain straggler task-end events
         listener.reset()
-        val cs = SkewDemo.checksum(mk)
+        val cs = checksum(mk)
         Thread.sleep(200)
         (listener.maxShuffleRows, cs)
       }
-      val (wRows, wCs) = maxRows(SkewDemo.exactWindow(fp))
-      val (aRows, aCs) = maxRows(SkewDemo.exactAgg(fp))
+      val (wRows, wCs) = maxRows(exactWindow(fp))
+      val (aRows, aCs) = maxRows(graft.ops.Dedup.exactStats(fp))
       assert(wCs == aCs, s"shapes disagree: window=$wCs agg=$aCs")
       assert(wCs == ((2 * n, n * n + n, n + 1)), s"unexpected stats: $wCs")
       assert(wRows >= n, s"window shape must buffer the hot group in one task ($wRows)")
