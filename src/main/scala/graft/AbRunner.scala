@@ -27,6 +27,14 @@ object AbRunner {
     * wedged query still ends the run instead of hanging it. */
   private val TimeoutSec = 3600
 
+  /** The median wall: the mean of the two middle walls for an even count
+    * (at 2 reps the upper middle would be the slower, usually cold, rep). */
+  private[graft] def median(walls: Seq[Double]): Double = {
+    val s = walls.sorted
+    val m = s.size / 2
+    if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).toSeq
     val fns = names.map(SparkEntry.queries) // an unknown name fails before any run
@@ -75,13 +83,9 @@ object AbRunner {
         } finally props.keys.foreach(sys.props.remove(_))
       }
     }
-    def stats(l: List[Double]): (Double, Double) = {
-      val s = l.sorted
-      (s.head, s(s.size / 2))
-    }
     val summary = for (name <- names; (label, _) <- configs) yield {
       val k = (name, label)
-      val (mn, md) = stats(walls(k))
+      val (mn, md) = (walls(k).min, median(walls(k)))
       println(f"[ab] SUMMARY $name $label: min $mn%.3f s, median $md%.3f s, rows ${rows(k)}")
       s"""{"query":"$name","config":"$label","min":$mn,"median":$md,"rows":${rows(k)},"walls":[${walls(k).map(w => f"$w%.3f").mkString(",")}]}"""
     }

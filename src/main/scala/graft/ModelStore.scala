@@ -177,7 +177,7 @@ object ModelStore {
         catch {
           case NonFatal(e) =>
             System.err.println(s"[modelstore] reload of $tag failed " +
-              s"(${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}) — refitting")
+              s"(${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}) - refitting")
             None
         }
       else None

@@ -18,9 +18,6 @@ package graft
   *  - ScalaUDF: NONE — the last faithful-CMS estimate UDFs moved to the
   *    codegen'd ref_cms_estimate expression in r13, so any ScalaUDF
   *    anywhere in the registry is now a flag, no exemptions.
-  *  - scc_loader_* / scc_run_summary: the md5-identity sampler rides
-  *    Spark's own `md5`; no UDF — listed only for the bounded
-  *    BroadcastNestedLoopJoin of ≤n/interval-row bounds tables.
   *  - sim_knn_* / sim_hybrid_search / mllib_ann_join: bounded BNLJ of
   *    broadcast probe/centroid frames (≤ tens of rows by construction).
   *  - rel_zorder_contract / sketch_approx_quantiles / mm_*: bounded
@@ -36,7 +33,7 @@ object PlanAudit {
     "sim_ivf_recall", "sim_ann_contract", "sim_pq_contract",
     "sim_ivfpq_contract", "sim_pca_contract", "sim_topic_contract",
     "sim_topic_clusters", "mllib_ann_join", "mllib_ann_contract",
-    "scc_run_summary", "rel_zorder_contract", "sketch_approx_quantiles",
+    "rel_zorder_contract", "sketch_approx_quantiles",
     "rel_window_ntile", "ta_perplexity_buckets", "ta_zipf_slope",
     // broadcast 1-row / n_sources-row frame joins (the r11 verdict's
     // audited crossJoin list: corpus totals, rate tables, threshold

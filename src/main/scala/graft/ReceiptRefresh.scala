@@ -96,7 +96,7 @@ object ReceiptRefresh {
     val outPath = if (args.length > 1) args(1) else "src/main/resources/perf_receipts.tsv"
     if (reps > 1 && outPath.endsWith("src/main/resources/perf_receipts.tsv"))
       println(s"[receipts] WARNING: reps=$reps min-of-N in ONE JVM is the steady-state " +
-        "capture mode (receipts ~20-30% under in-bench walls — the normalized-1.26 " +
+        "capture mode (receipts ~20-30% under in-bench walls - the normalized-1.26 " +
         "pathology); the committed set must be min of 3 SEPARATE single-pass JVMs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -108,7 +108,7 @@ object ReceiptRefresh {
     println(f"[receipts] cpu_canary $canaryStart%.3f s, parallel_canary($cpus) $parCanary%.3f s")
     val skipped = Warmup.run(spark, sfDir)
     if (skipped > 0)
-      println(s"[receipts] WARNING: $skipped warmup phases skipped/cut — first-use costs may leak into receipts")
+      println(s"[receipts] WARNING: $skipped warmup phases skipped/cut - first-use costs may leak into receipts")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     var failed = List.empty[String]
@@ -128,7 +128,7 @@ object ReceiptRefresh {
     val drift = if (canaryStart > 0) canaryEnd / canaryStart else 1.0
     println(f"[receipts] canary end $canaryEnd%.3f (drift $drift%.2f), parallel end $parEnd%.3f")
     if (failed.nonEmpty) {
-      println(s"[receipts] FAIL: ${failed.size} query errors — not writing:\n  ${failed.mkString("\n  ")}")
+      println(s"[receipts] FAIL: ${failed.size} query errors - not writing:\n  ${failed.mkString("\n  ")}")
       spark.stop(); sys.exit(1)
     }
     // regression guard (r19 verdict #2) against the COMMITTED set — the
@@ -148,7 +148,7 @@ object ReceiptRefresh {
       }
       if (unaccepted.nonEmpty) {
         println(s"[receipts] FAIL: ${unaccepted.size} receipt(s) moved >1.5x beyond the " +
-          "set's median shift — attribute each (AbRunner A/B; see PERF.md), then either " +
+          "set's median shift - attribute each (AbRunner A/B; see PERF.md), then either " +
           "fix it or re-run with SPARK_GRAFT_RECEIPT_ACCEPT=" + unaccepted.mkString(","))
         spark.stop(); sys.exit(1)
       }

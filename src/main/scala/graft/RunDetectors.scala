@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Text
 import graft.sources.SccJsonSource
 
@@ -44,6 +45,15 @@ import graft.sources.SccJsonSource
   * DGIM-approximate); `duplicate` dicts omit the Bloom-internal
   * `fill_ratio`; ratio values are unrounded doubles; ties in token rankings
   * break by token text (the reference inherits dict insertion order).
+  *
+  * Execution: ingest ([[SccJsonSource.messageStream]]) and dup scoring
+  * ([[dupScored]]) stay distributed plans — a shingle's first-seen index
+  * needs every earlier message, so that state is corpus-sized and lives in
+  * a shuffle, never in one task. Everything after is one [[fold]] over the
+  * scored stream, coalesced to one task in arrival order: it holds the
+  * token counts and the tracked set (vocabulary-sized), a ring of the
+  * last 2·RecentK messages' tokens, and its output. Its cost is linear in
+  * the stream whatever the snapshot count, and one collect returns it.
   */
 object RunDetectors {
 
@@ -90,183 +100,98 @@ object RunDetectors {
   private val RecentK = WindowSize / 2
   private val BurstThreshold = 2.0
   private val BurstEps = 1e-6
-  // key of the end-of-stream row in run()'s top-token bounds; snapshots
-  // are numbered from 0
-  private val FinalSnap = -1L
+
+  /** One message of the scored stream, as the fold reads it. */
+  private[graft] final case class Scored(msg_idx: Long, body: String,
+      dup_score: Double, is_duplicate: Boolean)
+  /** A bursting token of one window: detect_spikes' entry, per token. */
+  private[graft] final case class Burst(token: String, recent: Long, prev: Long, ratio: Double)
+  private[graft] final case class Snapshot(top: Seq[(String, Long)], burst: Seq[Burst],
+      dupsSoFar: Long)
+  /** A kept message as `--show-text` reports it. */
+  private[graft] final case class Shown(body: String, dupScore: Double, isDuplicate: Boolean,
+      burst: Seq[Burst])
+  /** Every detector read of one run: the counters, the probe counts (in
+    * query order), the periodic snapshots, the end-of-stream state and the
+    * shown messages. */
+  private[graft] final case class Detected(streamed: Long, processed: Long, dupTotal: Long,
+      dupScoreSum: Double, probes: Seq[Long], snapshots: Seq[Snapshot],
+      finalTop: Seq[(String, Long)], finalBurst: Seq[Burst], shown: Seq[Shown])
+  /** One row of [[snapshotSummary]]. */
+  private[graft] final case class SummaryRow(snapshot: Long, message_count: Long, rank: Int,
+      token: String, cnt: Long, n_burst: Long, dups_so_far: Long)
 
   /** The whole run as one Spark program; returns the summary as a JSON
     * string (the reference's stdout payload). */
   def run(spark: SparkSession, c: Config): String = {
     val splitDir =
       s"${c.dataDir}/${if (c.split == "train") c.trainSubdir else c.testSubdir}"
-
     // ingest + preprocess + stream (S1, F1–F5, T1–T5, O1/O2); msg_idx is
-    // the FULL-stream arrival index — what the detectors see
+    // the FULL-stream arrival index — what the detectors see. Persisted
+    // because dupScored reads it twice; released once the fold is in
     val msgs = SccJsonSource.messageStream(spark, splitDir, c.maxMessages, c.allMessages)
       .select(col("msg_idx"), col("body"))
       .persist()
+    try summaryJson(c, detect(msgs, c)) finally msgs.unpersist()
+  }
 
-    // check-then-insert dedup scoring by arrival index (ST5, trap #1)
-    val scored = dupScored(msgs).persist()
+  /** Every detector read of [[run]] over a (msg_idx, body) stream: the
+    * distributed dup scoring, then one [[fold]] in one task, one collect. */
+  private[graft] def detect(msgs: DataFrame, c: Config): Detected = {
+    // probes case-fold here, before the fold (T8, frequency_detector.py:93-96)
+    val probes = c.freqQueries.map(_.toLowerCase)
+    scoredStream(msgs)
+      .mapPartitions(it => Iterator(fold(it, c, probes)))(Encoders.javaSerialization[Detected])
+      .collect().headOption
+      // an empty stream may plan as zero partitions: no task, no fold
+      .getOrElse(fold(Iterator.empty, c, probes))
+  }
 
-    // exclusion happens AFTER detectors saw the message (trap #2): kept
-    // messages drive `processed`, the snapshot cadence, and counters —
-    // detector state keeps every message. The kept rank also leaves
-    // `kept` in one partition in arrival order, so `avg_score` below sums
-    // its doubles in the reference's order: summed in another order, the
-    // last digits of the reported average change.
-    val kept = (if (c.excludeDuplicates) scored.filter(!col("is_duplicate")) else scored)
-      .withColumn("kept_idx",
-        row_number().over(Window.orderBy(col("msg_idx"))) - 1)
-      .persist()
-
-    // detector-statistics token frame: ALL streamed messages (trap #2)
-    val tokensAll = scored
-      .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
-      .filter(col("token") =!= "").persist()
-    // tracked-set token frame: kept messages only
-    val tokensKept = kept
-      .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
-      .filter(col("token") =!= "").persist()
-
-    // a long-lived session calls run repeatedly: release the five caches
-    // once the summary is built, or each call on new input leaks them.
-    // Dependents go first: uncaching a frame re-plans every unfilled
-    // cached frame built on it
-    try {
-      // count the stream itself, not `scored`: its cache is then full before
-      // the dup-scoring joins read it, and AQE re-plans fewer of their stages
-      val streamed = msgs.count()
-      val dupRow = kept.agg(
-        count(lit(1)).as("n"),
-        sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("total"),
-        avg(when(col("is_duplicate"), 1.0).otherwise(0.0)).as("rate"),
-        avg(col("dup_score")).as("avg_score")).collect()(0)
-      val processed = dupRow.getAs[Long]("n")
-      val excluded = if (c.excludeDuplicates) streamed - processed else 0L
-
-      // snapshot boundaries: the msg_idx at which each completed interval's
-      // last kept message arrived (run_detectors.py:193 — a snapshot exists
-      // only when `processed % update_interval == 0` fired)
-      val boundaries = kept
-        .filter((col("kept_idx") + 1) % c.updateInterval === 0)
-        .select(((col("kept_idx") + 1) / c.updateInterval - 1).cast("long").as("snap"),
-          col("msg_idx"))
-        .collect()
-        .map(r => (r.getAs[Long]("snap"), r.getAs[Int]("msg_idx")))
-        .sortBy(_._1)
-
-      // top tokens at every boundary in one pass: candidate set = kept
-      // tokens so far (recent_tokens → periodic_update), counts = CMS state
-      // = cumulative over ALL messages so far (run_detectors.py:195-198).
-      // The final top tokens (O3) are the same query at the end of the
-      // stream — tracked set = every kept token (incl. the trailing partial
-      // period's final periodic_update, run_detectors.py:212-214), counts
-      // over the whole stream — under the key FinalSnap (empty on an empty
-      // stream: no token sits at or before index -1). A kept message is at or
-      // before a boundary in kept order iff it is in msg_idx order.
-      val bdf = spark.createDataFrame(boundaries.toSeq :+
-          ((FinalSnap, (streamed - 1).toInt)))
-        .toDF("snap", "msg_bound")
-      val tracked = tokensKept.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
-        .select(col("snap"), col("token")).distinct()
-      val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
-        .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
-        .agg(count(lit(1)).as("cnt"))
-      val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
-      val snapTop: Map[Long, Seq[(String, Long)]] = tracked
-        .join(cum, tracked("snap") === cum("csnap") && tracked("token") === cum("ctoken"))
-        .select(col("snap"), col("token"), col("cnt"))
-        .withColumn("rank", row_number().over(wTop))
-        .filter(col("rank") <= c.topFrequency)
-        .orderBy(col("snap"), col("rank")).collect()
-        .groupBy(_.getAs[Long]("snap"))
-        .map { case (s, rows) =>
-          s -> rows.toSeq.map(r => (r.getAs[String]("token"), r.getAs[Long]("cnt"))) }
-
-      val dupsSoFar = kept
-        .withColumn("snapshot", expr(s"kept_idx div ${c.updateInterval}"))
-        .groupBy(col("snapshot"))
-        .agg(sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("d"))
-        .collect().map(r => r.getAs[Long]("snapshot") -> r.getAs[Long]("d"))
-        .sortBy(_._1)
-
-      // probe estimates (A12): CMS state = all streamed messages' tokens;
-      // probe lowercased (T8, frequency_detector.py:93-96)
-      val probes =
-        if (c.freqQueries.isEmpty) Map.empty[String, Long]
-        else {
-          val counts = tokensAll.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          c.freqQueries.map(q => q -> counts.getOrElse(q.toLowerCase, 0L)).toMap
-        }
-
-      // per-message rows (kept only — run_detectors.py:178-185)
-      val rows =
-        if (c.showText) kept.orderBy(col("kept_idx"))
-          .select(col("body"), col("dup_score"), col("is_duplicate"), col("msg_idx"))
-          .collect().toSeq
-        else Nil
-
-      // every burst read in one pass: each snapshot boundary, the final
-      // window over the full stream (W2), and the window ending at each
-      // kept message when they are shown
-      import spark.implicits._
-      val ends = (boundaries.map(_._2.toLong).toSeq ++ Seq(streamed - 1) ++
-        rows.map(_.getAs[Int]("msg_idx").toLong)).distinct
-      val bursts: Map[Long, Seq[(String, Long, Long, Double)]] =
-        burstFrame(tokensAll, ends.toDF("w_end"))
-          .orderBy(col("w_end"), col("ratio").desc, col("recent_cnt").desc, col("token"))
-          .collect()
-          .groupBy(_.getAs[Long]("w_end"))
-          .map { case (e, rs) => e -> rs.toSeq.map(r => (r.getAs[String]("token"),
-            r.getAs[Long]("recent_cnt"), r.getAs[Long]("prev_cnt"), r.getAs[Double]("ratio"))) }
-
-      // ---- render the reference's summary JSON (run_detectors.py:227-243)
-      import org.json4s._
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods._
-      // the reference's top-token payloads are ORDERED dicts (token -> count,
-      // run_detectors.py:196,216) — render as JObject to preserve both shape
-      // and ranking order
-      def tokenDict(entries: Seq[(String, Long)]): JObject =
-        JObject(entries.toList.map { case (t, c) => JField(t, JInt(c)) })
-      def burstJson(entries: Seq[(String, Long, Long, Double)]) =
-        entries.toList.map { case (token, recent, prev, ratio) =>
-          ("ratio" -> ratio) ~
-            ("recent_count" -> recent) ~
-            ("prev_count" -> prev) ~
-            ("representative" -> token)
-        }
-      val snapshotsJson = boundaries.map { case (snap, msgBound) =>
-        val cumDups = dupsSoFar.filter(_._1 <= snap).map(_._2).sum
-        ("message_count" -> ((snap + 1) * c.updateInterval)) ~
-          ("top_10_tokens" -> tokenDict(snapTop.getOrElse(snap, Nil))) ~
-          ("burst" -> burstJson(bursts.getOrElse(msgBound.toLong, Nil))) ~
-          ("duplicates_so_far" -> cumDups)
-      }.toList
-      val json =
-        ("split" -> c.split) ~
-          ("processed" -> processed) ~
-          ("excluded_duplicates" -> excluded) ~
-          ("update_interval" -> c.updateInterval) ~
-          ("frequency_estimates" -> probes) ~
-          ("duplicates" ->
-            ("total" -> dupRow.getAs[Long]("total")) ~
-              ("rate" -> (if (processed > 0) dupRow.getAs[Double]("rate") else 0.0)) ~
-              ("avg_score" -> (if (processed > 0) dupRow.getAs[Double]("avg_score") else 0.0))) ~
-          ("periodic_snapshots" -> snapshotsJson) ~
-          ("final burst" -> burstJson(bursts.getOrElse(streamed - 1, Nil))) ~
-          ("final top_tokens" -> tokenDict(snapTop.getOrElse(FinalSnap, Nil))) ~
-          ("messages" -> (if (c.showText) Some(rows.toList.map { r =>
-            ("text" -> r.getAs[String]("body")) ~
-              ("duplicate" ->
-                (("is_duplicate" -> r.getAs[Boolean]("is_duplicate")) ~
-                  ("duplicate_score" -> r.getAs[Double]("dup_score")))) ~
-              ("burst" -> burstJson(bursts.getOrElse(r.getAs[Int]("msg_idx").toLong, Nil)))
-          }) else None))
-      pretty(render(json))
-    } finally Seq(tokensKept, tokensAll, kept, scored, msgs).foreach(_.unpersist())
+  /** The reference's summary JSON (run_detectors.py:227-243). */
+  private def summaryJson(c: Config, d: Detected): String = {
+    import org.json4s._
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods._
+    // the reference's top-token payloads are ORDERED dicts (token -> count,
+    // run_detectors.py:196,216) — render as JObject to preserve both shape
+    // and ranking order
+    def tokenDict(entries: Seq[(String, Long)]): JObject =
+      JObject(entries.toList.map { case (t, c) => JField(t, JInt(c)) })
+    def burstJson(entries: Seq[Burst]) =
+      entries.toList.map { b =>
+        ("ratio" -> b.ratio) ~
+          ("recent_count" -> b.recent) ~
+          ("prev_count" -> b.prev) ~
+          ("representative" -> b.token)
+      }
+    val snapshotsJson = d.snapshots.toList.zipWithIndex.map { case (s, i) =>
+      ("message_count" -> ((i + 1L) * c.updateInterval)) ~
+        ("top_10_tokens" -> tokenDict(s.top)) ~
+        ("burst" -> burstJson(s.burst)) ~
+        ("duplicates_so_far" -> s.dupsSoFar)
+    }
+    val n = d.processed
+    val json =
+      ("split" -> c.split) ~
+        ("processed" -> n) ~
+        ("excluded_duplicates" -> (if (c.excludeDuplicates) d.streamed - n else 0L)) ~
+        ("update_interval" -> c.updateInterval) ~
+        ("frequency_estimates" -> c.freqQueries.zip(d.probes).toMap) ~
+        ("duplicates" ->
+          ("total" -> d.dupTotal) ~
+            ("rate" -> (if (n > 0) d.dupTotal.toDouble / n else 0.0)) ~
+            ("avg_score" -> (if (n > 0) d.dupScoreSum / n else 0.0))) ~
+        ("periodic_snapshots" -> snapshotsJson) ~
+        ("final burst" -> burstJson(d.finalBurst)) ~
+        ("final top_tokens" -> tokenDict(d.finalTop)) ~
+        ("messages" -> (if (c.showText) Some(d.shown.toList.map { m =>
+          ("text" -> m.body) ~
+            ("duplicate" ->
+              (("is_duplicate" -> m.isDuplicate) ~
+                ("duplicate_score" -> m.dupScore))) ~
+            ("burst" -> burstJson(m.burst))
+        }) else None))
+    pretty(render(json))
   }
 
   /** Check-then-insert dedup scoring by arrival index over a (msg_idx,
@@ -287,70 +212,121 @@ object RunDetectors {
       .withColumn("is_duplicate", col("dup_score") >= 0.7)
   }
 
+  /** The scored stream as one partition in arrival order: the fold's
+    * input. `msg_idx` may be an Int or a Long column. */
+  private[graft] def scoredStream(msgs: DataFrame): Dataset[Scored] =
+    dupScored(msgs)
+      .select(col("msg_idx").cast("long").as("msg_idx"), col("body"), col("dup_score"),
+        col("is_duplicate"))
+      .coalesce(1).sortWithinPartitions(col("msg_idx"))
+      .as[Scored](Encoders.product[Scored])
+
+  /** Spark's string order (UTF-8 bytes) on Java strings, whose own
+    * `compareTo` orders UTF-16 units and so puts a surrogate pair (above
+    * U+FFFF) below U+E000–U+FFFF. */
+  private val utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  }
+  private val topOrder: Ordering[(String, Long)] =
+    Ordering.Tuple2(Ordering.Long.reverse, utf8Order).on(e => (e._2, e._1))
+  private val burstOrder: Ordering[Burst] =
+    Ordering.Tuple3(Ordering.Double.TotalOrdering.reverse, Ordering.Long.reverse, utf8Order)
+      .on(b => (b.ratio, b.recent, b.token))
+
+  /** The reference's single pass (SURVEY §1) over the scored stream in
+    * arrival order. Every message, excluded ones included, feeds the
+    * detector state: the token counts (the CMS, exact here) and the ring
+    * of the last 2·RecentK messages' tokens (the DGIM window). Kept
+    * messages alone feed the counters, the snapshot cadence and the
+    * tracked set (`recent_tokens`, which the reference fills after its
+    * exclusion check, run_detectors.py:174-176). State is vocabulary-sized
+    * plus the ring; only the output grows with the stream.
+    *
+    * Top-k is incremental: counts only grow and the tracked set only grows,
+    * so a token outside the previous top-k whose count did not change
+    * since is still beaten by all of it. Each top-k therefore ranks only
+    * the previous one plus the tokens touched since, by `(cnt desc,
+    * token)`. The final top-k is the same read at the end of the stream. */
+  private[graft] def fold(stream: Iterator[Scored], c: Config, probes: Seq[String]): Detected = {
+    val counts = mutable.HashMap.empty[String, Long]
+    val tracked = mutable.HashSet.empty[String]
+    val touched = mutable.HashSet.empty[String]
+    val ring = mutable.Queue.empty[(Long, Array[String])]
+    val snapshots = Vector.newBuilder[Snapshot]
+    val shown = Vector.newBuilder[Shown]
+    var top = Vector.empty[(String, Long)]
+    var streamed, processed, dupTotal = 0L
+    var dupScoreSum = 0.0
+    var last = -1L
+
+    def topK(): Vector[(String, Long)] = {
+      val cand = top.iterator.map(_._1) ++ touched.iterator.filter(tracked)
+      top = cand.distinct.map(t => (t, counts(t))).toVector.sorted(topOrder)
+        .take(c.topFrequency)
+      touched.clear()
+      top
+    }
+    // the window ending at msg_idx e: the RecentK most recent messages
+    // against the RecentK before them (burst_detector.py:43-77). e is the
+    // newest msg_idx and msg_idx has no gaps, so the ring is that window.
+    def burst(e: Long): Vector[Burst] = {
+      val recent = mutable.HashMap.empty[String, Long]
+      val prev = mutable.HashMap.empty[String, Long]
+      ring.foreach { case (j, toks) =>
+        val m = if (j > e - RecentK) recent else prev
+        toks.foreach(t => m(t) = m.getOrElse(t, 0L) + 1)
+      }
+      recent.iterator.map { case (t, r) =>
+        val p = prev.getOrElse(t, 0L)
+        Burst(t, r, p, (r + BurstEps) / (p + BurstEps))
+      }.filter(_.ratio >= BurstThreshold).toVector.sorted(burstOrder)
+    }
+
+    stream.foreach { m =>
+      val toks = if (m.body == null) Array.empty[String] else m.body.split(" ").filter(_.nonEmpty)
+      streamed += 1
+      last = m.msg_idx
+      toks.foreach { t => counts(t) = counts.getOrElse(t, 0L) + 1; touched += t }
+      ring.enqueue((m.msg_idx, toks))
+      if (ring.size > 2 * RecentK) ring.dequeue()
+      // exclusion happens AFTER the detectors saw the message (trap #2)
+      if (!(c.excludeDuplicates && m.is_duplicate)) {
+        processed += 1
+        if (m.is_duplicate) dupTotal += 1
+        // summed in arrival order, as the reference does: in another
+        // order the last digits of the reported average change
+        dupScoreSum += m.dup_score
+        tracked ++= toks
+        if (c.showText) shown += Shown(m.body, m.dup_score, m.is_duplicate, burst(m.msg_idx))
+        // a snapshot only where `processed % update_interval == 0` fires
+        // (run_detectors.py:193)
+        if (processed % c.updateInterval == 0)
+          snapshots += Snapshot(topK(), burst(m.msg_idx), dupTotal)
+      }
+    }
+    Detected(streamed, processed, dupTotal, dupScoreSum,
+      probes.map(counts.getOrElse(_, 0L)), snapshots.result(),
+      topK(), burst(last), shown.result())
+  }
+
   /** The periodic_snapshots payload of [[run]] as a driver-checkable FRAME
     * (r9 verdict stretch #9): one row per (snapshot, rank ≤ topFrequency)
     * carrying the snapshot's cumulative top-token counts plus its
     * message_count, trailing-window burst count, and cumulative duplicate
-    * total — the same quantities run() renders into JSON, over an
-    * arbitrary (msg_idx, body) message stream. Exclusion is off (the
-    * default CLI path), so kept ≡ streamed and every statistic is over
-    * the full stream. Scale shape: the only corpus-scale exchanges key on
-    * (snap, token) or (w_end, token) after a broadcast of the
-    * ≤n/interval-row boundary table; the burst counts are [[burstFrame]]'s
-    * shared range join (the one [[run]] reads), so each message joins
-    * at most the 2·RecentK boundaries whose window holds it. */
+    * total — the same [[fold]] run() reads, over an arbitrary (msg_idx,
+    * body) message stream numbered from 0. Exclusion is off (the default
+    * CLI path), so kept ≡ streamed. */
   private[graft] def snapshotSummary(msgs: DataFrame,
       updateInterval: Int, topFrequency: Int): DataFrame = {
-    val scored = dupScored(msgs)
-    val tokens = msgs
-      .select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
-      .filter(col("token") =!= "")
-    val bounds = msgs
-      .filter((col("msg_idx") + 1) % updateInterval === 0)
-      .select(((col("msg_idx") + 1) / updateInterval).cast("long").minus(1).as("snap"),
-        col("msg_idx").cast("long").as("msg_bound"))
-    val cum = tokens.join(broadcast(bounds), col("msg_idx") <= col("msg_bound"))
-      .groupBy(col("snap"), col("token")).agg(count(lit(1)).as("cnt"))
-    val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
-    val top = cum.withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= topFrequency)
-    val burst = burstFrame(tokens, bounds.select(col("msg_bound").as("w_end")))
-      .groupBy(((col("w_end") + 1) / updateInterval - 1).cast("long").as("bsnap"))
-      .agg(count(lit(1)).as("n_burst"))
-    val dups = scored.filter(col("is_duplicate"))
-      .join(broadcast(bounds), col("msg_idx") <= col("msg_bound"))
-      .groupBy(col("snap").as("dsnap")).agg(count(lit(1)).as("dups_so_far"))
-    top
-      .join(burst, col("snap") === col("bsnap"), "left")
-      .join(dups, col("snap") === col("dsnap"), "left")
-      .select(col("snap").as("snapshot"),
-        ((col("snap") + 1) * updateInterval).as("message_count"),
-        col("rank"), col("token"), col("cnt"),
-        coalesce(col("n_burst"), lit(0L)).as("n_burst"),
-        coalesce(col("dups_so_far"), lit(0L)).as("dups_so_far"))
-      .orderBy(col("snapshot"), col("rank"))
-  }
-
-  /** Token-level burst twin of detect_spikes (burst_detector.py:43-77)
-    * for many windows in one pass. The window ending at msg_idx = w_end
-    * holds the last 2·RecentK messages: the RecentK most recent and the
-    * RecentK before them. So each token event at msg_idx j is "recent"
-    * for window ends in [j, j+RecentK) and "previous" for
-    * [j+RecentK, j+2·RecentK): one range join against the broadcast
-    * `ends` (a `w_end` column) fans every event out to at most 2·RecentK
-    * rows, then one shuffle on (w_end, token). Returns (w_end, token,
-    * recent_cnt, prev_cnt, ratio) for the bursting tokens only. */
-  private[graft] def burstFrame(tokens: DataFrame, ends: DataFrame): DataFrame = {
-    val j = col("msg_idx").cast("long")
-    tokens
-      .join(broadcast(ends), col("w_end").between(j, j + (2L * RecentK - 1L)))
-      .withColumn("recent", col("w_end") < j + RecentK)
-      .groupBy(col("w_end"), col("token"))
-      .agg(sum(when(col("recent"), 1L).otherwise(0L)).as("recent_cnt"),
-        sum(when(!col("recent"), 1L).otherwise(0L)).as("prev_cnt"))
-      .withColumn("ratio",
-        (col("recent_cnt") + lit(BurstEps)) / (col("prev_cnt") + lit(BurstEps)))
-      .filter(col("recent_cnt") >= 1 && col("ratio") >= BurstThreshold)
+    val c = Config(updateInterval = updateInterval, topFrequency = topFrequency)
+    scoredStream(msgs).mapPartitions { it =>
+      fold(it, c, Nil).snapshots.iterator.zipWithIndex.flatMap { case (s, i) =>
+        s.top.iterator.zipWithIndex.map { case ((t, n), r) =>
+          SummaryRow(i, (i + 1L) * updateInterval, r + 1, t, n, s.burst.size, s.dupsSoFar)
+        }
+      }
+    }(Encoders.product[SummaryRow]).toDF()
   }
 
   /** Registered form over the driver tables: documents in doc_id order are
@@ -358,11 +334,8 @@ object RunDetectors {
     * not a single-task window), raw whitespace tokens, interval 25 /
     * top-5 so sf0.001 already yields two snapshots. The stream is capped
     * at [[SnapMaxMsgs]] — the CLI's own `--max-messages` bound (the
-    * reference defaults to 200) — which is also what keeps this query
-    * corpus-size-INVARIANT: [[snapshotSummary]] joins every token to
-    * every later snapshot boundary, O(stream × snapshots), so the bound,
-    * not the corpus, sets the work. (Cumulative counts are prefix sums,
-    * so a linear form exists: ROADMAP direction 3.) The cap is applied
+    * reference defaults to 200), which also fixes the oracle's output
+    * whatever the corpus size. The cap is applied
     * BEFORE the ranking — a global orderBy+limit plans as
     * TakeOrderedAndProject (per-partition top-N, driver merge of
     * ≤SnapMaxMsgs rows per partition, no corpus exchange) — so the rank

@@ -228,7 +228,7 @@ object ScaleGate {
                 df.withColumn(k, (col(k) + lit(i * 1000)).cast("int")))
             }.reduce(_ unionAll _)
               .write.mode("overwrite").parquet(out.getPath)
-            println(f"[scale] staged $mult× $name in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+            println(f"[scale] staged ${mult}x $name in ${(System.nanoTime() - t0) / 1e9}%.1f s")
           }
       }
       println(s"[scale] universe [${names.mkString(", ")}] at $dir")
@@ -274,7 +274,7 @@ object ScaleGate {
             (0 until mult).map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * maxId)))
               .reduce(_ unionAll _)
               .write.mode("overwrite").parquet(bigTable.getPath)
-            println(f"[scale] staged $mult× documents at $dir in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+            println(f"[scale] staged ${mult}x documents at $dir in ${(System.nanoTime() - t0) / 1e9}%.1f s")
           } else println(s"[scale] reusing staged $dir")
           dir
         } else {
@@ -378,16 +378,16 @@ object ScaleGate {
       // corpse, burning the remaining mult× budget on misleading cascade
       // failures. Abort the sweep with the artifact preserved instead.
       if (spark.sparkContext.isStopped) {
-        println("[scale] ABORT: SparkContext stopped by a fatal per-query error — " +
+        println("[scale] ABORT: SparkContext stopped by a fatal per-query error - " +
           s"remaining queries skipped; artifact preserved at $outPath")
         sys.exit(1)
       }
     }
 
-    println(s"| query | 1× warm (s) | ${mult}× warm (s) | ratio | bound | state rows 1×→${mult}× | verdict |")
+    println(s"| query | 1x warm (s) | ${mult}x warm (s) | ratio | bound | state rows 1x->${mult}x | verdict |")
     println("|---|---|---|---|---|---|---|")
     results.foreach { r =>
-      val st = if (r.stateful) s"${r.state1}→${r.stateN}" else "—"
+      val st = if (r.stateful) s"${r.state1}->${r.stateN}" else "-"
       println(f"| ${r.name} | ${r.warm1}%.2f | ${r.warmN}%.2f | ${r.ratio}%.2f | ${r.bound}%.0f | $st | ${if (r.ok) "OK" else "FAIL"} |")
     }
     println(s"[scale] artifact written to $outPath")

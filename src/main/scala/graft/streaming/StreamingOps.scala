@@ -517,8 +517,11 @@ object StreamingOps {
         writeBatchIdempotent(batch, batchId, outDir))
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
+    // every batch file under the sink root: a `batch=*` glob makes Spark
+    // probe for a `_spark_metadata` log under the pattern itself and log
+    // its FileNotFoundException as a warning on every call
     s.read.schema("purchase_id BIGINT, view_id BIGINT, user_id BIGINT")
-      .parquet(s"$outDir/batch=*")
+      .option("recursiveFileLookup", "true").parquet(outDir)
       .orderBy(col("purchase_id"), col("view_id"))
   }
 

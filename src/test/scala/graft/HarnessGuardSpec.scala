@@ -47,6 +47,13 @@ class HarnessGuardSpec extends SparkSpec {
     assert(parse(Some("-3")) == ((90, Seq("-3"))))
   }
 
+  test("AbRunner's median is the mean of the middle walls at an even count") {
+    assert(AbRunner.median(Seq(10.846, 0.764)) == (10.846 + 0.764) / 2)
+    assert(AbRunner.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
+    assert(AbRunner.median(Seq(5.0, 1.0, 3.0)) == 3.0)
+    assert(AbRunner.median(Seq(7.0)) == 7.0)
+  }
+
   test("a wedged Spark job is cancelled at the budget; session survives") {
     import spark.implicits._
     // the sleep must sit in a FILTER (a count() over a projected udf gets

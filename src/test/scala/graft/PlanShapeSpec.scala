@@ -362,11 +362,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
   }
 
-  test("scc_run_summary: boundary joins broadcast the tiny bounds table") {
+  test("scc_run_summary: dup scoring shuffles, then one fold task") {
+    // the shingle first-seen state is corpus-sized and stays in a shuffle;
+    // every snapshot read is the one fold above it, never a join of
+    // tokens to snapshot boundaries (O(tokens × snapshots))
     val p = plan("scc_run_summary")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      s"the ≤n/interval-row bounds table must broadcast into the range joins:\n$p")
-    assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
+    assert(p.contains("Exchange hashpartitioning"), s"dup scoring must stay distributed:\n$p")
+    assert(p.contains("Coalesce 1") && p.contains("MapPartitions"),
+      s"the detector reads must be one fold in one task:\n$p")
+    Seq("BroadcastNestedLoopJoin", "CartesianProduct", "Window").foreach { op =>
+      assert(!p.contains(op), s"no $op:\n$p")
+    }
   }
 
   test("text_probe_freq: counts aggregate before the tiny probe join (no stream shuffle)") {

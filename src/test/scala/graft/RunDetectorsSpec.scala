@@ -5,8 +5,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{GlobalLimitExec, QueryExecution, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods._
+import graft.RunDetectors.{Burst, Config, Detected, Shown, Snapshot}
 import graft.sources.SccJsonSource
 
 /** End-to-end CLI twin on the FIXTURES.md fixture: summary numbers computed
@@ -128,8 +132,8 @@ class RunDetectorsSpec extends SparkSpec {
   }
 
   test("Spark actions do not grow with the snapshot count") {
-    // every snapshot boundary is one more row of the same burst and
-    // top-token passes, never one more Spark action
+    // every snapshot is one more read inside the same fold, never one more
+    // Spark action: a run is one collect
     def actions(interval: Int): (Int, Int) = {
       val n = new java.util.concurrent.atomic.AtomicInteger
       val listener = new QueryExecutionListener {
@@ -149,8 +153,7 @@ class RunDetectorsSpec extends SparkSpec {
     val (snaps0, actions0) = actions(100)
     val (snaps3, actions3) = actions(1)
     assert(snaps0 == 0 && snaps3 == 3)
-    assert(actions0 > 0)
-    assert(actions3 == actions0, s"$actions0 actions at 0 snapshots, $actions3 at 3")
+    assert(actions0 == 1 && actions3 == 1, s"$actions0 actions at 0 snapshots, $actions3 at 3")
   }
 
   test("Spark jobs per run stay within one job across identical runs") {
@@ -193,6 +196,48 @@ class RunDetectorsSpec extends SparkSpec {
     assert(topN.forall(_ <= 1000), s"top-N limits ${topN.mkString(", ")}")
   }
 
+  test("property: the fold equals the declarative twin on random streams") {
+    // small vocabularies force count ties; "Ａ" (U+FF21) sorts above the
+    // surrogate pair "𝐀" (U+1D400) in UTF-16 but below it in Spark's
+    // UTF-8 order; repeated bodies are exact duplicates; bodies carry
+    // double, leading and trailing spaces
+    import spark.implicits._
+    val vocab = Array("a", "b", "ab", "z", "Ａ", "𝐀", "𝐀b", "é", "zz")
+    val rnd = new scala.util.Random(8)
+    def body(prev: Seq[String]): String =
+      if (prev.nonEmpty && rnd.nextInt(5) == 0) prev(rnd.nextInt(prev.size))
+      else Seq.fill(rnd.nextInt(7))(vocab(rnd.nextInt(vocab.length)))
+        .mkString(if (rnd.nextBoolean()) " " else "  ") + (if (rnd.nextInt(6) == 0) " " else "")
+    var bursts = 0
+    (1 to 10).foreach { round =>
+      val n = if (round == 1) 0 else rnd.nextInt(120)
+      val bodies = (0 until n).foldLeft(Vector.empty[String])((acc, _) => acc :+ body(acc))
+      val msgs = bodies.zipWithIndex.map { case (b, i) => (i, b) }.toDF("msg_idx", "body")
+      val interval = round match {
+        case 2 => 1
+        case 3 => n + 5 // longer than the stream
+        case _ => 1 + rnd.nextInt(12)
+      }
+      val c = Config(updateInterval = interval, topFrequency = 1 + rnd.nextInt(4),
+        excludeDuplicates = round % 2 == 0, showText = round % 3 != 1,
+        freqQueries = Seq("A", "ab", "Ａ", "missing"))
+      val scored = RunDetectors.dupScored(msgs).persist()
+      try {
+        val fold = RunDetectors.detect(msgs, c)
+        assert(fold == RunDetectorsTwin.detected(scored, c), s"round $round: $c")
+        bursts += fold.snapshots.map(_.burst.size).sum + fold.shown.map(_.burst.size).sum
+        // the registered projection, at an Int and at a Long msg_idx
+        val twinRows = RunDetectorsTwin.snapshotSummary(msgs, interval, c.topFrequency)
+          .collect().toSeq
+        Seq(msgs, msgs.withColumn("msg_idx", col("msg_idx").cast("long"))).foreach { m =>
+          assert(RunDetectors.snapshotSummary(m, interval, c.topFrequency).collect().toSeq ==
+            twinRows, s"round $round summary")
+        }
+      } finally scored.unpersist()
+    }
+    assert(bursts > 0)
+  }
+
   test("unknown argument fails fast; flags parse like the reference CLI") {
     intercept[IllegalArgumentException](RunDetectors.parseArgs(Array("--bogus")))
     val c = RunDetectors.parseArgs(Array(
@@ -200,5 +245,158 @@ class RunDetectorsSpec extends SparkSpec {
       "--freq-query", "a", "--freq-query", "b", "--exclude-duplicates"))
     assert(c.dataDir == "/x" && c.split == "train" && c.maxMessages == 7)
     assert(c.freqQueries == Seq("a", "b") && c.excludeDuplicates)
+  }
+}
+
+/** The detector reads of [[RunDetectors.run]] as declarative joins: the
+  * reference twin the fold is checked against. Each snapshot joins every
+  * token at or before its boundary, so the cost is O(tokens × snapshots);
+  * fine at spec size. */
+object RunDetectorsTwin {
+  private val RecentK = 25
+  private val BurstThreshold = 2.0
+  private val BurstEps = 1e-6
+  // key of the end-of-stream row in the top-token bounds
+  private val FinalSnap = -1L
+
+  /** Token-level burst twin of detect_spikes (burst_detector.py:43-77)
+    * for many windows in one pass. The window ending at msg_idx = w_end
+    * holds the last 2·RecentK messages: the RecentK most recent and the
+    * RecentK before them. So each token event at msg_idx j is "recent"
+    * for window ends in [j, j+RecentK) and "previous" for
+    * [j+RecentK, j+2·RecentK): one range join against the broadcast
+    * `ends` (a `w_end` column), then one shuffle on (w_end, token).
+    * Returns (w_end, token, recent_cnt, prev_cnt, ratio) for the bursting
+    * tokens only. */
+  def burstFrame(tokens: DataFrame, ends: DataFrame): DataFrame = {
+    val j = col("msg_idx").cast("long")
+    tokens
+      .join(broadcast(ends), col("w_end").between(j, j + (2L * RecentK - 1L)))
+      .withColumn("recent", col("w_end") < j + RecentK)
+      .groupBy(col("w_end"), col("token"))
+      .agg(sum(when(col("recent"), 1L).otherwise(0L)).as("recent_cnt"),
+        sum(when(!col("recent"), 1L).otherwise(0L)).as("prev_cnt"))
+      .withColumn("ratio",
+        (col("recent_cnt") + lit(BurstEps)) / (col("prev_cnt") + lit(BurstEps)))
+      .filter(col("recent_cnt") >= 1 && col("ratio") >= BurstThreshold)
+  }
+
+  private def tokensOf(df: DataFrame): DataFrame =
+    df.select(col("msg_idx"), explode(split(col("body"), " ")).as("token"))
+      .filter(col("token") =!= "")
+
+  /** [[RunDetectors.detect]]'s result over `scored` (a dupScored frame). */
+  def detected(scored: DataFrame, c: Config): Detected = {
+    // the kept rank leaves `kept` in one partition in arrival order, the
+    // order the reference sums `avg_score` in; cached, or the optimizer
+    // prunes the rank from the plans that do not read it
+    val kept = (if (c.excludeDuplicates) scored.filter(!col("is_duplicate")) else scored)
+      .withColumn("kept_idx", row_number().over(Window.orderBy(col("msg_idx"))) - 1)
+      .persist()
+    try detectedKept(scored, kept, c) finally kept.unpersist()
+  }
+
+  private def detectedKept(scored: DataFrame, kept: DataFrame, c: Config): Detected = {
+    val spark: SparkSession = scored.sparkSession
+    import spark.implicits._
+    val tokensAll = tokensOf(scored)
+    val tokensKept = tokensOf(kept)
+    val streamed = scored.count()
+    val dupRow = kept.agg(count(lit(1)), sum(when(col("is_duplicate"), 1L).otherwise(0L)),
+      sum(col("dup_score"))).collect()(0)
+    val processed = dupRow.getLong(0)
+
+    // snapshot boundaries: the msg_idx at which each completed interval's
+    // last kept message arrived
+    val boundaries = kept
+      .filter((col("kept_idx") + 1) % c.updateInterval === 0)
+      .select(((col("kept_idx") + 1) / c.updateInterval - 1).cast("long").as("snap"),
+        col("msg_idx").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+
+    // top tokens at every boundary: tracked = kept tokens so far, counts =
+    // every token so far; FinalSnap is the end of the stream
+    val bdf = (boundaries.toSeq :+ ((FinalSnap, streamed - 1))).toDF("snap", "msg_bound")
+    val tracked = tokensKept.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
+      .select(col("snap"), col("token")).distinct()
+    val cum = tokensAll.join(broadcast(bdf), col("msg_idx") <= col("msg_bound"))
+      .groupBy(col("snap").as("csnap"), col("token").as("ctoken"))
+      .agg(count(lit(1)).as("cnt"))
+    val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
+    val snapTop: Map[Long, Seq[(String, Long)]] = tracked
+      .join(cum, tracked("snap") === cum("csnap") && tracked("token") === cum("ctoken"))
+      .select(col("snap"), col("token"), col("cnt"))
+      .withColumn("rank", row_number().over(wTop))
+      .filter(col("rank") <= c.topFrequency)
+      .orderBy(col("snap"), col("rank")).collect()
+      .groupBy(_.getLong(0)).map { case (s, rows) =>
+        s -> rows.toSeq.map(r => (r.getString(1), r.getLong(2))) }
+
+    val dupsSoFar = kept
+      .withColumn("snapshot", expr(s"kept_idx div ${c.updateInterval}"))
+      .groupBy(col("snapshot"))
+      .agg(sum(when(col("is_duplicate"), 1L).otherwise(0L)).as("d"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+
+    val counts = tokensAll.groupBy(col("token")).agg(count(lit(1)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    val rows =
+      if (c.showText) kept.orderBy(col("kept_idx"))
+        .select(col("body"), col("dup_score"), col("is_duplicate"), col("msg_idx").cast("long"))
+        .collect().toSeq
+      else Nil
+
+    val ends = (boundaries.map(_._2).toSeq ++ Seq(streamed - 1) ++ rows.map(_.getLong(3))).distinct
+    val bursts: Map[Long, Seq[Burst]] =
+      burstFrame(tokensAll, ends.toDF("w_end"))
+        .orderBy(col("w_end"), col("ratio").desc, col("recent_cnt").desc, col("token"))
+        .collect()
+        .groupBy(_.getAs[Long]("w_end"))
+        .map { case (e, rs) => e -> rs.toSeq.map(r => Burst(r.getAs[String]("token"),
+          r.getAs[Long]("recent_cnt"), r.getAs[Long]("prev_cnt"), r.getAs[Double]("ratio"))) }
+
+    // the sums read null on an empty stream; getAs unboxes null to 0
+    Detected(streamed, processed, dupRow.getAs[Long](1), dupRow.getAs[Double](2),
+      c.freqQueries.map(q => counts.getOrElse(q.toLowerCase, 0L)),
+      boundaries.toSeq.map { case (snap, bound) =>
+        Snapshot(snapTop.getOrElse(snap, Nil), bursts.getOrElse(bound, Nil),
+          dupsSoFar.filter(_._1 <= snap).map(_._2).sum)
+      },
+      snapTop.getOrElse(FinalSnap, Nil), bursts.getOrElse(streamed - 1, Nil),
+      rows.map(r => Shown(r.getString(0), r.getDouble(1), r.getBoolean(2),
+        bursts.getOrElse(r.getLong(3), Nil))))
+  }
+
+  /** [[RunDetectors.snapshotSummary]] as joins: a broadcast boundary table
+    * joined to every earlier token, the shared burst range join, and the
+    * cumulative duplicate count. */
+  def snapshotSummary(msgs: DataFrame, updateInterval: Int, topFrequency: Int): DataFrame = {
+    val scored = RunDetectors.dupScored(msgs)
+    val tokens = tokensOf(msgs)
+    val bounds = msgs
+      .filter((col("msg_idx") + 1) % updateInterval === 0)
+      .select(((col("msg_idx") + 1) / updateInterval).cast("long").minus(1).as("snap"),
+        col("msg_idx").cast("long").as("msg_bound"))
+    val cum = tokens.join(broadcast(bounds), col("msg_idx") <= col("msg_bound"))
+      .groupBy(col("snap"), col("token")).agg(count(lit(1)).as("cnt"))
+    val wTop = Window.partitionBy(col("snap")).orderBy(col("cnt").desc, col("token"))
+    val top = cum.withColumn("rank", row_number().over(wTop))
+      .filter(col("rank") <= topFrequency)
+    val burst = burstFrame(tokens, bounds.select(col("msg_bound").as("w_end")))
+      .groupBy(((col("w_end") + 1) / updateInterval - 1).cast("long").as("bsnap"))
+      .agg(count(lit(1)).as("n_burst"))
+    val dups = scored.filter(col("is_duplicate"))
+      .join(broadcast(bounds), col("msg_idx") <= col("msg_bound"))
+      .groupBy(col("snap").as("dsnap")).agg(count(lit(1)).as("dups_so_far"))
+    top
+      .join(burst, col("snap") === col("bsnap"), "left")
+      .join(dups, col("snap") === col("dsnap"), "left")
+      .select(col("snap").as("snapshot"),
+        ((col("snap") + 1) * updateInterval).as("message_count"),
+        col("rank"), col("token"), col("cnt"),
+        coalesce(col("n_burst"), lit(0L)).as("n_burst"),
+        coalesce(col("dups_so_far"), lit(0L)).as("dups_so_far"))
+      .orderBy(col("snapshot"), col("rank"))
   }
 }
