@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.streaming.StreamingOps.{SeenFlag, ShinglePair}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import graft.streaming.StreamingOps.{ShinglePair, checkThenInsert}
 
 /** Checkpoint recovery: stateful dedup state must survive a full query
   * STOP + RESTART (new query object, same checkpoint), with only newly
@@ -18,16 +18,7 @@ class StreamRestartSpec extends SparkSpec {
       .parquet(srcDir)
       .as[ShinglePair]
     val flags = src.groupByKey(_.sh)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (_: String, it: Iterator[ShinglePair], state: GroupState[Long]) => {
-          val arrived = it.toSeq.sortBy(_.doc_id)
-          val priorMin = state.getOption.getOrElse(Long.MaxValue)
-          val batchMin = arrived.head.doc_id
-          val out = arrived.map(e =>
-            SeenFlag(e.doc_id, if (math.min(priorMin, batchMin) < e.doc_id) 1.0 else 0.0))
-          state.update(math.min(priorMin, batchMin))
-          out.iterator
-        })
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(checkThenInsert)
     // memory sink cannot recover from a checkpoint; foreachBatch can, and
     // accepts update-mode stateful output
     val q = flags.toDF().writeStream

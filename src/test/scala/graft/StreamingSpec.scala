@@ -2,31 +2,21 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Cross-batch streaming-state semantics (SURVEY.md ST5): the single-batch
   * AvailableNow run in Verify can't show state carrying across triggers, so
   * drive a MemoryStream two batches apart and assert check-then-insert
   * behavior — first sight never flags, later sights do (fidelity trap #1). */
 class StreamingSpec extends SparkSpec {
-  import graft.streaming.StreamingOps.{SeenFlag, ShinglePair}
+  import graft.streaming.StreamingOps.{ShinglePair, checkThenInsert}
 
   test("stateful dedup: state persists across triggers (check-then-insert)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ShinglePair]
     val flags = input.toDS().groupByKey(_.sh)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (_: String, it: Iterator[ShinglePair], state: GroupState[Long]) => {
-          val arrived = it.toSeq.sortBy(_.doc_id)
-          val priorMin = state.getOption.getOrElse(Long.MaxValue)
-          val batchMin = arrived.head.doc_id
-          val out = arrived.map { e =>
-            SeenFlag(e.doc_id, if (math.min(priorMin, batchMin) < e.doc_id) 1.0 else 0.0)
-          }
-          state.update(math.min(priorMin, batchMin))
-          out.iterator
-        })
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(checkThenInsert)
     val q = flags.toDF().writeStream.format("memory").queryName("test_dedup_sink")
       .outputMode("update").start()
     try {
@@ -99,7 +89,7 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.StreamingOps.writeBatchIdempotent(batch, 0L, out)
     graft.streaming.StreamingOps.writeBatchIdempotent(batch, 0L, out)
     graft.streaming.StreamingOps.writeBatchIdempotent(batch.limit(50), 1L, out)
-    val readBack = spark.read.parquet(s"$out/batch=*")
+    val readBack = graft.streaming.StreamingOps.readSink(spark, out, "event_id BIGINT")
     assert(readBack.count() == 150,
       s"replayed batch 0 must not duplicate: ${readBack.count()}")
   }
