@@ -1,7 +1,7 @@
 package graft
 
 /** Same-session interleaved A/B runner and steady-state profiler (guide
-  * §1): times registered queries under N sys-prop configurations in ONE
+  * §1): times registered queries under N session-conf arms in ONE
   * JVM, alternating configs each rep so box drift hits all arms equally —
   * the only comparison discipline that survived r20's bursty-I/O box.
   * Each rep runs the listed queries in the given order under each arm
@@ -16,8 +16,10 @@ package graft
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.AbRunner <q1>[,<q2>...] <reps> [<label>[:k=v[;k=v...]] ...]"
   *
-  * e.g. runMain graft.AbRunner dedup_ngram_jaccard 5 \
-  *        direct:graft.dict.minfactor=1e9 dict:graft.dict.minfactor=1
+  * An arm's `k=v` pairs are Spark confs of the running session, set
+  * through [[Sessions.withConf]] for that arm's runs only, e.g.
+  *   runMain graft.AbRunner dedup_ngram_jaccard 5 \
+  *     base p4:spark.sql.shuffle.partitions=4
   *
   * SPARK_GRAFT_WARMUP=1 runs the shared untimed [[Warmup]] first.
   * Optional artifact: SPARK_GRAFT_AB_OUT=<path.json>.
@@ -42,8 +44,8 @@ object AbRunner {
     val arms: Seq[(String, Map[String, String])] = args.drop(2).toSeq.map { spec =>
       spec.split(":", 2) match {
         case Array(label) => (label, Map.empty[String, String])
-        case Array(label, props) =>
-          (label, props.split(";").filter(_.nonEmpty).map { kv =>
+        case Array(label, confs) =>
+          (label, confs.split(";").filter(_.nonEmpty).map { kv =>
             val Array(k, v) = kv.split("=", 2): @unchecked
             k -> v
           }.toMap)
@@ -65,9 +67,8 @@ object AbRunner {
       .withDefaultValue(Nil)
     val rows = scala.collection.mutable.Map.empty[(String, String), Long]
     (1 to reps).foreach { i =>
-      configs.foreach { case (label, props) =>
-        props.foreach { case (k, v) => sys.props(k) = v }
-        try names.zip(fns).foreach { case (name, fn) =>
+      configs.foreach { case (label, confs) =>
+        Sessions.withConf(spark, confs.toSeq: _*) { names.zip(fns).foreach { case (name, fn) =>
           val (dt, r) = HarnessGuard.timed(spark, name, TimeoutSec) { fn(spark, sfDir).count() }
           val n = r.fold(err => sys.error(s"$name $label rep $i failed: $err"), identity)
           println(f"[ab] $name $label rep $i: $dt%.3f s ($n rows)")
@@ -80,7 +81,7 @@ object AbRunner {
               if (perArm.values.toSet.size > 1)
                 sys.error(s"ROW MISMATCH across configs for $name: $perArm")
           }
-        } finally props.keys.foreach(sys.props.remove(_))
+        } }
       }
     }
     val summary = for (name <- names; (label, _) <- configs) yield {

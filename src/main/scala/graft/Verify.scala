@@ -27,7 +27,10 @@ object Verify {
     // used to be written last, so one hung query + a driver kill voided
     // every already-dumped result — the DuckDB compare had no SQL to run.
     // Now a killed run still yields a parseable partial correctness round.
-    val json = SparkEntry.oracleSql
+    // Only the selected queries' oracles: a SPARK_GRAFT_ONLY run is gated
+    // on what it dumps, and a selected query that fails to dump still FAILs.
+    val selected = HarnessGuard.selectedQueries
+    val json = SparkEntry.oracleSql.filter(kv => selected.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Per-query wall-clock bound (default 120 s — the slowest sf0.01 query
@@ -35,7 +38,7 @@ object Verify {
     // instead of wedging the dump loop until the driver's kill.
     val timeoutSec = HarnessGuard.timeoutSec(sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT"), 120, v =>
       System.err.println(s"[verify] bad SPARK_GRAFT_QUERY_TIMEOUT '$v', using 120"))
-    HarnessGuard.selectedQueries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       HarnessGuard.timed(spark, name, timeoutSec) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -110,10 +110,6 @@ object Lemmatizer {
     "ourselves" -> "ourselves", "yourselves" -> "yourselves",
     "themselves" -> "themselves", "jenkins" -> "jenkins")
 
-  /** SQL VALUES literal of the dictionary, for oracle strings. */
-  val dictSqlValues: String =
-    DICT.map { case (w, l) => s"('$w', '$l')" }.mkString(", ")
-
   // -------------------------------------------------------- suffix rules
   //
   // Fallback for words the dictionary misses: a deterministic

@@ -59,19 +59,14 @@ object GraftTokenizer {
     Text.STOPWORDS.foreach(s.add)
     s
   }
-  private val lemmaDict: java.util.HashMap[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    Lemmatizer.DICT.foreach { case (k, v) => m.put(k, v) }
-    m
-  }
 
-  // UTF8String-keyed twins of the three lookup tables (r16, r15 verdict
+  // UTF8String-keyed lookup tables (r16, r15 verdict
   // #4): the allocation profile of the bench loop showed the native
   // tokenizer still paying one String decode + one UTF8String re-encode
   // per token per row — pure-ASCII-letter tokens (the overwhelming
   // majority) now probe and emit zero-copy byte VIEWS into the lowercased
   // row buffer, the same reference-emitting convention Spark's own array
-  // HOFs use. The String-keyed tables stay for the slow path.
+  // HOFs use. The slow path keeps the String-keyed `stops` and `wordSplits`.
   private val stopsU: java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String]()
     Text.STOPWORDS.foreach(w => s.add(UTF8String.fromString(w)))

@@ -509,6 +509,35 @@ object Multimodal {
       .select(col("doc_id"),
         graft.functions.VectorExprs.graft_avg_hash64(col("text")).as("phash"))
 
+  /** Edge cap for [[phash64Cluster]]'s driver union-find tier — the
+    * mm_dedup_cluster 2¹⁶ bound, here on MEASURED candidate edges (two
+    * longs each, ≤ ~1 MB collected); specs pass `edgeCap = 0` to run the
+    * distributed fixpoint tier on a small fixture. */
+  private[graft] val DriverEdgeCap = 1L << 16
+
+  /** Min-root union-find over an edge list: returns node → component
+    * label where the label is the component's smallest member (merging
+    * always parents the larger root under the smaller, so every root is
+    * its component's min — the same label [[graft.ops.Dedup.components]]
+    * converges to). Iterative find + path compression: no stack risk at
+    * the 2¹⁶-edge cap. */
+  private[graft] def unionFindLabels(edges: Array[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.getOrElse(x, x) != x) x = parent(x)
+      var y = x0 // compress the walked path onto the root
+      while (parent.getOrElse(y, y) != y) { val n = parent(y); parent(y) = x; y = n }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet[Long]
+      .iterator.map(x => x -> find(x)).toMap
+  }
+
   /** Perceptual near-dup clusters over the 64-BIT pHash — the
     * [[dedupCluster]] semantics on a hash space that is NOT enumerable
     * (r16 verdict #2: the general path the 16-bit query's driver
@@ -534,40 +563,8 @@ object Multimodal {
     * Docs sharing a hash are distance-0 neighbors, so hash-level closure
     * equals doc-level closure; singleton docs (cluster_size 1) drop out,
     * matching [[dedupCluster]]'s contract. */
-  /** Edge cap for [[phash64Cluster]]'s driver union-find tier — the
-    * mm_dedup_cluster 2¹⁶ bound, here on MEASURED candidate edges (two
-    * longs each, ≤ ~1 MB collected). Overridable via the
-    * `graft.phash64.uf.cap` system property so specs can force the
-    * distributed fixpoint tier on small fixtures; a malformed value falls
-    * back to the default. */
-  private def driverEdgeCap: Long =
-    sys.props.get("graft.phash64.uf.cap")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(1L << 16)
-
-  /** Min-root union-find over an edge list: returns node → component
-    * label where the label is the component's smallest member (merging
-    * always parents the larger root under the smaller, so every root is
-    * its component's min — the same label [[graft.ops.Dedup.components]]
-    * converges to). Iterative find + path compression: no stack risk at
-    * the 2¹⁶-edge cap. */
-  private[graft] def unionFindLabels(edges: Array[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x0: Long): Long = {
-      var x = x0
-      while (parent.getOrElse(x, x) != x) x = parent(x)
-      var y = x0 // compress the walked path onto the root
-      while (parent.getOrElse(y, y) != y) { val n = parent(y); parent(y) = x; y = n }
-      x
-    }
-    edges.foreach { case (a, b) =>
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet[Long]
-      .iterator.map(x => x -> find(x)).toMap
-  }
-
-  private def phash64Cluster(s: SparkSession, d: String): DataFrame = {
+  private[graft] def phash64Cluster(s: SparkSession, d: String,
+      edgeCap: Long = DriverEdgeCap): DataFrame = {
     // NO persist on the hashed frame: graft_avg_hash64 makes it a cheap
     // map-only native scan, and its two consumers (the per-hash agg and
     // the final doc join) each pay a rescan instead of a corpus-sized
@@ -618,7 +615,7 @@ object Multimodal {
             col("cnt").as("cluster_size"))
       else {
         val labeled =
-          if (nPairs <= driverEdgeCap) {
+          if (nPairs <= edgeCap) {
             import s.implicits._
             val lm = unionFindLabels(
               pairs.collect().map(r => (r.getLong(0), r.getLong(1))))
@@ -737,5 +734,5 @@ object Multimodal {
     QuerySpec("mm_decode_integrity", decodeIntegrity, Some(decodeIntegritySql)),
     QuerySpec("mm_hash_hamming", hashHamming, Some(hashHammingSql)),
     QuerySpec("mm_dedup_cluster", dedupCluster, Some(dedupClusterSql)),
-    QuerySpec("mm_phash64_cluster", phash64Cluster, Some(phash64ClusterSql)))
+    QuerySpec("mm_phash64_cluster", phash64Cluster(_, _), Some(phash64ClusterSql)))
 }

@@ -169,13 +169,12 @@ object Dedup {
     * text and per-doc rows come back through an id-only member join.
     * Docs whose rep has no shingles get no row, exactly like the direct
     * path (same text ⇒ same shingles). Below the gate the plan IS plain
-    * [[sigWithArray]], byte-identical. `gateFrame` lets callers measure
-    * duplication on an already-memoized frame (the whole corpus) instead
+    * [[sigWithArray]], byte-identical. Callers pass `dict` as
+    * [[dictTier]] of an already-memoized frame (the whole corpus) instead
     * of paying a count job on a filtered half / micro-batch — the gate
     * is a perf decision, correct in both positions. */
-  private[graft] def sigWithArrayDict(docs: DataFrame,
-      gateFrame: DataFrame = null): DataFrame = {
-    if (!dictTier(if (gateFrame == null) docs else gateFrame)) sigWithArray(docs)
+  private[graft] def sigWithArrayDict(docs: DataFrame, dict: Boolean): DataFrame = {
+    if (!dict) sigWithArray(docs)
     else {
       // DISK_ONLY: full texts at up-to-half-corpus scale (r18 ADVICE rule)
       val groups = FrameCache.cached(docs.groupBy(col("text"))
@@ -296,7 +295,7 @@ object Dedup {
     * join on (band, key) → signature-agreement estimate ≥ 0.5. The band
     * join is the scale path: candidate generation is linear in bucket
     * sizes. */
-  private def minhashPairsDirect(docs: DataFrame): DataFrame = {
+  private[graft] def minhashPairsDirect(docs: DataFrame): DataFrame = {
     // three consumers (band explosion + both signature-fetch join sides):
     // persist or the 16-md5-per-shingle signature pass runs three times
     // (memoized — see FrameCache)
@@ -457,16 +456,17 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
 
+  /** Docs per distinct text at which the dictionary tiers start. */
+  private[graft] val DictMinFactor = 2.0
+
   /** The one duplication gate every distinct-text dictionary tier shares:
-    * true when `frame` holds at least `graft.dict.minfactor` (default 2.0)
-    * docs per distinct text. The property exists so specs can force either
-    * tier on small fixtures; a malformed value falls back to 2.0 instead
-    * of throwing during query construction. */
+    * true when `frame` holds at least [[DictMinFactor]] docs per distinct
+    * text. The inline-gated cores take `dict: Option[Boolean] = None`:
+    * None measures here, Some forces a tier (specs run both tiers on one
+    * fixture that way; no shipped caller forces one). */
   private[graft] def dictTier(frame: DataFrame): Boolean = {
-    val minFactor = sys.props.get("graft.dict.minfactor")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(2.0)
     val (nDocs, nDistinct) = duplicationOf(frame)
-    nDistinct > 0 && nDocs >= minFactor * nDistinct
+    nDistinct > 0 && nDocs >= DictMinFactor * nDistinct
   }
 
   /** Core of [[ngramJaccard]] over any (doc_id, text) frame — separate so
@@ -489,8 +489,9 @@ object Dedup {
     * pool) and spilled 41 GiB at 1000× in r17's watch — the
     * distinct-text tier keeps shingle volume at 1× regardless of the
     * duplication factor. */
-  private[graft] def ngramJaccardCore(docs: DataFrame): DataFrame = {
-    if (!dictTier(docs)) {
+  private[graft] def ngramJaccardCore(docs: DataFrame,
+      dict: Option[Boolean] = None): DataFrame = {
+    if (!dict.getOrElse(dictTier(docs))) {
       // direct tier: the pre-dictionary plan byte-identical — no weight
       // column in the distinct/cache/df-agg (threading a constant m
       // through them measured +0.35 s on the 1× receipt)
@@ -1005,14 +1006,6 @@ object Dedup {
         next.unpersist()
         cp
       } else next
-      if (sys.env.contains("GRAFT_CC_DEBUG")) {
-        println(s"[components] round $rounds: $changed labels changed")
-        // round-2 plan = the steady frontier shape; lets the cache-reuse
-        // claims (no per-round Exchange/Sort on the edge side) be checked
-        // from the outside: GRAFT_CC_DEBUG=1 and read the dump
-        if (rounds == 2)
-          println(s"[components] round-2 physical plan:\n${next.queryExecution.executedPlan}")
-      }
     }
     if (changed > 0)
       // Diagnose instead of surfacing as a bare oracle hash mismatch: the
@@ -1031,7 +1024,7 @@ object Dedup {
     * = every doc appearing in a pair. ONE definition of the label
     * derivation, fed either by the uncached pair builder (spec path) or
     * the fit-once pair table (registered path). */
-  private def labelsFromPairs(pairs: DataFrame): DataFrame = {
+  private[graft] def labelsFromPairs(pairs: DataFrame): DataFrame = {
     val nodes = pairs.select(col("id_a").as("id"))
       .union(pairs.select(col("id_b").as("id")))
     components(pairs, nodes)
@@ -1148,7 +1141,7 @@ object Dedup {
   private[graft] def levenshteinCore(docs: DataFrame): DataFrame =
     levenshteinVerify(minhashPairs(docs).select(col("id_a"), col("id_b")), docs)
 
-  private def levenshteinVerify(cand: DataFrame, docs: DataFrame): DataFrame =
+  private[graft] def levenshteinVerify(cand: DataFrame, docs: DataFrame): DataFrame =
     levenshteinStats(cand, docs).orderBy(col("id_a"), col("id_b"))
 
   /** The unsorted verify core: per candidate pair, edit distance over the
@@ -1278,11 +1271,8 @@ object Dedup {
     // carries nothing over. Disable auto-broadcast while warming so the
     // slice compiles (and JITs) the same shuffle-side generated code the
     // timed run executes; restored after.
-    val static = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val adaptive = s.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", static)
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    graft.Sessions.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       // 2048 docs, fixpoint warmed twice: big enough — and repeated
       // enough — that the md5/min-agg/join hot loops cross the JIT's
       // compiled-tier threshold during the warm pass (a 128-doc slice
@@ -1308,9 +1298,6 @@ object Dedup {
       levenshteinCore(docs).count()
       // sign-LSH band join + exact-cosine verify over an embeddings slice
       embedPairs(s, T.embeddings(s, d).limit(512)).count()
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", static)
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", adaptive)
     }
     // Full-scale fit-once ARTIFACTS, built untimed under normal config —
     // the same treatment warmIndex gives the ANN model fits: a deployment
@@ -1383,13 +1370,8 @@ object Dedup {
     * below this many DISTINCT index signatures the single-phase exact
     * verify is strictly cheaper (the prefilter pays one extra join + the
     * sigh compute), above it the compact-hash phase keeps the md5-string
-    * arrays out of the candidate-scale shuffle. Overridable via the
-    * `graft.lsh.prefilter.minreps` system property (specs pin both plans
-    * output-identical on small fixtures); a malformed value falls back
-    * to the default. */
-  private def prefilterMinReps: Long =
-    sys.props.get("graft.lsh.prefilter.minreps")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(1L << 16)
+    * arrays out of the candidate-scale shuffle. */
+  private[graft] val PrefilterMinReps = 1L << 16
 
   /** Distinct-signature count of a persisted index — a parquet
     * metadata-only count, memoized per index tree (the probe runs once
@@ -1437,7 +1419,7 @@ object Dedup {
     // r21: batch signatures at distinct-text scale past the duplication
     // gate (measured on the memoized whole-corpus counts — no extra job)
     val batchSig = FrameCache.cached(
-      sigWithArrayDict(docs.filter(col("doc_id") >= half), docs))
+      sigWithArrayDict(docs.filter(col("doc_id") >= half), dictTier(docs)))
     val idx = corpusLshIndex(d, sigWithArray(docs.filter(col("doc_id") < half)))
     probeLshIndex(s, batchSig, idx)
       .orderBy(col("batch_id"), col("corpus_id"))
@@ -1496,15 +1478,19 @@ object Dedup {
     * probe. Unsorted; callers order or aggregate. Explicit read schemas:
     * an empty corpus writes no parquet part files (only _SUCCESS), and a
     * schema-less read of that dir cannot infer one. */
-  private[graft] def probeLshIndex(s: SparkSession, batchSig: DataFrame, idx: String): DataFrame =
-    probeLshFrames(s, batchSig, idx)("out")
+  private[graft] def probeLshIndex(s: SparkSession, batchSig: DataFrame, idx: String,
+      minReps: Long = PrefilterMinReps): DataFrame =
+    probeLshFrames(s, batchSig, idx, minReps)("out")
 
   /** The probe's named stage frames — "rep_links" (verified rep-level
     * links), "out" (member-expanded output) and the expansion inputs. The
     * incremental probe consumes only "out"; the duplication-gated
     * contamination report reads the rep-level frames. One builder for
-    * both so the two can never drift apart. */
-  private[graft] def probeLshFrames(s: SparkSession, batchSig: DataFrame, idx: String): Map[String, DataFrame] = {
+    * both so the two can never drift apart. The verify runs two-phase
+    * past `minReps` index reps ([[PrefilterMinReps]]; specs pass 0 or
+    * Long.MaxValue to run either phase plan on one index). */
+  private[graft] def probeLshFrames(s: SparkSession, batchSig: DataFrame, idx: String,
+      minReps: Long = PrefilterMinReps): Map[String, DataFrame] = {
     val idxBands = s.read
       .schema("doc_id BIGINT, bkey STRING, band INT")
       .parquet(s"$idx/bands")
@@ -1544,7 +1530,7 @@ object Dedup {
     // Measured: 100× intake spill 25 GiB -> 8.8 GiB / wall 60.8 -> 39.3 s
     // with the prefilter; 1× receipts unchanged with the gate.
     val verified =
-      if (idxRepCount(s, idx) > prefilterMinReps) {
+      if (idxRepCount(s, idx) > minReps) {
         val candH = cand
           .join(bReps.select(col("doc_id").as("brep"), sighOf(col("sig")).as("sigh_q")), "brep")
           .join(idxSigs.select(col("doc_id").as("crep"), col("sigh").as("sigh_x")), "crep")
@@ -1710,8 +1696,8 @@ object Dedup {
     * set), and the duplicated-span set itself only needs per-span TOTAL
     * counts — which distinct texts provide exactly as Σ (per-text count
     * × text multiplicity). So when the corpus is measurably duplicated
-    * (docs ≥ 2 × distinct texts — ONE cheap agg over xxhash64(text),
-    * gate overridable for specs), the per-CHARACTER anchor explode, the
+    * (docs ≥ 2 × distinct texts — ONE cheap agg over xxhash64(text);
+    * `dict` forces a tier for specs), the per-CHARACTER anchor explode, the
     * dup-count shuffle, the semi-join and the island windows all run
     * over DISTINCT texts only, and per-doc rows come back through an
     * id-only member join. At 300× the direct path absorbed 35.1 GiB of
@@ -1728,9 +1714,10 @@ object Dedup {
     .select(col("doc_id"), col("text"),
       length(col("text")).cast("long").as("doc_len"))
 
-  private[graft] def substringCoverage(docs: DataFrame): DataFrame = {
+  private[graft] def substringCoverage(docs: DataFrame,
+      dict: Option[Boolean] = None): DataFrame = {
     val base = substringBase(docs)
-    if (!dictTier(base))
+    if (!dict.getOrElse(dictTier(base)))
       coverageStats(base.withColumn("m", lit(1L))).orderBy(col("doc_id"))
     else {
       // dictionary tier: exact identity grouping on the text itself
@@ -1905,7 +1892,7 @@ object Dedup {
     // r21: test-half signatures at distinct-text scale past the
     // duplication gate (whole-corpus memoized counts — no extra job)
     val testSig = FrameCache.cached(
-      sigWithArrayDict(docs.filter(col("doc_id") >= half), docs))
+      sigWithArrayDict(docs.filter(col("doc_id") >= half), dictTier(docs)))
     val idx = corpusLshIndex(d, sigWithArray(docs.filter(col("doc_id") < half)))
     // Duplication-gated rep-level aggregation (r20, verdict #3 family):
     // the probe's member-expanded link list is quadratic under corpus

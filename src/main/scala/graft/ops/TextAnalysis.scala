@@ -422,8 +422,10 @@ object TextAnalysis {
   /** Bigram collocation mining: top pairs by pointwise mutual information
     * (log p(xy) − log p(x) − log p(y)), min support 10 — the classic
     * phrase-detection pass of a corpus pipeline. Counts are exact; PMI is
-    * a deterministic function of exact integers, so it oracles bit-for-bit. */
-  private def bigramPmi(s: SparkSession, d: String): DataFrame = {
+    * a deterministic function of exact integers, so it oracles bit-for-bit.
+    * `dict` forces a tier (None measures [[Dedup.dictTier]]). */
+  private[graft] def bigramPmi(s: SparkSession, d: String,
+      dict: Option[Boolean] = None): DataFrame = {
     val toks = T.documents(s, d)
       .select(col("doc_id"), graft.functions.Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -446,7 +448,7 @@ object TextAnalysis {
     // at 1.20 s steady-min vs 0.84 s direct at sf0.1 — the extra
     // aggregate + cache is pure overhead when nothing collapses (the
     // dedup_contamination r20 lesson, applied before shipping this time).
-    if (!Dedup.dictTier(T.documents(s, d))) {
+    if (!dict.getOrElse(Dedup.dictTier(T.documents(s, d)))) {
       // direct tier: the pre-r20 plan, byte-identical
       val big = bigrams.persist()
       val n = big.count().toDouble
@@ -971,10 +973,11 @@ object TextAnalysis {
     * registry's largest remaining super-linear working set (57.7 s,
     * 53.9 GiB spill absorbed). Below the gate the direct plan is
     * byte-identical to r19 (no weight/group column anywhere). */
-  private[graft] def contaminationCore(docs: DataFrame): DataFrame = {
+  private[graft] def contaminationCore(docs: DataFrame,
+      dict: Option[Boolean] = None): DataFrame = {
     val half = Dedup.duplicationOf(docs)._1 / 2
     val report =
-      if (!Dedup.dictTier(docs)) {
+      if (!dict.getOrElse(Dedup.dictTier(docs))) {
         // direct tier. DISK_ONLY (r19, caught by the first 1000× watch
         // sweep): one row per distinct (doc, 5-gram) is a CORPUS-scale
         // frame, and a default MEMORY_AND_DISK persist holds the storage
@@ -1952,7 +1955,7 @@ object TextAnalysis {
     QuerySpec("ta_token_pagerank", tokenPagerank, Some(tokenPagerankSql)),
     QuerySpec("ta_zipf_slope", zipfSlope, Some(zipfSlopeSql)),
     QuerySpec("ta_tfidf", tfidf, Some(tfidfSql)),
-    QuerySpec("ta_bigram_pmi", bigramPmi, Some(bigramPmiSql)),
+    QuerySpec("ta_bigram_pmi", bigramPmi(_, _), Some(bigramPmiSql)),
     QuerySpec("ta_lang_id", langId, Some(langIdSql)),
     QuerySpec("ta_quality", quality, Some(qualitySql)),
     QuerySpec("ta_filter_cascade", filterCascade, Some(filterCascadeSql)),

@@ -122,13 +122,14 @@ object StreamingOps {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
 
-  /** The state-store confs plus the scale-adaptive state partition count
-    * (`graft.replay.partitions` pins it: deployment sizing — results are
-    * partition-independent, StreamingSpec pins it), scoped to `body`. */
-  private def withReplayTuning[T](s: SparkSession, d: String)(body: => T): T =
-    Sessions.withConf(s, StateStoreConfs :+ ("spark.sql.shuffle.partitions" ->
-      sys.props.getOrElse("graft.replay.partitions",
-        replayPartitions(d, s.sparkContext.defaultParallelism).toString)): _*)(body)
+  /** The state-store confs plus the state partition count, scoped to
+    * `body`. `partitions` defaults to the scale-adaptive
+    * [[replayPartitions]]; results are partition-independent
+    * (StreamingSpec runs stream_stream_join at a forced count). */
+  private def withReplayTuning[T](s: SparkSession, d: String,
+      partitions: Option[Int] = None)(body: => T): T =
+    Sessions.withConf(s, StateStoreConfs :+ ("spark.sql.shuffle.partitions" -> partitions
+      .getOrElse(replayPartitions(d, s.sparkContext.defaultParallelism)).toString): _*)(body)
 
   /** Untimed bench warmup: throwaway stateful streaming queries over the
     * 5-row region table to absorb one-time streaming infrastructure costs
@@ -505,7 +506,8 @@ object StreamingOps {
     * buffer keyed state bounded by the watermark; AvailableNow over a
     * bounded input makes the result equal the batch range join — which is
     * exactly what the oracle checks. */
-  private def streamStreamJoin(s: SparkSession, d: String): DataFrame = withReplayTuning(s, d) {
+  private[graft] def streamStreamJoin(s: SparkSession, d: String,
+      partitions: Option[Int] = None): DataFrame = withReplayTuning(s, d, partitions) {
     def src = eventsStream(s, d)
     val views = src.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
@@ -851,7 +853,7 @@ object StreamingOps {
       // gate; the gate reads the memoized whole-TABLE counts (the
       // batch is a filtered slice of it) — no per-batch count job
       val batchSig = graft.ops.Dedup.sigWithArrayDict(batch,
-        graft.Tables.documents(batch.sparkSession, d)).persist()
+        graft.ops.Dedup.dictTier(graft.Tables.documents(batch.sparkSession, d))).persist()
       writeBatchIdempotent(
         graft.ops.Dedup.probeLshIndex(batch.sparkSession, batchSig, idx),
         batchId, dir)
@@ -899,7 +901,7 @@ object StreamingOps {
     QuerySpec("stream_static_enrich", staticEnrich, Some(staticEnrichSql)),
     QuerySpec("stream_windowed_counts", windowedCounts, Some(windowedCountsSql)),
     QuerySpec("stream_stateful_dedup", statefulDedup, Some(statefulDedupSql)),
-    QuerySpec("stream_stream_join", streamStreamJoin, Some(streamStreamJoinSql)),
+    QuerySpec("stream_stream_join", streamStreamJoin(_, _), Some(streamStreamJoinSql)),
     QuerySpec("stream_drop_duplicates", dropDupStream, Some(dropDupStreamSql)),
     QuerySpec("stream_dedup_watermark", dedupWithinWatermark, Some(dedupWithinWatermarkSql)),
     QuerySpec("stream_foreach_batch", foreachBatchSink, Some(foreachBatchSinkSql)),

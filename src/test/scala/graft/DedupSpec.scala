@@ -316,16 +316,17 @@ class DedupSpec extends SparkSpec {
     // emit ordered lists pinned by the DuckDB oracle, where a duplicate
     // row from the expansion would be a correctness break a set compare
     // masks — sequence equality pins multiplicity too.
-    def pairSet() = ops.Dedup.minhashPairs(dup).collect()
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
-    def labelSet() = ops.Dedup.labelsOf(dup).collect()
+    def labels(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val (directPairs, directLabels) =
-      withProps("graft.dict.minfactor" -> Long.MaxValue.toString)((pairSet(), labelSet()))
+    val direct = ops.Dedup.minhashPairsDirect(dup)
+    val directPairs = pairs(direct)
+    val directLabels = labels(ops.Dedup.labelsFromPairs(direct.select(col("id_a"), col("id_b"))))
     // 3x duplication passes the default 2.0 gate: dictionary tier active
     assert(ops.Dedup.minhashDict(dup).isDefined,
       "3x-duplicated corpus must trip the default gate")
-    val (dictPairs, dictLabels) = (pairSet(), labelSet())
+    val (dictPairs, dictLabels) = (pairs(ops.Dedup.minhashPairs(dup)), labels(ops.Dedup.labelsOf(dup)))
     assert(dictPairs == directPairs,
       s"pair divergence: only-dict=${dictPairs.diff(directPairs)}, missed=${directPairs.diff(dictPairs)}")
     assert(dictPairs.nonEmpty && dictLabels == directLabels)
@@ -335,8 +336,7 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
         r.getInt(4), r.getDouble(5))).toSeq.sorted
     val dictLev = levSet(ops.Dedup.expandLevenshtein(rp, m, dup))
-    val directLev = withProps("graft.dict.minfactor" -> Long.MaxValue.toString)(
-      levSet(ops.Dedup.levenshteinCore(dup)))
+    val directLev = levSet(ops.Dedup.levenshteinVerify(direct.select(col("id_a"), col("id_b")), dup))
     assert(dictLev == directLev,
       s"lev divergence: only-dict=${dictLev.diff(directLev).take(3)}, missed=${directLev.diff(dictLev).take(3)}")
   }
@@ -448,29 +448,25 @@ class DedupSpec extends SparkSpec {
     // the md5-string arrays only for survivors. Hash agreement is a
     // superset of string agreement (equal strings => equal hashes
     // position-for-position), so the two plans must emit IDENTICAL links.
-    // Force each plan via the gate's system property on the same index.
+    // Force each plan through the probe's rep-count gate on the same index.
     import org.apache.spark.sql.functions.col
     val docs = graft.Tables.documents(spark, sf001)
     val half = docs.count() / 2
     val idx = TmpDirs.create("graft_idx_prefilter").toString
     ops.Dedup.buildLshIndex(
       ops.Dedup.sigWithArray(docs.filter(col("doc_id") < half)), idx)
-    def probe(): Set[(Long, Long, Double)] =
+    def probe(minReps: Long): Set[(Long, Long, Double)] =
       ops.Dedup.probeLshIndex(spark,
-          ops.Dedup.sigWithArray(docs.filter(col("doc_id") >= half)), idx)
+          ops.Dedup.sigWithArray(docs.filter(col("doc_id") >= half)), idx, minReps)
         .collect()
         .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
           r.getAs[Double]("est_jaccard"))).toSet
-    val singlePhase =
-      withProps("graft.lsh.prefilter.minreps" -> Long.MaxValue.toString)(probe())
-    val twoPhase = withProps("graft.lsh.prefilter.minreps" -> "0")(probe())
+    val singlePhase = probe(Long.MaxValue)
+    val twoPhase = probe(0L)
     assert(twoPhase == singlePhase,
       s"prefilter diverged: only-two-phase=${twoPhase -- singlePhase}, " +
         s"missed=${singlePhase -- twoPhase}")
     assert(singlePhase.nonEmpty, "fixture must produce at least one link")
-    // a malformed value falls back to the default gate instead of
-    // throwing during query construction; the links are unchanged
-    assert(withProps("graft.lsh.prefilter.minreps" -> "lots")(probe()) == singlePhase)
   }
 
   test("ngram jaccard: duplication-gated dictionary tier ≡ direct path") {
@@ -485,11 +481,10 @@ class DedupSpec extends SparkSpec {
     val t3 = "one two three four five six"
     val docs = Seq((1L, t1), (2L, t2), (3L, t3), (4L, t1), (5L, t3), (6L, t3))
       .toDF("doc_id", "text")
-    def run(factor: String) = withProps("graft.dict.minfactor" -> factor)(
-      ops.Dedup.ngramJaccardCore(docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet)
-    val direct = run("1e18")
-    val dict = run("1.0")
+    def run(dict: Boolean) = ops.Dedup.ngramJaccardCore(docs, Some(dict)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val direct = run(false)
+    val dict = run(true)
     assert(dict == direct, s"dict=$dict direct=$direct")
     assert(direct == Set(
       (1L, 2L, 3L, 0.6), (2L, 4L, 3L, 0.6), // cross-group: 3 of 5 shingles
@@ -502,7 +497,7 @@ class DedupSpec extends SparkSpec {
     // r18: on a measurably duplicated corpus the anchor pipeline runs at
     // distinct-text scale with multiplicity weights and expands per-doc
     // rows through an id-only member join. Output must be IDENTICAL to
-    // the direct path — force each via the gate's system property.
+    // the direct path — force each through the tier argument.
     import spark.implicits._
     val block = "x" * 60
     val t1 = "a" * 50 + block + "b" * 50
@@ -510,12 +505,11 @@ class DedupSpec extends SparkSpec {
     val t3 = "e" * 160
     val docs = Seq((1L, t1), (2L, t2), (3L, t3), (4L, t1), (5L, t3), (6L, t3))
       .toDF("doc_id", "text")
-    def run(factor: String) = withProps("graft.dict.minfactor" -> factor)(
-      ops.Dedup.substringCoverage(docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getDouble(5))).toSeq)
-    val direct = run("1e18")
-    val dict = run("1.0")
+    def run(dict: Boolean) = ops.Dedup.substringCoverage(docs, Some(dict)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5))).toSeq
+    val direct = run(false)
+    val dict = run(true)
     assert(dict == direct, s"dict=$dict direct=$direct")
     // full-copy docs must be fully covered, and copies carry their
     // rep's stats exactly
@@ -733,17 +727,16 @@ class DedupSpec extends SparkSpec {
     val t2 = "one two three four five six seven"
     val docs = Seq((1L, t1), (2L, t2), (3L, t1), (4L, t1), (5L, t2),
       (6L, ""), (7L, "xy")).toDF("doc_id", "text")
-    def run(factor: String) = withProps("graft.dict.minfactor" -> factor) {
-      try graft.ops.Dedup.sigWithArrayDict(docs).collect()
+    def run(dict: Boolean) =
+      try graft.ops.Dedup.sigWithArrayDict(docs, dict).collect()
         .map(r => (r.getLong(0), r.toSeq.drop(1).toList)).sortBy(_._1).toSeq
       finally spark.catalog.clearCache()
-    }
-    val direct = run("1e18")
-    val dict = run("1.0")
+    val direct = run(false)
+    val dict = run(true)
     assert(dict == direct, s"dict=$dict direct=$direct")
     assert(direct.map(_._1) == Seq(1L, 2L, 3L, 4L, 5L),
       s"shingle-less docs must drop: ${direct.map(_._1)}")
-    assert(graft.ops.Dedup.sigWithArrayDict(docs).columns.toSeq ==
+    assert(graft.ops.Dedup.sigWithArrayDict(docs, dict = true).columns.toSeq ==
       graft.ops.Dedup.sigWithArray(docs).columns.toSeq)
   }
 
@@ -767,13 +760,12 @@ class DedupSpec extends SparkSpec {
         (2001L, "apple mango cherry durian"))).toDF("doc_id", "text")
     val docs = graft.Tables.documents(spark, sf001)
       .select(col("doc_id"), col("text")).union(synth)
-    def run(factor: String) = withProps("graft.dict.minfactor" -> factor) {
-      try graft.ops.Dedup.ngramJaccardCore(docs).collect()
+    def run(dict: Boolean) =
+      try graft.ops.Dedup.ngramJaccardCore(docs, Some(dict)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
       finally spark.catalog.clearCache()
-    }
-    val direct = run("1e18")
-    val dict = run("1.0")
+    val direct = run(false)
+    val dict = run(true)
     assert(dict == direct, s"dict=$dict direct=$direct")
     val hotPairs = direct.filter { case (a, _, _, _) => a >= 1000L && a < 1150L }
     assert(hotPairs == (0 until 75).map(k => (1000L + 2 * k, 1001L + 2 * k, 1L, 1.0)),

@@ -378,7 +378,7 @@ class MultimodalSpec extends SparkSpec {
     //    must still cluster via cnt >= 2;
     //  - near-hash corpus (one char nudged: Hamming(hash) == 1): one
     //    edge -> driver union-find tier by default, and the forced
-    //    fixpoint tier (cap 0 via system property) must agree exactly.
+    //    fixpoint tier (edge cap 0) must agree exactly.
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val base = ("a" * 32) + ("b" * 32)        // 64 chars: bit i = char i > mean
@@ -397,7 +397,8 @@ class MultimodalSpec extends SparkSpec {
     assert(java.lang.Long.bitCount(hashOf(base) ^ hashOf(near)) == 1,
       "fixture must place the near pair at Hamming distance 1")
     assert(java.lang.Long.bitCount(hashOf(base) ^ hashOf(far)) > 3)
-    def run(dir: String) = SparkEntry.queries("mm_phash64_cluster")(spark, dir)
+    import graft.multimodal.Multimodal.{DriverEdgeCap, phash64Cluster}
+    def run(dir: String, edgeCap: Long = DriverEdgeCap) = phash64Cluster(spark, dir, edgeCap)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("cluster_size"), r.getAs[Boolean]("is_survivor"))).toSet
     val expect = Set((1L, 1L, 2L, true), (2L, 1L, 2L, false))
@@ -408,11 +409,7 @@ class MultimodalSpec extends SparkSpec {
     val fixDir = stage("fix", Seq((1L, base), (2L, near), (9L, far)))
     assert(run(fixDir) == expect, "driver union-find tier")
     // tier 3 — same corpus, cap forced to 0: distributed fixpoint
-    withProps("graft.phash64.uf.cap" -> "0")(
-      assert(run(fixDir) == expect, "distributed fixpoint tier"))
-    // a malformed cap falls back to the default instead of throwing
-    withProps("graft.phash64.uf.cap" -> "1e3")(
-      assert(run(fixDir) == expect, "malformed cap"))
+    assert(run(fixDir, edgeCap = 0L) == expect, "distributed fixpoint tier")
   }
 
   test("unionFindLabels: min-root labels across chained merges") {

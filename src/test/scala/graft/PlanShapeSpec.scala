@@ -186,12 +186,11 @@ class PlanShapeSpec extends SparkSpec {
     // r20: past the duplication gate, n/uni/bi derive from the
     // vocab²-bounded directed-count aggregate instead of a corpus-scale
     // raw-bigram persist; all inputs are exact integers, so the PMI
-    // doubles are bit-identical. Force the gate BOTH ways (the dict-tier
-    // convention: minfactor 0 = always dict, huge = never).
-    def rows(factor: String) = withProps("graft.dict.minfactor" -> factor)(
-      SparkEntry.queries("ta_bigram_pmi")(spark, sf001).collect().map(_.toSeq).toSeq)
-    val direct = rows("1e18")
-    val dict = rows("0")
+    // doubles are bit-identical. Force the tier BOTH ways.
+    def rows(dict: Boolean) = graft.ops.TextAnalysis.bigramPmi(spark, sf001, Some(dict))
+      .collect().map(_.toSeq).toSeq
+    val direct = rows(false)
+    val dict = rows(true)
     assert(dict == direct,
       s"ta_bigram_pmi dict tier diverged (${dict.length} vs ${direct.length} rows)")
   }

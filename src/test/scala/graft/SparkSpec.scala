@@ -23,11 +23,4 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf001 = "/root/testdata/sf0.001"
-
-  /** Runs `body` with the given system properties set, removing them
-    * afterwards (the `graft.*` knobs are JVM-global). */
-  def withProps[T](kv: (String, String)*)(body: => T): T = {
-    kv.foreach { case (k, v) => sys.props(k) = v }
-    try body finally kv.foreach { case (k, _) => sys.props.remove(k) }
-  }
 }

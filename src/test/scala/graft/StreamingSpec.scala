@@ -95,13 +95,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream_stream_join: the state partition count doesn't change results (r20)") {
-    // graft.replay.partitions is deployment sizing of the state operators'
-    // shuffle width, so the joined output must be row-identical under any
-    // count.
-    def rows() = SparkEntry.queries("stream_stream_join")(spark, sf001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val default = rows()
-    val forced = withProps("graft.replay.partitions" -> "7")(rows())
+    // the state partition count is sizing of the state operators' shuffle
+    // width, so the joined output must be row-identical under any count.
+    def rows(partitions: Option[Int]) =
+      graft.streaming.StreamingOps.streamStreamJoin(spark, sf001, partitions).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val default = rows(None)
+    val forced = rows(Some(7))
     assert(default.nonEmpty && default == forced,
       s"partition sizing changed the join output: ${default.size} vs ${forced.size}")
   }

@@ -616,15 +616,15 @@ class TextSpec extends SparkSpec {
       .head.getLong(0) + 1L
     val dup = (0 until 3).map(i =>
       base.withColumn("doc_id", col("doc_id") + lit(i * maxId))).reduce(_ unionAll _)
-    def rows() = graft.ops.TextAnalysis.contaminationCore(dup).collect()
+    def rows(dict: Option[Boolean]) = graft.ops.TextAnalysis.contaminationCore(dup, dict).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_shingles"),
         r.getAs[Long]("n_in_train"), r.getAs[Double]("overlap"),
         r.getAs[Boolean]("contaminated"))).toSeq.sorted
-    val direct = withProps("graft.dict.minfactor" -> Long.MaxValue.toString)(rows())
+    val direct = rows(Some(false))
     // 3× duplication trips the default 2.0 gate: dictionary tier active
     val (n, nd) = graft.ops.Dedup.duplicationOf(dup)
     assert(n >= 2L * nd, "fixture must trip the default duplication gate")
-    val dict = rows()
+    val dict = rows(None)
     assert(dict == direct,
       s"report divergence: only-dict=${dict.diff(direct).take(3)}, " +
         s"missed=${direct.diff(dict).take(3)}")
